@@ -43,11 +43,6 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Register every fixture table as a temp view so `spark.sql` queries can
-    * use the same names the DuckDB oracle sees. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-
   /** Materialize an expensive multi-consumer frame exactly once, cutting
     * the plan so downstream consumers reuse the computed blocks instead of
     * replicating the subtree (q90's tf frame feeds three consumers; the

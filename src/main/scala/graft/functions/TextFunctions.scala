@@ -249,16 +249,6 @@ object TextFunctions {
     }
   }
 
-  /** Hamming distance between two simhash values (bits 0..29). */
-  def hamming30(a: Column, b: Column): Column =
-    aggregate(
-      sequence(lit(0), lit(29)),
-      lit(0L),
-      (acc, j) =>
-        acc + when(
-          floor(a / pow(lit(2.0), j)).cast("long") % lit(2L) =!=
-            floor(b / pow(lit(2.0), j)).cast("long") % lit(2L), lit(1L)).otherwise(lit(0L)))
-
   // ---- language ID (n-gram/stopword heuristic) -------------------------
 
   /** Marker stopwords per language; prediction = argmax of marker counts

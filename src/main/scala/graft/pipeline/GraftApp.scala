@@ -1,15 +1,34 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.operators.{DedupOps, ExportOps, LshOps, MaintenanceOps, PqOps, SamplingOps, SetJoinOps, SketchOps, SrpOps}
+import graft.streaming.StreamingOps
+import org.apache.spark.sql.{Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import scala.concurrent.duration.{Duration, DurationLong}
 
-/** CLI entry point — the engine's `app.py` (`/root/reference/app.py:31-46`).
+/** CLI entry point — the engine's `app.py` (the reference's `app.py:31-46`).
   *
+  * {{{
+  * GraftApp <env> <table|t1,t2|all> [--strict] [--<mode> [the mode's flags]]
+  * }}}
+  *
+  * An invocation runs ONE [[GraftApp.Command]]. With no mode flag it is the
+  * reference's catalog copy:
   * {{{
   * GraftApp <env> <table|t1,t2|all> [--tables-list-path P] [--source fmt:loc]
   *          [--sink fmt:loc] [--state P] [--mode append|overwrite]
-  *          [--parallelism N] [--table-timeout-sec N]
+  *          [--parallelism N] [--table-timeout-sec N] [--strict]
   * }}}
+  * Every other command is named by its mode flag (`--stream`,
+  * `--compact-ledger`, `--pq-search`, …). Two mode flags refuse, naming
+  * both; a flag the chosen command does not read refuses, naming the
+  * command and the flags it does read. The positionals and `--strict` are
+  * accepted by every command; `--strict` makes the copy exit non-zero when
+  * any table failed — every other command already fails by throwing.
+  * Every check that needs neither Spark nor the filesystem runs in
+  * [[GraftApp.parseArgs]], so a misused cron line refuses before a session
+  * is built.
   *
   * Contract parity with the reference CLI:
   *  - positional `env` + comma-separated table arg or `all`
@@ -32,77 +51,68 @@ import scala.concurrent.duration.{Duration, DurationLong}
   */
 object GraftApp {
 
-  final case class Args(
-      env: String,
-      tableArg: String,
-      tablesListPath: String = "tables_list",
-      sourceOverride: Option[String] = None,
-      sinkOverride: Option[String] = None,
-      statePath: Option[String] = None,
-      mode: SaveMode = SaveMode.Append,
-      parallelism: Int = 4,
-      tableTimeout: Duration = Duration.Inf,
-      strict: Boolean = false,
-      stream: Boolean = false,
-      ledgerDir: Option[String] = None,
-      checkpointDir: Option[String] = None,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      dedup: String = "exact",
-      vecCol: String = "embedding",
-      minCos: Double = 0.9,
-      k: Int = 8,
-      compactLedger: Boolean = false,
-      foldEpochs: Boolean = false,
-      exportShards: Boolean = false,
-      verifyExport: Boolean = false,
-      exportDir: Option[String] = None,
-      contentCols: Seq[String] = Seq("text"),
-      nShards: Int = 16,
-      seed: Long = 7L,
-      scrubSpans: Boolean = false,
-      spanTokens: Int = 8,
-      minDocs: Int = 2,
-      epochShuffle: Option[Long] = None,
-      deleteIds: Option[Seq[Long]] = None,
-      auditDir: Option[String] = None,
-      corpusDir: Option[String] = None,
-      zorderCols: Option[Seq[String]] = None,
-      zBits: Int = 16,
-      zFiles: Int = 64,
-      outDir: Option[String] = None,
-      exactNeardup: Boolean = false,
-      tau: Double = 0.8,
-      heavyHitters: Option[String] = None,
-      capacity: Int = 4096,
-      tokenize: Boolean = false,
-      pqEncode: Boolean = false,
-      pqM: Int = 4,
-      pqK: Int = 256,
-      pqIters: Int = 2,
-      pqCoarseK: Int = 256,
-      pqAppend: Boolean = false,
-      pqEpoch: Option[String] = None,
-      pqSearch: Boolean = false,
-      pqStore: Option[String] = None,
-      nprobe: Int = 1,
-      pqResidual: Boolean = false,
-      pqBalancedPerm: Boolean = false,
-      rerank: Int = 0,
-      rerankCorpus: Option[String] = None,
-      refineM: Int = 0,
-      refineK: Int = 0,
-      pqAudit: Boolean = false,
-      pqRebalance: Boolean = false,
-      pqFold: Boolean = false,
-      keyCol: Option[String] = None,
-      maxCell: Long = 1L << 22,
-      keyRecipe: String = "vec",
-      hashAudit: Boolean = false,
-      annRecall: Boolean = false,
-      nQueries: Int = 20,
-      dedupRecall: Boolean = false,
-      minJaccard: Double = 0.8)
+  /** One CLI invocation: each mode's case class holds only what it reads. */
+  sealed trait Command
+
+  object Command {
+    final case class Copy(env: String, tableArg: String, tablesListPath: String,
+        source: Option[Source], sink: Option[Sink], statePath: String, mode: SaveMode,
+        parallelism: Int, tableTimeout: Duration, strict: Boolean) extends Command
+    final case class StreamDedup(table: String, sourceDir: String, sink: IdempotentSink,
+        ledger: String, checkpoint: String, dedup: String, textCol: String, idCol: String,
+        vecCol: String, minCos: Double, k: Int) extends Command
+    final case class StreamPq(table: String, sourceDir: String, store: String,
+        checkpoint: String, vecCol: String, idCol: String) extends Command
+    final case class CompactLedger(ledger: String) extends Command
+    final case class FoldEpochs(ledger: String, checkpoint: String) extends Command
+    final case class ExportShards(env: String, table: String, source: Option[Source],
+        exportDir: String, idCol: String, contentCols: Seq[String], shards: Int,
+        seed: Long) extends Command
+    final case class VerifyExport(exportDir: String, idCol: String, contentCols: Seq[String],
+        seed: Long) extends Command
+    final case class ScrubSpans(env: String, table: String, source: Option[Source],
+        sink: Option[Sink], mode: SaveMode, textCol: String, idCol: String, spanTokens: Int,
+        minDocs: Int) extends Command
+    final case class EpochShuffle(env: String, table: String, source: Option[Source],
+        sink: Option[Sink], mode: SaveMode, idCol: String, epoch: Long) extends Command
+    final case class DeletePq(ids: Seq[Long], auditDir: String, store: String,
+        idCol: String) extends Command
+    /** `keyCol` is the vec recipe's key column; the fp recipe has none. */
+    final case class DeleteLedger(ids: Seq[Long], auditDir: String, ledger: String,
+        corpusDir: String, keyCol: Option[String], textCol: String, vecCol: String,
+        idCol: String, hashAudit: Boolean) extends Command
+    final case class DeleteCorpus(ids: Seq[Long], auditDir: String, corpusDir: String,
+        idCol: String) extends Command
+    final case class Zorder(cols: Seq[String], corpusDir: String, outDir: String, bits: Int,
+        files: Int) extends Command
+    final case class HeavyHitters(column: String, corpusDir: String, outDir: String,
+        capacity: Int, k: Int, tokenize: Boolean) extends Command
+    final case class PqEncode(corpusDir: String, outDir: String, vecCol: String, idCol: String,
+        m: Int, k: Int, iters: Int, coarseK: Int, residual: Boolean, balancedPerm: Boolean,
+        refineM: Int, refineK: Int) extends Command
+    final case class PqAppend(corpusDir: String, outDir: String, epoch: String, vecCol: String,
+        idCol: String) extends Command
+    final case class PqSearch(queriesDir: String, store: String, outDir: String,
+        vecCol: String, idCol: String, k: Int, nprobe: Int, residual: Boolean, rerank: Int,
+        rerankCorpus: Option[String]) extends Command
+    final case class PqAudit(store: String, outDir: String, idCol: String) extends Command
+    final case class PqRebalance(store: String, corpusDir: String, outDir: String,
+        vecCol: String, idCol: String, maxCell: Long, iters: Int) extends Command
+    final case class PqFold(store: String, checkpoint: String) extends Command
+    final case class AnnRecall(store: String, corpusDir: String, vecCol: String, idCol: String,
+        k: Int, nQueries: Int, nprobe: Int, rerank: Int) extends Command
+    final case class DedupRecall(ledger: String, corpusDir: String, textCol: String,
+        vecCol: String, idCol: String, minJaccard: Double, nQueries: Int) extends Command
+    final case class ExactNeardup(corpusDir: String, outDir: String, textCol: String,
+        idCol: String, tau: Double) extends Command
+  }
+  import Command._
+
+  /** The flags that name a command; an invocation with none is the copy. */
+  private val modeFlags = Seq("stream", "compact-ledger", "fold-epochs", "export-shards",
+    "verify-export", "scrub-spans", "epoch-shuffle", "delete-ids", "zorder", "heavy-hitters",
+    "pq-encode", "pq-append", "pq-search", "pq-audit", "pq-rebalance", "pq-fold",
+    "ann-recall", "dedup-recall", "exact-neardup")
 
   /** Valueless flags (presence = true). */
   private val boolFlags = Set("strict", "stream", "compact-ledger", "fold-epochs",
@@ -110,8 +120,46 @@ object GraftApp {
     "pq-encode", "pq-append", "pq-search", "pq-audit", "pq-rebalance", "pq-fold",
     "residual", "balanced-perm", "hash-audit", "ann-recall", "dedup-recall")
 
-  def parseArgs(argv: Seq[String]): Args = {
-    val (pos, flags) = {
+  /** One command's view of the flags. Every name it asks for is recorded,
+    * so [[done]] refuses any flag the command never read — a typo'd or
+    * misplaced flag must be loud, not silently fall back to defaults. */
+  private final class Flags(val cmd: String, mode: Option[String], val env: String,
+      val table: String, kv: Map[String, String]) {
+    private val read = scala.collection.mutable.LinkedHashSet("strict") ++ mode
+    def opt(name: String): Option[String] = { read += name; kv.get(name) }
+    def req(name: String, what: String = "P"): String = opt(name).getOrElse(
+      throw new IllegalArgumentException(s"$cmd requires --$name $what"))
+    def str(name: String, default: String): String = opt(name).getOrElse(default)
+    def int(name: String, default: Int): Int = opt(name).fold(default)(_.toInt)
+    def double(name: String, default: Double): Double = opt(name).fold(default)(_.toDouble)
+    def flag(name: String): Boolean = opt(name).isDefined
+    def list(v: String): Seq[String] = v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    def oneOf(name: String, default: String, allowed: String*): String = {
+      val v = str(name, default)
+      if (!allowed.contains(v)) throw new IllegalArgumentException(
+        s"unknown --$name: $v (expected ${allowed.mkString("|")})")
+      v
+    }
+    def saveMode: SaveMode =
+      if (oneOf("mode", "append", "append", "overwrite") == "overwrite") SaveMode.Overwrite
+      else SaveMode.Append
+    def ids: Seq[Long] = list(req("delete-ids")).map(_.toLong)
+    def source: Option[Source] = opt("source").map(PipelineConfig.parseEndpoint)
+      .map { case (f, l) => Connectors.source(f, l) }
+    def sink: Option[Sink] = opt("sink").map(PipelineConfig.parseEndpoint)
+      .map { case (f, l) => Connectors.sink(f, l) }
+    def done(c: Command): Command = {
+      val unread = kv.keySet -- read
+      if (unread.nonEmpty)
+        throw new IllegalArgumentException(
+          s"$cmd does not read ${unread.toSeq.sorted.map("--" + _).mkString(", ")}; " +
+            s"it reads ${read.toSeq.map("--" + _).mkString(" ")}")
+      c
+    }
+  }
+
+  def parseArgs(argv: Seq[String]): Command = {
+    val (pos, kv) = {
       var positional = Vector.empty[String]
       var kv = Map.empty[String, String]
       var rest = argv.toList
@@ -129,285 +177,81 @@ object GraftApp {
     }
     if (pos.length != 2)
       throw new IllegalArgumentException(
-        "usage: GraftApp <env> <table|t1,t2|all> [--tables-list-path P] " +
-          "[--source fmt:loc] [--sink fmt:loc] [--state P] " +
-          "[--mode append|overwrite] [--parallelism N] [--table-timeout-sec N] " +
-          "[--strict] [--stream --ledger P --checkpoint P " +
-          "[--dedup exact|neardup|embed|semantic] [--text-col C] [--id-col C] " +
-          "[--vec-col C] [--min-cos X] [--k N]] | " +
-          "[--stream --pq-store P --checkpoint P [--vec-col C] [--id-col C]] | " +
-          "[--compact-ledger --ledger P] | " +
-          "[--fold-epochs --ledger P --checkpoint P] | " +
-          "[--export-shards --export-dir P [--content-cols a,b] [--shards N] [--seed S]] | " +
-          "[--verify-export --export-dir P [--content-cols a,b] [--seed S]] | " +
-          "[--scrub-spans [--span-tokens N] [--min-docs N]] | " +
-          "[--epoch-shuffle E] | " +
-          "[--delete-ids i,j,… --corpus-dir P --audit-dir P " +
-          "[--pq-store P | --ledger P --key-col C [--key-recipe vec|fp] [--hash-audit]]] | " +
-          "[--zorder c1,c2[,…c6] --corpus-dir P --out-dir P [--z-bits N] [--z-files N]] | " +
-          "[--exact-neardup --corpus-dir P --out-dir P [--tau X] [--text-col C] [--id-col C]] | " +
-          "[--heavy-hitters COL --corpus-dir P --out-dir P [--capacity N] [--k N] [--tokenize]] | " +
-          "[--pq-encode --corpus-dir P --out-dir P [--vec-col C] [--id-col C] " +
-          "[--pq-m N] [--pq-k N] [--pq-iters N] [--pq-coarse-k N] [--residual] " +
-          "[--balanced-perm] [--refine-m N --refine-k N]] | " +
-          "[--pq-append --corpus-dir P --out-dir P --pq-epoch TOKEN [--vec-col C] [--id-col C]] | " +
-          "[--pq-search --corpus-dir QUERIES --pq-store P --out-dir P [--k N] [--nprobe N] " +
-          "[--residual] [--rerank R [--rerank-corpus P]]] | " +
-          "[--pq-audit --pq-store P --out-dir P [--id-col C]] | " +
-          "[--pq-rebalance --pq-store P --corpus-dir P --out-dir NEW " +
-          "[--max-cell N] [--pq-iters N] [--vec-col C] [--id-col C]] | " +
-          "[--pq-fold --pq-store P --checkpoint P] | " +
-          "[--ann-recall --pq-store P --corpus-dir P [--k N] [--queries N] " +
-          "[--nprobe N] [--rerank R] [--vec-col C] [--id-col C]] | " +
-          "[--dedup-recall --ledger P --corpus-dir P [--text-col C | --vec-col C] " +
-          "[--id-col C] [--min-jaccard X] [--queries N]]")
-    val known = Set("tables-list-path", "source", "sink", "state",
-      "mode", "parallelism", "table-timeout-sec",
-      "ledger", "checkpoint", "text-col", "id-col",
-      "dedup", "vec-col", "min-cos", "k",
-      "export-dir", "content-cols", "shards", "seed",
-      "span-tokens", "min-docs", "epoch-shuffle",
-      "delete-ids", "audit-dir", "corpus-dir",
-      "zorder", "z-bits", "z-files", "out-dir", "tau",
-      "heavy-hitters", "capacity",
-      "pq-m", "pq-k", "pq-iters", "pq-coarse-k", "pq-epoch", "pq-store",
-      "nprobe", "rerank", "rerank-corpus", "refine-m", "refine-k",
-      "max-cell", "key-col", "key-recipe", "queries", "min-jaccard") ++ boolFlags
-    val unknown = flags.keySet -- known
-    // A typo'd flag must be loud, not silently fall back to defaults.
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown flags: ${unknown.toSeq.sorted.map("--" + _).mkString(", ")}")
-    Args(
-      env = pos(0),
-      tableArg = pos(1),
-      tablesListPath = flags.getOrElse("tables-list-path", "tables_list"),
-      sourceOverride = flags.get("source"),
-      sinkOverride = flags.get("sink"),
-      statePath = flags.get("state"),
-      mode = flags.get("mode").map {
-        case "append"    => SaveMode.Append
-        case "overwrite" => SaveMode.Overwrite
-        case other       => throw new IllegalArgumentException(s"unknown mode: $other")
-      }.getOrElse(SaveMode.Append),
-      parallelism = flags.get("parallelism").map(_.toInt).getOrElse(4),
-      tableTimeout =
-        flags.get("table-timeout-sec").map(_.toLong.seconds: Duration).getOrElse(Duration.Inf),
-      strict = flags.contains("strict"),
-      stream = flags.contains("stream"),
-      ledgerDir = flags.get("ledger"),
-      checkpointDir = flags.get("checkpoint"),
-      textCol = flags.getOrElse("text-col", "text"),
-      idCol = flags.getOrElse("id-col", "doc_id"),
-      dedup = flags.get("dedup").map {
-        case m @ ("exact" | "neardup" | "embed" | "semantic") => m
-        case other => throw new IllegalArgumentException(
-          s"unknown --dedup mode: $other (expected exact|neardup|embed|semantic)")
-      }.getOrElse("exact"),
-      vecCol = flags.getOrElse("vec-col", "embedding"),
-      minCos = flags.get("min-cos").map(_.toDouble).getOrElse(0.9),
-      k = flags.get("k").map(_.toInt).getOrElse(8),
-      compactLedger = flags.contains("compact-ledger"),
-      foldEpochs = flags.contains("fold-epochs"),
-      exportShards = flags.contains("export-shards"),
-      verifyExport = flags.contains("verify-export"),
-      exportDir = flags.get("export-dir"),
-      contentCols = flags.get("content-cols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Seq("text")),
-      nShards = flags.get("shards").map(_.toInt).getOrElse(16),
-      seed = flags.get("seed").map(_.toLong).getOrElse(7L),
-      scrubSpans = flags.contains("scrub-spans"),
-      spanTokens = flags.get("span-tokens").map(_.toInt).getOrElse(8),
-      minDocs = flags.get("min-docs").map(_.toInt).getOrElse(2),
-      epochShuffle = flags.get("epoch-shuffle").map(_.toLong),
-      deleteIds = flags.get("delete-ids")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq),
-      auditDir = flags.get("audit-dir"),
-      corpusDir = flags.get("corpus-dir"),
-      zorderCols = flags.get("zorder").map { v =>
-        val cols = v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        if (cols.size < 2 || cols.size > 6)
+        "usage: GraftApp <env> <table|t1,t2|all> [--strict] [one of " +
+          modeFlags.map("--" + _).mkString(", ") +
+          " and its flags]; no mode flag runs the catalog copy")
+    // Sub-forms are picked by the flag that selects their operator.
+    val modes = modeFlags.filter(kv.contains)
+    val name = modes match {
+      case Seq() => "copy"
+      case Seq("stream") if kv.contains("pq-store") =>
+        // The PQ drain has no fingerprint ledger or corpus sink, so a
+        // --ledger (or --sink) alongside --pq-store means the caller
+        // expected the dedup pipeline.
+        if (kv.contains("ledger") || kv.contains("sink"))
           throw new IllegalArgumentException(
-            s"--zorder wants 2..6 columns, got ${cols.size}: $v")
-        cols
-      },
-      zBits = flags.get("z-bits").map(_.toInt).getOrElse(16),
-      zFiles = flags.get("z-files").map(_.toInt).getOrElse(64),
-      outDir = flags.get("out-dir"),
-      exactNeardup = flags.contains("exact-neardup"),
-      tau = flags.get("tau").map(_.toDouble).getOrElse(0.8),
-      heavyHitters = flags.get("heavy-hitters"),
-      capacity = flags.get("capacity").map(_.toInt).getOrElse(4096),
-      tokenize = flags.contains("tokenize"),
-      pqEncode = flags.contains("pq-encode"),
-      pqM = flags.get("pq-m").map(_.toInt).getOrElse(4),
-      pqK = flags.get("pq-k").map(_.toInt).getOrElse(256),
-      pqIters = flags.get("pq-iters").map(_.toInt).getOrElse(2),
-      pqCoarseK = flags.get("pq-coarse-k").map(_.toInt).getOrElse(256),
-      pqAppend = flags.contains("pq-append"),
-      pqEpoch = flags.get("pq-epoch"),
-      pqSearch = flags.contains("pq-search"),
-      pqStore = flags.get("pq-store"),
-      nprobe = flags.get("nprobe").map(_.toInt).getOrElse(1),
-      pqResidual = flags.contains("residual"),
-      pqBalancedPerm = flags.contains("balanced-perm"),
-      rerank = flags.get("rerank").map(_.toInt).getOrElse(0),
-      rerankCorpus = flags.get("rerank-corpus"),
-      refineM = flags.get("refine-m").map(_.toInt).getOrElse(0),
-      refineK = flags.get("refine-k").map(_.toInt).getOrElse(0),
-      pqAudit = flags.contains("pq-audit"),
-      pqRebalance = flags.contains("pq-rebalance"),
-      pqFold = flags.contains("pq-fold"),
-      keyCol = flags.get("key-col"),
-      maxCell = flags.get("max-cell").map(_.toLong).getOrElse(1L << 22),
-      keyRecipe = flags.get("key-recipe").map {
-        case r @ ("vec" | "fp") => r
-        case other => throw new IllegalArgumentException(
-          s"unknown --key-recipe: $other (expected vec|fp)")
-      }.getOrElse("vec"),
-      hashAudit = flags.contains("hash-audit"),
-      annRecall = flags.contains("ann-recall"),
-      nQueries = flags.get("queries").map(_.toInt).getOrElse(20),
-      dedupRecall = flags.contains("dedup-recall"),
-      minJaccard = flags.get("min-jaccard").map(_.toDouble).getOrElse(0.8))
-  }
-
-  /** Testable core; returns the process exit code. */
-  def run(
-      a: Args,
-      spark: SparkSession,
-      getenv: String => Option[String] = k => sys.env.get(k),
-      out: String => Unit = println,
-      log: String => Unit = s => System.err.println(s"[graft] $s")): Int = {
-
-    // Ledger maintenance is a standalone mode: compact the band-ledger
-    // directory (file counts dominate the per-batch ledger read after
-    // enough epochs) and exit. Run it between drains; construction
-    // metadata and the epoch partition layout are preserved
-    // (MaintenanceOps.compactLedger).
-    if (a.compactLedger) {
-      val dir = a.ledgerDir.getOrElse(
-        throw new IllegalArgumentException("--compact-ledger requires --ledger P"))
-      val r = graft.operators.MaintenanceOps.compactLedger(spark, dir)
-      out(s"COMPACT_LEDGER_ files=${r.filesBefore}->${r.filesAfter} rows=${r.rows}")
-      return 0
+            "--stream --pq-store is the PQ-ingest drain (no ledger, no sink); " +
+              "it cannot combine with --ledger/--sink — pick ONE stream mode")
+        "--stream --pq-store"
+      case Seq("delete-ids") if kv.contains("pq-store") => "--delete-ids --pq-store"
+      case Seq("delete-ids") if kv.contains("ledger")   => "--delete-ids --ledger"
+      case Seq(m) => "--" + m
+      case ms => throw new IllegalArgumentException(
+        s"${ms.map("--" + _).mkString(" and ")} are separate commands; " +
+          "run them as separate invocations")
     }
-
-    // Epoch folding derives its replay horizon from the streaming
-    // checkpoint's commit log — never from a human-stated batch id: a
-    // committed batch can never re-execute, so its ledger epoch is safe
-    // to fold; anything newer must keep its own partition for replay
-    // overwrite.
-    if (a.foldEpochs) {
-      val dir = a.ledgerDir.getOrElse(
-        throw new IllegalArgumentException("--fold-epochs requires --ledger P"))
-      val ckpt = a.checkpointDir.getOrElse(
-        throw new IllegalArgumentException("--fold-epochs requires --checkpoint P"))
-      val horizon = graft.operators.MaintenanceOps.lastCommittedBatch(spark, ckpt)
-        .getOrElse(throw new IllegalStateException(
-          s"no commit log at $ckpt/commits - cannot establish a replay horizon, refusing to fold"))
-      val r = graft.operators.MaintenanceOps.foldEpochs(spark, dir, horizon)
-      out(s"FOLD_EPOCHS_ upTo=$horizon files=${r.filesBefore}->${r.filesAfter} rows=${r.rows}")
-      return 0
-    }
-
-    // Export integrity is a standalone mode: write deterministic id-hash
-    // shards + the order-independent manifest, then IMMEDIATELY verify the
-    // files just written (write-then-verify — an export that cannot be
-    // re-derived from disk never reports success). --verify-export alone
-    // re-checks an existing export (the consumer-side trust step); any
-    // damage throws with the shard named, which --strict turns into a
-    // nonzero exit like every other failure.
-    if (a.exportShards || a.verifyExport) {
-      val dir = a.exportDir.getOrElse(throw new IllegalArgumentException(
-        (if (a.exportShards) "--export-shards" else "--verify-export") +
-          " requires --export-dir P"))
-      if (a.exportShards) {
-        val src = a.sourceOverride
-          .map(PipelineConfig.parseEndpoint).map { case (f, l) => Connectors.source(f, l) }
-          .getOrElse(PipelineConfig.loadEndpoint(a.env, "SOURCE", getenv).asSource)
-        val df = src.read(spark, a.tableArg)
-        graft.operators.ExportOps.shardedExport(
-          df, dir, a.idCol, a.contentCols, a.nShards, a.seed)
-        out(s"EXPORT_SHARDS_ dir=$dir shards=${a.nShards}")
-      }
-      graft.operators.ExportOps.verifyShards(spark, dir, a.idCol, a.contentCols, a.seed)
-      out(s"VERIFY_EXPORT_ dir=$dir OK")
-      return 0
-    }
-
-    // Curation batch modes: read the table from the source side, apply the
-    // operator, write the result through the sink side — the same per-side
-    // endpoint resolution as the copy path, so `--source parquet:… --sink
-    // parquet:…` works without any env config. Span surgery rewrites the
-    // corpus minus cross-document duplicate windows (DedupOps.scrubSpans);
-    // epoch shuffle writes the reproducible epoch ORDER (part files land
-    // in range-partition order — the concatenation is the epoch's order).
-    if (a.scrubSpans || a.epochShuffle.isDefined) {
-      require(!(a.scrubSpans && a.epochShuffle.isDefined),
-        "--scrub-spans and --epoch-shuffle are separate modes; run them as two passes")
-      val src = a.sourceOverride
-        .map(PipelineConfig.parseEndpoint).map { case (f, l) => Connectors.source(f, l) }
-        .getOrElse(PipelineConfig.loadEndpoint(a.env, "SOURCE", getenv).asSource)
-      val sink = a.sinkOverride
-        .map(PipelineConfig.parseEndpoint).map { case (f, l) => Connectors.sink(f, l) }
-        .getOrElse(PipelineConfig.loadEndpoint(a.env, "TARGET", getenv).asSink)
-      val df = src.read(spark, a.tableArg)
-      if (a.scrubSpans) {
-        // Round-trippable rewrite: the operator emits (id, clean_text,
-        // n_removed); the CLI pass must hand the NEXT pass the same table
-        // shape it read — every other column preserved and the scrubbed
-        // text back under its original name (a follow-up --epoch-shuffle
-        // or --scrub-spans reads --text-col unchanged).
-        val scrubbed = graft.operators.DedupOps.scrubSpans(
-            df, a.textCol, a.idCol, a.spanTokens, a.minDocs)
-          .withColumnRenamed("clean_text", a.textCol)
-        sink.write(df.drop(a.textCol).join(scrubbed, Seq(a.idCol)),
-          a.tableArg, a.mode)
-        out(s"SCRUB_SPANS_ table=${a.tableArg} spanTokens=${a.spanTokens} minDocs=${a.minDocs}")
-      } else {
-        val epoch = a.epochShuffle.get
-        sink.write(graft.operators.SamplingOps.epochShuffle(df, a.idCol, epoch),
-          a.tableArg, a.mode)
-        out(s"EPOCH_SHUFFLE_ table=${a.tableArg} epoch=$epoch")
-      }
-      return 0
-    }
-
-    // Governance mode: audited targeted delete, in place over a parquet
-    // corpus directory (atomic rewrite-then-swap, tombstone audit written
-    // BEFORE the swap — MaintenanceOps.targetedDelete). The corpus dir is
-    // named directly (not via a source endpoint): an in-place rewrite
-    // must know exactly which directory it owns.
-    if (a.deleteIds.isDefined) {
-      val audit = a.auditDir.getOrElse(
-        throw new IllegalArgumentException("--delete-ids requires --audit-dir P"))
-      // E153: with --pq-store the takedown reaches the PQ STORE's code
-      // namespaces (id-keyed derived rows); with --ledger + --key-col it
-      // reaches a band/semantic ledger, deriving the space's keys from
-      // the corpus rows (which must still hold the ids — run the ledger
-      // delete BEFORE the corpus delete). Plain --corpus-dir alone stays
-      // the flat-corpus rewrite (E125).
-      if (a.pqStore.isDefined) {
-        val rs = graft.operators.PqOps.pqStoreDelete(
-          spark, a.pqStore.get, a.idCol, a.deleteIds.get, audit)
-        out(s"DELETE_PQ_ requested=${a.deleteIds.get.size} " +
-          rs.toSeq.sortBy(_._1).map { case (ns, r) =>
-            s"$ns:deleted=${r.deleted},rows=${r.rowsBefore}->${r.rowsAfter}," +
-              s"leaves=${r.leavesRewritten}"
-          }.mkString(" "))
-        return 0
-      }
-      if (a.ledgerDir.isDefined) {
-        val dir = a.corpusDir.getOrElse(
+    val f = new Flags(name, modes.headOption, pos(0), pos(1), kv)
+    f.done(name match {
+      case "copy" => Copy(f.env, f.table, f.str("tables-list-path", "tables_list"),
+        f.source, f.sink, f.str("state", "graft_state.properties"), f.saveMode,
+        f.int("parallelism", 4),
+        f.opt("table-timeout-sec").fold(Duration.Inf: Duration)(_.toLong.seconds),
+        f.flag("strict"))
+      case "--stream" | "--stream --pq-store" =>
+        val (srcFmt, srcDir) =
+          PipelineConfig.parseEndpoint(f.req("source", "parquet:<dir>"))
+        if (srcFmt != "parquet")
           throw new IllegalArgumentException(
-            "--delete-ids --ledger requires --corpus-dir P (the key recipe " +
-              "derives the ledger keys from the corpus rows — run before the " +
-              "corpus delete)"))
-        import org.apache.spark.sql.functions.col
-        val docs = spark.read.parquet(dir)
-          .filter(col(a.idCol).isInCollection(a.deleteIds.get.distinct))
+            s"stream mode reads a parquet file-stream directory; got --source $srcFmt")
+        if (f.table.equalsIgnoreCase("all") || f.table.contains(","))
+          throw new IllegalArgumentException("stream mode ingests ONE table; got: " + f.table)
+        val ckpt = f.req("checkpoint", "<dir> (streaming checkpoint)")
+        if (name == "--stream --pq-store")
+          StreamPq(f.table, srcDir, f.req("pq-store"), ckpt, f.str("vec-col", "embedding"),
+            f.str("id-col", "doc_id"))
+        else {
+          val idem = f.sink.getOrElse(throw new IllegalArgumentException(
+            "--stream requires --sink parquet-idempotent:<dir>")) match {
+            case s: IdempotentSink => s
+            case other => throw new IllegalArgumentException(
+              "stream mode needs an idempotent sink (an epoch replay must REPLACE " +
+                s"its partial write, not append it twice); got ${other.getClass.getSimpleName} " +
+                "— use --sink parquet-idempotent:<dir>")
+          }
+          StreamDedup(f.table, srcDir, idem,
+            f.req("ledger", "<dir> (persistent fingerprint ledger)"), ckpt,
+            f.oneOf("dedup", "exact", "exact", "neardup", "embed", "semantic"),
+            f.str("text-col", "text"), f.str("id-col", "doc_id"),
+            f.str("vec-col", "embedding"), f.double("min-cos", 0.9), f.int("k", 8))
+        }
+      case "--compact-ledger" => CompactLedger(f.req("ledger"))
+      case "--fold-epochs" => FoldEpochs(f.req("ledger"), f.req("checkpoint"))
+      case "--export-shards" => ExportShards(f.env, f.table, f.source, f.req("export-dir"),
+        f.str("id-col", "doc_id"), f.list(f.str("content-cols", "text")),
+        f.int("shards", 16), f.opt("seed").fold(7L)(_.toLong))
+      case "--verify-export" => VerifyExport(f.req("export-dir"), f.str("id-col", "doc_id"),
+        f.list(f.str("content-cols", "text")), f.opt("seed").fold(7L)(_.toLong))
+      case "--scrub-spans" => ScrubSpans(f.env, f.table, f.source, f.sink, f.saveMode,
+        f.str("text-col", "text"), f.str("id-col", "doc_id"), f.int("span-tokens", 8),
+        f.int("min-docs", 2))
+      case "--epoch-shuffle" => EpochShuffle(f.env, f.table, f.source, f.sink, f.saveMode,
+        f.str("id-col", "doc_id"), f.req("epoch-shuffle").toLong)
+      case "--delete-ids --pq-store" =>
+        DeletePq(f.ids, f.req("audit-dir"), f.req("pq-store"), f.str("id-col", "doc_id"))
+      case "--delete-ids --ledger" =>
+        val (ids, audit, ledger) = (f.ids, f.req("audit-dir"), f.req("ledger"))
+        val corpus = f.req("corpus-dir", "P (the key recipe derives the ledger keys " +
+          "from the corpus rows — run before the corpus delete)")
         // The KEY RECIPE is per ledger space (the ledgerDelete scaladoc):
         //  - vec (default): the stored vector column verbatim — the
         //    SRP/semantic ledger recipe. Refuses _graft_fp as the key
@@ -415,372 +259,447 @@ object GraftApp {
         //    type-compatible-but-wrong key silently audits every key
         //    found=false (a takedown no-op the operator believes ran).
         //  - fp: recompute the ingest fingerprint PAIR from the corpus
-        //    rows — DedupOps keys dedup identity on (_graft_fp,
-        //    _graft_fp2) = (charHash, xxhash64) precisely because the
-        //    ~30-bit charHash alone collides at birthday scale ~35 k
-        //    docs; a takedown keyed on it alone would also erase
-        //    UNRELATED docs' fingerprint rows, silently disabling their
-        //    dedup on re-ingest (round-16 advice). The composite
-        //    ledgerDelete erases on the pair.
-        val (keyCols, keys) = a.keyRecipe match {
-          case "fp" =>
-            a.keyCol.foreach { kc =>
-              throw new IllegalArgumentException(
-                s"--key-col $kc is not applicable with --key-recipe fp: the " +
-                  "fingerprint recipe always keys on the ingest pair " +
-                  "(_graft_fp, _graft_fp2) recomputed from --text-col")
-            }
-            (Seq("_graft_fp", "_graft_fp2"), docs.select(
-              graft.functions.TextFunctions.charHash(col(a.textCol))
-                .as("_graft_fp"),
-              org.apache.spark.sql.functions.xxhash64(col(a.textCol))
-                .as("_graft_fp2")))
-          case _ =>
-            val kc = a.keyCol.getOrElse(
-              throw new IllegalArgumentException(
-                "--delete-ids --ledger requires --key-col C (the ledger's key " +
-                  "column, e.g. _graft_vec for the SRP/semantic ledgers)"))
-            if (kc == "_graft_fp")
-              throw new IllegalArgumentException(
-                "--key-col _graft_fp with the vec key recipe would probe a " +
-                  "fingerprint ledger with raw vectors — every key would audit " +
-                  "found=false. Use --key-recipe fp (recomputes the ingest " +
-                  "fingerprint from --text-col).")
-            (Seq(kc), docs.select(col(a.vecCol).as(kc)))
+        //    rows (see the DeleteLedger case in `run`).
+        val keyCol = (f.oneOf("key-recipe", "vec", "vec", "fp"), f.opt("key-col")) match {
+          case ("fp", Some(kc)) => throw new IllegalArgumentException(
+            s"--key-col $kc is not applicable with --key-recipe fp: the " +
+              "fingerprint recipe always keys on the ingest pair " +
+              "(_graft_fp, _graft_fp2) recomputed from --text-col")
+          case ("fp", None) => None
+          case (_, None) => throw new IllegalArgumentException(
+            "--delete-ids --ledger requires --key-col C (the ledger's key " +
+              "column, e.g. _graft_vec for the SRP/semantic ledgers)")
+          case (_, Some("_graft_fp")) => throw new IllegalArgumentException(
+            "--key-col _graft_fp with the vec key recipe would probe a " +
+              "fingerprint ledger with raw vectors — every key would audit " +
+              "found=false. Use --key-recipe fp (recomputes the ingest " +
+              "fingerprint from --text-col).")
+          case (_, kc) => kc
         }
-        val r = graft.operators.MaintenanceOps.ledgerDelete(
-          spark, a.ledgerDir.get, keyCols, keys, audit, hashKeys = a.hashAudit)
-        out(s"DELETE_LEDGER_ requested=${a.deleteIds.get.size} deleted=${r.deleted} " +
-          s"notFound=${r.notFound} rows=${r.rowsBefore}->${r.rowsAfter} " +
-          s"leaves=${r.leavesRewritten}")
-        if (r.deleted == 0L && r.notFound > 0L)
-          out(s"DELETE_LEDGER_WARN_ every requested key audited found=false — " +
-            "the key recipe or --key-col likely does not match this ledger " +
-            "space (see the per-space recipes in the ledgerDelete scaladoc)")
-        return 0
+        DeleteLedger(ids, audit, ledger, corpus, keyCol, f.str("text-col", "text"),
+          f.str("vec-col", "embedding"), f.str("id-col", "doc_id"), f.flag("hash-audit"))
+      case "--delete-ids" => DeleteCorpus(f.ids, f.req("audit-dir"), f.req("corpus-dir"),
+        f.str("id-col", "doc_id"))
+      case "--zorder" =>
+        val v = f.req("zorder")
+        val cols = f.list(v)
+        if (cols.size < 2 || cols.size > 6)
+          throw new IllegalArgumentException(
+            s"--zorder wants 2..6 columns, got ${cols.size}: $v")
+        Zorder(cols, f.req("corpus-dir"), f.req("out-dir"), f.int("z-bits", 16),
+          f.int("z-files", 64))
+      case "--heavy-hitters" => HeavyHitters(f.req("heavy-hitters"), f.req("corpus-dir"),
+        f.req("out-dir"), f.int("capacity", 4096), f.int("k", 8), f.flag("tokenize"))
+      case "--pq-encode" =>
+        val c = PqEncode(f.req("corpus-dir"), f.req("out-dir"), f.str("vec-col", "embedding"),
+          f.str("id-col", "doc_id"), f.int("pq-m", 4), f.int("pq-k", 256),
+          f.int("pq-iters", 2), f.int("pq-coarse-k", 256), f.flag("residual"),
+          f.flag("balanced-perm"), f.int("refine-m", 0), f.int("refine-k", 0))
+        if ((c.refineM > 0) != (c.refineK > 0))
+          throw new IllegalArgumentException(
+            s"--refine-m and --refine-k come as a pair: ${c.refineM} / ${c.refineK}")
+        c
+      case "--pq-append" => PqAppend(f.req("corpus-dir"), f.req("out-dir"),
+        f.req("pq-epoch", "TOKEN"), f.str("vec-col", "embedding"), f.str("id-col", "doc_id"))
+      case "--pq-search" =>
+        val c = PqSearch(f.req("corpus-dir", "P (the queries)"), f.req("pq-store"),
+          f.req("out-dir"), f.str("vec-col", "embedding"), f.str("id-col", "doc_id"),
+          f.int("k", 8), f.int("nprobe", 1), f.flag("residual"), f.int("rerank", 0),
+          f.opt("rerank-corpus"))
+        require(c.rerank >= 0, s"--rerank must be non-negative: ${c.rerank}")
+        if (c.rerank > 0 && c.rerank < c.k)
+          throw new IllegalArgumentException(
+            s"--rerank ${c.rerank} must be >= --k ${c.k}: the exact pass re-ranks a " +
+              "SHORTLIST of R candidates and cuts it to k")
+        c
+      case "--pq-audit" =>
+        PqAudit(f.req("pq-store"), f.req("out-dir"), f.str("id-col", "doc_id"))
+      case "--pq-rebalance" => PqRebalance(f.req("pq-store"),
+        f.req("corpus-dir", "P (the raw vectors — the split re-fits hot cells)"),
+        f.req("out-dir", "NEW"), f.str("vec-col", "embedding"), f.str("id-col", "doc_id"),
+        f.opt("max-cell").fold(1L << 22)(_.toLong), f.int("pq-iters", 2))
+      case "--pq-fold" => PqFold(f.req("pq-store"), f.req("checkpoint"))
+      case "--ann-recall" => AnnRecall(f.req("pq-store"),
+        f.req("corpus-dir", "P (the raw vectors — exact ground truth needs them)"),
+        f.str("vec-col", "embedding"), f.str("id-col", "doc_id"), f.int("k", 8),
+        f.int("queries", 20), f.int("nprobe", 1), f.int("rerank", 0))
+      case "--dedup-recall" => DedupRecall(f.req("ledger"),
+        f.req("corpus-dir", "P (the docs/vectors the pipeline ingests — the ledger " +
+          "holds survivors only, a selection-biased audit base)"),
+        f.str("text-col", "text"), f.str("vec-col", "embedding"), f.str("id-col", "doc_id"),
+        f.double("min-jaccard", 0.8), f.int("queries", 20))
+      case "--exact-neardup" => ExactNeardup(f.req("corpus-dir"), f.req("out-dir"),
+        f.str("text-col", "text"), f.str("id-col", "doc_id"), f.double("tau", 0.8))
+    })
+  }
+
+  /** Connection resolution is PER SIDE: an explicit override wins and its
+    * side's config (env vars, JDBC creds) is never consulted — overriding
+    * only --sink must not demand GRAFT_SINK or TARGET_DB_* to exist. */
+  private def sourceOf(env: String, over: Option[Source], getenv: String => Option[String]) =
+    over.getOrElse(PipelineConfig.loadEndpoint(env, "SOURCE", getenv).asSource)
+  private def sinkOf(env: String, over: Option[Sink], getenv: String => Option[String]) =
+    over.getOrElse(PipelineConfig.loadEndpoint(env, "TARGET", getenv).asSink)
+
+  /** A committed streaming batch never re-executes, so the checkpoint's
+    * commit log — never a human-stated batch id — is the fold horizon. */
+  private def replayHorizon(spark: SparkSession, ckpt: String): Long =
+    MaintenanceOps.lastCommittedBatch(spark, ckpt).getOrElse(throw new IllegalStateException(
+      s"no commit log at $ckpt/commits - cannot establish a replay horizon, refusing to fold"))
+
+  /** Testable core; returns the process exit code. */
+  def run(
+      cmd: Command,
+      spark: SparkSession,
+      getenv: String => Option[String] = k => sys.env.get(k),
+      out: String => Unit = println,
+      log: String => Unit = s => System.err.println(s"[graft] $s")): Int = cmd match {
+
+    case c: Copy => runCopy(c, spark, getenv, out, log)
+
+    case c: StreamPq =>
+      // Round 14: each epoch encodes against the store's pinned model and
+      // dynamic-overwrites its own codes partitions — the store is the
+      // product, so no sink or fingerprint ledger is involved.
+      drain(spark, c.table, c.sourceDir, c.checkpoint, out, log)(
+        StreamingOps.foreachBatchLedgerPqEncode(_, c.vecCol, c.idCol, c.store))
+
+    case c: StreamDedup =>
+      // --dedup selects the corpus-wide ledger operator the drain flows
+      // through: exact fingerprints (default), MinHash band near-dup, the
+      // cosine-verified SRP embedding near-dup, or k-means SemDeDup
+      // against a pinned model — all sharing the epoch-replay
+      // exactly-once protocol.
+      drain(spark, c.table, c.sourceDir, c.checkpoint, out, log) { w =>
+        c.dedup match {
+          case "exact" => StreamingOps.foreachBatchLedgerDedup(
+            w, c.textCol, c.idCol, c.ledger, c.sink, c.table)
+          case "neardup" => StreamingOps.foreachBatchLedgerNeardup(
+            w, c.textCol, c.idCol, c.ledger, c.sink, c.table)
+          case "embed" => StreamingOps.foreachBatchLedgerNeardupVec(
+            w, c.vecCol, c.idCol, c.ledger, c.sink, c.table, minCos = c.minCos)
+          case "semantic" => StreamingOps.foreachBatchLedgerSemantic(
+            w, c.vecCol, c.idCol, c.ledger, c.sink, c.table, k = c.k, minCos = c.minCos)
+        }
       }
-      val dir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException("--delete-ids requires --corpus-dir P"))
-      val r = graft.operators.MaintenanceOps.targetedDelete(
-        spark, dir, a.idCol, a.deleteIds.get, audit)
-      out(s"DELETE_IDS_ requested=${a.deleteIds.get.size} deleted=${r.deleted} " +
+
+    // Ledger maintenance: compact the band-ledger directory (file counts
+    // dominate the per-batch ledger read after enough epochs). Run it
+    // between drains; construction metadata and the epoch partition
+    // layout are preserved (MaintenanceOps.compactLedger).
+    case c: CompactLedger =>
+      val r = MaintenanceOps.compactLedger(spark, c.ledger)
+      out(s"COMPACT_LEDGER_ files=${r.filesBefore}->${r.filesAfter} rows=${r.rows}")
+      0
+
+    // Epoch folding: anything newer than the replay horizon must keep its
+    // own partition for replay overwrite.
+    case c: FoldEpochs =>
+      val horizon = replayHorizon(spark, c.checkpoint)
+      val r = MaintenanceOps.foldEpochs(spark, c.ledger, horizon)
+      out(s"FOLD_EPOCHS_ upTo=$horizon files=${r.filesBefore}->${r.filesAfter} rows=${r.rows}")
+      0
+
+    // Export integrity: write deterministic id-hash shards + the
+    // order-independent manifest, then IMMEDIATELY verify the files just
+    // written (write-then-verify — an export that cannot be re-derived
+    // from disk never reports success). --verify-export alone re-checks an
+    // existing export (the consumer-side trust step); any damage throws
+    // with the shard named.
+    case c: ExportShards =>
+      val df = sourceOf(c.env, c.source, getenv).read(spark, c.table)
+      ExportOps.shardedExport(df, c.exportDir, c.idCol, c.contentCols, c.shards, c.seed)
+      out(s"EXPORT_SHARDS_ dir=${c.exportDir} shards=${c.shards}")
+      run(VerifyExport(c.exportDir, c.idCol, c.contentCols, c.seed), spark, getenv, out, log)
+
+    case c: VerifyExport =>
+      ExportOps.verifyShards(spark, c.exportDir, c.idCol, c.contentCols, c.seed)
+      out(s"VERIFY_EXPORT_ dir=${c.exportDir} OK")
+      0
+
+    // Curation batch passes: read the table from the source side, apply
+    // the operator, write the result through the sink side — the copy
+    // path's per-side endpoint resolution. Span surgery rewrites the
+    // corpus minus cross-document duplicate windows (DedupOps.scrubSpans)
+    // as a round-trippable rewrite: every other column preserved and the
+    // scrubbed text back under its original name, so a follow-up pass
+    // reads --text-col unchanged.
+    case c: ScrubSpans =>
+      val df = sourceOf(c.env, c.source, getenv).read(spark, c.table)
+      val scrubbed = DedupOps.scrubSpans(df, c.textCol, c.idCol, c.spanTokens, c.minDocs)
+        .withColumnRenamed("clean_text", c.textCol)
+      sinkOf(c.env, c.sink, getenv).write(df.drop(c.textCol).join(scrubbed, Seq(c.idCol)),
+        c.table, c.mode)
+      out(s"SCRUB_SPANS_ table=${c.table} spanTokens=${c.spanTokens} minDocs=${c.minDocs}")
+      0
+
+    // The epoch shuffle writes the reproducible epoch ORDER (part files
+    // land in range-partition order — the concatenation is the epoch's
+    // order).
+    case c: EpochShuffle =>
+      val df = sourceOf(c.env, c.source, getenv).read(spark, c.table)
+      sinkOf(c.env, c.sink, getenv).write(SamplingOps.epochShuffle(df, c.idCol, c.epoch),
+        c.table, c.mode)
+      out(s"EPOCH_SHUFFLE_ table=${c.table} epoch=${c.epoch}")
+      0
+
+    // E153 takedown reach into the PQ STORE's code namespaces (id-keyed
+    // derived rows).
+    case c: DeletePq =>
+      val rs = PqOps.pqStoreDelete(spark, c.store, c.idCol, c.ids, c.auditDir)
+      out(s"DELETE_PQ_ requested=${c.ids.size} " +
+        rs.toSeq.sortBy(_._1).map { case (ns, r) =>
+          s"$ns:deleted=${r.deleted},rows=${r.rowsBefore}->${r.rowsAfter}," +
+            s"leaves=${r.leavesRewritten}"
+        }.mkString(" "))
+      0
+
+    // E153 takedown reach into a band/semantic ledger, deriving the
+    // space's keys from the corpus rows (which must still hold the ids —
+    // run the ledger delete BEFORE the corpus delete).
+    case c: DeleteLedger =>
+      val docs = spark.read.parquet(c.corpusDir)
+        .filter(col(c.idCol).isInCollection(c.ids.distinct))
+      // The fp recipe recomputes the ingest fingerprint PAIR: DedupOps keys
+      // dedup identity on (_graft_fp, _graft_fp2) = (charHash, xxhash64)
+      // precisely because the ~30-bit charHash alone collides at birthday
+      // scale ~35 k docs; a takedown keyed on it alone would also erase
+      // UNRELATED docs' fingerprint rows, silently disabling their dedup
+      // on re-ingest (round-16 advice). The composite ledgerDelete erases
+      // on the pair.
+      val (keyCols, keys) = c.keyCol match {
+        case None => (Seq("_graft_fp", "_graft_fp2"), docs.select(
+          graft.functions.TextFunctions.charHash(col(c.textCol)).as("_graft_fp"),
+          xxhash64(col(c.textCol)).as("_graft_fp2")))
+        case Some(kc) => (Seq(kc), docs.select(col(c.vecCol).as(kc)))
+      }
+      val r = MaintenanceOps.ledgerDelete(
+        spark, c.ledger, keyCols, keys, c.auditDir, hashKeys = c.hashAudit)
+      out(s"DELETE_LEDGER_ requested=${c.ids.size} deleted=${r.deleted} " +
+        s"notFound=${r.notFound} rows=${r.rowsBefore}->${r.rowsAfter} " +
+        s"leaves=${r.leavesRewritten}")
+      if (r.deleted == 0L && r.notFound > 0L)
+        out(s"DELETE_LEDGER_WARN_ every requested key audited found=false — " +
+          "the key recipe or --key-col likely does not match this ledger " +
+          "space (see the per-space recipes in the ledgerDelete scaladoc)")
+      0
+
+    // Governance: audited targeted delete, in place over a parquet corpus
+    // directory (atomic rewrite-then-swap, tombstone audit written BEFORE
+    // the swap — MaintenanceOps.targetedDelete). The corpus dir is named
+    // directly (not via a source endpoint): an in-place rewrite must know
+    // exactly which directory it owns.
+    case c: DeleteCorpus =>
+      val r = MaintenanceOps.targetedDelete(spark, c.corpusDir, c.idCol, c.ids, c.auditDir)
+      out(s"DELETE_IDS_ requested=${c.ids.size} deleted=${r.deleted} " +
         s"notFound=${r.notFound} rows=${r.rowsBefore}->${r.rowsAfter}")
-      return 0
-    }
+      0
 
-    // Layout mode: Z-order re-cluster into a NEW directory (the clustered
-    // write is a full rewrite — pointing readers at the new dir is the
-    // caller's cutover step, kept explicit rather than swapped in place).
-    if (a.zorderCols.isDefined) {
-      val dir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException("--zorder requires --corpus-dir P"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--zorder requires --out-dir P"))
-      val cols = a.zorderCols.get
-      graft.operators.MaintenanceOps.zorderClusterN(
-        spark.read.parquet(dir), outd, cols, a.zBits, a.zFiles)
-      out(s"ZORDER_ cols=${cols.mkString(",")} bits=${a.zBits} " +
-        s"files=${a.zFiles} out=$outd")
-      return 0
-    }
+    // Layout: Z-order re-cluster into a NEW directory (the clustered write
+    // is a full rewrite — pointing readers at the new dir is the caller's
+    // cutover step, kept explicit rather than swapped in place).
+    case c: Zorder =>
+      MaintenanceOps.zorderClusterN(
+        spark.read.parquet(c.corpusDir), c.outDir, c.cols, c.bits, c.files)
+      out(s"ZORDER_ cols=${c.cols.mkString(",")} bits=${c.bits} " +
+        s"files=${c.files} out=${c.outDir}")
+      0
 
-    // Profiling mode: heavy-hitter report (E136) — the top-k dominating
-    // values (or tokens, with --tokenize) of a column, Misra–Gries
-    // fixed-memory sketch, the exact error mass on every row. Writes the
-    // (value, est, err_max) parquet to a NEW directory and says the
-    // error out loud: est ≤ true ≤ est + err_max.
-    if (a.heavyHitters.isDefined) {
-      val colName = a.heavyHitters.get
-      val dir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException("--heavy-hitters requires --corpus-dir P"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--heavy-hitters requires --out-dir P"))
-      val corpus = spark.read.parquet(dir)
-      val hits = (if (a.tokenize)
-        graft.operators.SketchOps.heavyHitterTokens(corpus, colName, a.capacity, a.k)
+    // Profiling: heavy-hitter report (E136) — the top-k dominating values
+    // (or tokens, with --tokenize) of a column, Misra–Gries fixed-memory
+    // sketch, the exact error mass on every row. Writes the (value, est,
+    // err_max) parquet to a NEW directory and says the error out loud:
+    // est ≤ true ≤ est + err_max.
+    case c: HeavyHitters =>
+      val corpus = spark.read.parquet(c.corpusDir)
+      val hits = (if (c.tokenize)
+        SketchOps.heavyHitterTokens(corpus, c.column, c.capacity, c.k)
       else
-        graft.operators.SketchOps.heavyHitters(corpus, colName, a.capacity, a.k))
+        SketchOps.heavyHitters(corpus, c.column, c.capacity, c.k))
         .localCheckpoint(true)
-      hits.write.mode(SaveMode.Overwrite).parquet(outd)
+      hits.write.mode(SaveMode.Overwrite).parquet(c.outDir)
       // An empty corpus explodes to zero rows — report err 0, not a crash.
       val err = hits.select("err_max").take(1).headOption
         .map(_.getLong(0)).getOrElse(0L)
-      out(s"HEAVY_HITTERS_ col=$colName tokenize=${a.tokenize} " +
-        s"capacity=${a.capacity} k=${a.k} err_max=$err out=$outd")
-      return 0
-    }
+      out(s"HEAVY_HITTERS_ col=${c.column} tokenize=${c.tokenize} " +
+        s"capacity=${c.capacity} k=${c.k} err_max=$err out=${c.outDir}")
+      0
 
-    // Build mode: product-quantization artifacts (E139/E142) — fit the m
-    // subspace codebooks AND the coarse quantizer, encode the corpus,
-    // and write the full IVFADC artifact set (`codebooks/`, `coarse/`,
-    // `codes/` partitioned by cell so searches partition-prune, all
-    // under the `_graft_pq_construction` pin, written FIRST). Like
-    // --zorder, a full rewrite into a NEW directory; cutover is the
-    // caller's explicit step.
-    if (a.pqEncode) {
-      val dir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException("--pq-encode requires --corpus-dir P"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--pq-encode requires --out-dir P"))
-      val corpus = spark.read.parquet(dir)
-      // --balanced-perm derives the E147 variance-balanced permutation
-      // from the corpus and builds the WHOLE store in the permuted
-      // space; the pin carries the array, so searches and appends
-      // permute themselves.
+    // Product-quantization artifacts (E139/E142) — fit the m subspace
+    // codebooks AND the coarse quantizer, encode the corpus, and write the
+    // full IVFADC artifact set (`codebooks/`, `coarse/`, `codes/`
+    // partitioned by cell so searches partition-prune, all under the
+    // `_graft_pq_construction` pin, written FIRST). Like --zorder, a full
+    // rewrite into a NEW directory. --balanced-perm derives the E147
+    // variance-balanced permutation from the corpus and builds the WHOLE
+    // store in the permuted space; the pin carries the array, so searches
+    // and appends permute themselves.
+    case c: PqEncode =>
+      val corpus = spark.read.parquet(c.corpusDir)
       val perm =
-        if (a.pqBalancedPerm)
-          Some(graft.operators.PqOps.balancedPerm(corpus, a.vecCol, a.pqM))
-        else None
-      val arts = graft.operators.PqOps.writePqArtifacts(
-        spark, corpus, a.vecCol, a.idCol, outd,
-        a.pqM, a.pqK, a.pqIters, a.pqCoarseK, a.pqIters,
-        residual = a.pqResidual, perm = perm,
-        refineM = a.refineM, refineK = a.refineK)
-      out(s"PQ_ENCODE_ m=${a.pqM} k=${a.pqK} iters=${a.pqIters} " +
-        s"subDim=${arts.model.subDim} coarseK=${a.pqCoarseK} " +
-        s"residual=${a.pqResidual} balancedPerm=${a.pqBalancedPerm} " +
-        s"refineM=${a.refineM} refineK=${a.refineK} out=$outd")
-      return 0
-    }
+        if (c.balancedPerm) Some(PqOps.balancedPerm(corpus, c.vecCol, c.m)) else None
+      val arts = PqOps.writePqArtifacts(
+        spark, corpus, c.vecCol, c.idCol, c.outDir,
+        c.m, c.k, c.iters, c.coarseK, c.iters,
+        residual = c.residual, perm = perm,
+        refineM = c.refineM, refineK = c.refineK)
+      out(s"PQ_ENCODE_ m=${c.m} k=${c.k} iters=${c.iters} " +
+        s"subDim=${arts.model.subDim} coarseK=${c.coarseK} " +
+        s"residual=${c.residual} balancedPerm=${c.balancedPerm} " +
+        s"refineM=${c.refineM} refineK=${c.refineK} out=${c.outDir}")
+      0
 
-    // Append mode: incremental PQ encode (E143) — today's crawl encoded
-    // against the PINNED codebooks + coarse quantizer (construction pin
-    // REQUIRE-matched; the E101 fitted-once discipline), landing in its
-    // own epoch partition with dynamic overwrite so at-least-once replay
-    // is idempotent (the E109 protocol).
-    if (a.pqAppend) {
-      val dir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException("--pq-append requires --corpus-dir P"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--pq-append requires --out-dir P"))
-      val epoch = a.pqEpoch.getOrElse(
-        throw new IllegalArgumentException("--pq-append requires --pq-epoch TOKEN"))
-      val batch = spark.read.parquet(dir)
-      val pending = graft.operators.PqOps.incrementalPqEncode(
-        spark, batch, a.vecCol, a.idCol, outd, epoch)
+    // Incremental PQ encode (E143) — today's crawl encoded against the
+    // PINNED codebooks + coarse quantizer (construction pin
+    // REQUIRE-matched), landing in its own epoch partition with dynamic
+    // overwrite so at-least-once replay is idempotent (the E109 protocol).
+    case c: PqAppend =>
+      val pending = PqOps.incrementalPqEncode(
+        spark, spark.read.parquet(c.corpusDir), c.vecCol, c.idCol, c.outDir, c.epoch)
       val n = pending.codes.count()
       pending.commitLedger()
-      out(s"PQ_APPEND_ epoch=$epoch lifetime_code_rows=$n out=$outd")
-      return 0
-    }
+      out(s"PQ_APPEND_ epoch=${c.epoch} lifetime_code_rows=$n out=${c.outDir}")
+      0
 
-    // Search mode: IVFADC over the stored artifacts (E142) — a queries
-    // parquet (idCol + vecCol) probed against the pinned store, top-k
-    // per query by ADC within the nprobe nearest cells, results written
-    // to a NEW directory. The codes scan partition-prunes to the probed
-    // cells; without --rerank no raw corpus vector is ever read. The
-    // search is ROUTED BY THE STORE'S PINNED FORMULATION (raw vs
-    // residual codes — round 14); --residual declares the caller's
-    // expectation and refuses a mismatched store. --rerank R makes it
-    // the production two-stage IVFADC+R (E145): shortlist top-R by ADC,
-    // exact re-rank from the --rerank-corpus raw vectors, cut to k —
-    // the exact pass touches only queries × R rows.
-    if (a.pqSearch) {
-      val qdir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException("--pq-search requires --corpus-dir P (the queries)"))
-      val store = a.pqStore.getOrElse(
-        throw new IllegalArgumentException("--pq-search requires --pq-store P"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--pq-search requires --out-dir P"))
-      require(a.rerank >= 0, s"--rerank must be non-negative: ${a.rerank}")
-      if (a.rerank > 0 && a.rerank < a.k)
-        throw new IllegalArgumentException(
-          s"--rerank ${a.rerank} must be >= --k ${a.k}: the exact pass re-ranks a " +
-            "SHORTLIST of R candidates and cuts it to k")
-      val arts = graft.operators.PqOps.readPqArtifacts(spark, store)
-      val queries = spark.read.parquet(qdir)
-        .select(org.apache.spark.sql.functions.col(a.idCol).as("query_id"),
-          org.apache.spark.sql.functions.col(a.vecCol))
-      val expect = if (a.pqResidual) Some(true) else None
-      // --rerank R with --rerank-corpus = E145 (exact pass over raw
-      // vectors); --rerank R WITHOUT it = E148 (re-rank from the store's
-      // refinement codes — no raw vector read anywhere), which requires
-      // a store built with --refine-m/--refine-k and refuses otherwise.
+    // IVFADC search over the stored artifacts (E142): top-k per query by
+    // ADC within the nprobe nearest cells, results written to a NEW
+    // directory. The search is ROUTED BY THE STORE'S PINNED FORMULATION
+    // (raw vs residual codes); --residual declares the caller's
+    // expectation and refuses a mismatched store. --rerank R with
+    // --rerank-corpus is the two-stage IVFADC+R (E145): shortlist top-R by
+    // ADC, exact re-rank from the raw vectors, cut to k. --rerank R
+    // WITHOUT it (E148) re-ranks from the store's refinement codes — no raw
+    // vector read anywhere — and refuses a store without them.
+    case c: PqSearch =>
+      val arts = PqOps.readPqArtifacts(spark, c.store)
+      val queries = spark.read.parquet(c.queriesDir)
+        .select(col(c.idCol).as("query_id"), col(c.vecCol))
+      val expect = if (c.residual) Some(true) else None
       val res =
-        if (a.rerank > 0) a.rerankCorpus match {
+        if (c.rerank > 0) c.rerankCorpus match {
           case Some(cdir) =>
-            val short = graft.operators.PqOps.searchArtifacts(
-              arts, a.idCol, queries, "query_id", a.vecCol,
-              topN = a.rerank, nprobe = a.nprobe, expectResidual = expect)
-            graft.operators.PqOps.refine(
-              short, spark.read.parquet(cdir), a.vecCol, a.idCol,
-              queries, "query_id", topN = a.k)
+            val short = PqOps.searchArtifacts(
+              arts, c.idCol, queries, "query_id", c.vecCol,
+              topN = c.rerank, nprobe = c.nprobe, expectResidual = expect)
+            PqOps.refine(
+              short, spark.read.parquet(cdir), c.vecCol, c.idCol,
+              queries, "query_id", topN = c.k)
           case None =>
-            graft.operators.PqOps.searchArtifactsRefined(
-              arts, a.idCol, queries, "query_id", a.vecCol,
-              topR = a.rerank, topN = a.k, nprobe = a.nprobe,
+            PqOps.searchArtifactsRefined(
+              arts, c.idCol, queries, "query_id", c.vecCol,
+              topR = c.rerank, topN = c.k, nprobe = c.nprobe,
               expectResidual = expect)
-        } else graft.operators.PqOps.searchArtifacts(
-          arts, a.idCol, queries, "query_id", a.vecCol,
-          topN = a.k, nprobe = a.nprobe, expectResidual = expect)
-      res.write.mode(SaveMode.Overwrite).parquet(outd)
-      val n = spark.read.parquet(outd).count()
-      out(s"PQ_SEARCH_ k=${a.k} nprobe=${a.nprobe} residual=${arts.residual} " +
-        s"rerank=${a.rerank} " +
-        s"rerankSource=${if (a.rerank == 0) "none" else if (a.rerankCorpus.isDefined) "corpus" else "codes"} " +
-        s"result_rows=$n out=$outd")
-      return 0
-    }
+        } else PqOps.searchArtifacts(
+          arts, c.idCol, queries, "query_id", c.vecCol,
+          topN = c.k, nprobe = c.nprobe, expectResidual = expect)
+      res.write.mode(SaveMode.Overwrite).parquet(c.outDir)
+      val n = spark.read.parquet(c.outDir).count()
+      out(s"PQ_SEARCH_ k=${c.k} nprobe=${c.nprobe} residual=${arts.residual} " +
+        s"rerank=${c.rerank} " +
+        s"rerankSource=${if (c.rerank == 0) "none" else if (c.rerankCorpus.isDefined) "corpus" else "codes"} " +
+        s"result_rows=$n out=${c.outDir}")
+      0
 
-    // Store-audit mode (E149): per-cell population + decode distortion
-    // from the stored codes' dist columns — the store's health report
-    // (hot cells = nprobe scan cost; high-error cells = poor codebook
-    // fit) without reading one raw corpus vector.
-    if (a.pqAudit) {
-      val store = a.pqStore.getOrElse(
-        throw new IllegalArgumentException("--pq-audit requires --pq-store P"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--pq-audit requires --out-dir P"))
-      val arts = graft.operators.PqOps.readPqArtifacts(spark, store)
-      val audit = graft.operators.PqOps.pqAudit(arts, a.idCol)
-      audit.write.mode(SaveMode.Overwrite).parquet(outd)
-      val rows = spark.read.parquet(outd)
-        .select(org.apache.spark.sql.functions.col("population"))
+    // Store audit (E149): per-cell population + decode distortion from the
+    // stored codes' dist columns — the store's health report without
+    // reading one raw corpus vector.
+    case c: PqAudit =>
+      val arts = PqOps.readPqArtifacts(spark, c.store)
+      PqOps.pqAudit(arts, c.idCol).write.mode(SaveMode.Overwrite).parquet(c.outDir)
+      val rows = spark.read.parquet(c.outDir)
+        .select(col("population"))
         .collect().map(_.getLong(0))
       val (cells, pop) = (rows.length, rows.sum)
       val skew = if (rows.isEmpty) 0.0 else rows.max.toDouble * cells / math.max(1L, pop)
       out(f"PQ_AUDIT_ cells=$cells population=$pop maxCellSkew=$skew%.2f " +
-        s"refined=${arts.refinement.isDefined} out=$outd")
-      return 0
-    }
+        s"refined=${arts.refinement.isDefined} out=${c.outDir}")
+      0
 
-    // Rebalance mode (E150/E151): split the store's hot cells
-    // (population > --max-cell) by a local per-cell k-means into a FRESH
-    // store dir with the pinned codebooks reused — pure cell surgery on
-    // a raw store; on a residual store the split cells' members
-    // re-encode against their new child centroids (cost ∝ hot members).
-    if (a.pqRebalance) {
-      val store = a.pqStore.getOrElse(
-        throw new IllegalArgumentException("--pq-rebalance requires --pq-store P"))
-      val cdir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException(
-          "--pq-rebalance requires --corpus-dir P (the raw vectors — the " +
-            "split re-fits hot cells)"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--pq-rebalance requires --out-dir NEW"))
-      val (arts, nHot) = graft.operators.PqOps.rebalanceStore(
-        spark, store, spark.read.parquet(cdir), a.vecCol, a.idCol,
-        outd, a.maxCell, a.pqIters)
+    // Rebalance (E150/E151): split the store's hot cells (population >
+    // --max-cell) by a local per-cell k-means into a FRESH store dir with
+    // the pinned codebooks reused.
+    case c: PqRebalance =>
+      val (arts, nHot) = PqOps.rebalanceStore(
+        spark, c.store, spark.read.parquet(c.corpusDir), c.vecCol, c.idCol,
+        c.outDir, c.maxCell, c.iters)
       out(s"PQ_REBALANCE_ hotCells=$nHot coarseK=${arts.coarse.length} " +
-        s"maxCell=${a.maxCell} out=$outd")
-      return 0
-    }
+        s"maxCell=${c.maxCell} out=${c.outDir}")
+      0
 
     // PQ epoch fold (E152): collapse committed `epoch<N>` code partitions
-    // into base — the same checkpoint-derived replay horizon as
-    // --fold-epochs (a committed batch never re-executes), applied to
-    // both code namespaces in lockstep. The merged write is a full-row
-    // distinct of deterministic rows, so a crashed fold converges on
-    // re-run.
-    if (a.pqFold) {
-      val store = a.pqStore.getOrElse(
-        throw new IllegalArgumentException("--pq-fold requires --pq-store P"))
-      val ckpt = a.checkpointDir.getOrElse(
-        throw new IllegalArgumentException("--pq-fold requires --checkpoint P"))
-      val horizon = graft.operators.MaintenanceOps.lastCommittedBatch(spark, ckpt)
-        .getOrElse(throw new IllegalStateException(
-          s"no commit log at $ckpt/commits - cannot establish a replay horizon, refusing to fold"))
-      val rs = graft.operators.PqOps.foldPqEpochs(spark, store, horizon)
+    // into base, both code namespaces in lockstep. The merged write is a
+    // full-row distinct of deterministic rows, so a crashed fold converges
+    // on re-run.
+    case c: PqFold =>
+      val horizon = replayHorizon(spark, c.checkpoint)
+      val rs = PqOps.foldPqEpochs(spark, c.store, horizon)
       out(s"PQ_FOLD_ upTo=$horizon " + rs.toSeq.sortBy(_._1).map { case (ns, r) =>
         s"$ns:files=${r.filesBefore}->${r.filesAfter},rows=${r.rows}"
       }.mkString(" "))
-      return 0
-    }
+      0
 
     // Recall audit (E154): recall@k of the store's pinned searcher vs
-    // exact L2 ground truth on a deterministic query sample from the
-    // corpus — the AccuracySpec measurement operationalized against the
-    // store an owner actually runs. Prints the number WITH the store's
-    // construction pin: recall without provenance is noise.
-    if (a.annRecall) {
-      val store = a.pqStore.getOrElse(
-        throw new IllegalArgumentException("--ann-recall requires --pq-store P"))
-      val cdir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException(
-          "--ann-recall requires --corpus-dir P (the raw vectors — exact " +
-            "ground truth needs them)"))
-      val arts = graft.operators.PqOps.readPqArtifacts(spark, store)
-      val r = graft.operators.PqOps.annRecall(
-        arts, spark.read.parquet(cdir), a.vecCol, a.idCol,
-        k = a.k, nQueries = a.nQueries, nprobe = a.nprobe, topR = a.rerank)
-      out(f"ANN_RECALL_ k=${a.k} nprobe=${a.nprobe} queries=${a.nQueries} " +
-        s"rerank=${a.rerank} recall=$r " +
-        s"pin=[${graft.operators.PqOps.pinLine(spark, store)}]")
-      return 0
-    }
+    // exact L2 ground truth on a deterministic query sample, printed WITH
+    // the store's construction pin: recall without provenance is noise.
+    case c: AnnRecall =>
+      val r = PqOps.annRecall(
+        PqOps.readPqArtifacts(spark, c.store), spark.read.parquet(c.corpusDir),
+        c.vecCol, c.idCol, k = c.k, nQueries = c.nQueries, nprobe = c.nprobe, topR = c.rerank)
+      out(f"ANN_RECALL_ k=${c.k} nprobe=${c.nprobe} queries=${c.nQueries} " +
+        s"rerank=${c.rerank} recall=$r " +
+        s"pin=[${PqOps.pinLine(spark, c.store)}]")
+      0
 
-    // Recall audit for the DEDUP ledgers (E155): the E154 gate's twin
-    // for the text/SRP near-dup paths — exact Jaccard/cosine ground
-    // truth on a deterministic sample vs the banded candidate path at
-    // the LEDGER's pinned construction. The space is read off the
-    // ledger's own pin file; both spaces measure against --corpus-dir
-    // (the docs/vectors the pipeline INGESTS — the ledgers hold
-    // survivors, a selection-biased audit base; the SRP pin contributes
-    // its own verify threshold, the MinHash space takes --min-jaccard).
-    if (a.dedupRecall) {
-      val ledger = a.ledgerDir.getOrElse(
-        throw new IllegalArgumentException("--dedup-recall requires --ledger P"))
-      val lp = new org.apache.hadoop.fs.Path(ledger)
-      val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def pinExists(name: String) =
-        fs.exists(new org.apache.hadoop.fs.Path(ledger, name))
-      val dir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException(
-          "--dedup-recall requires --corpus-dir P (the docs/vectors the " +
-            "pipeline ingests — the ledger holds survivors only, a " +
-            "selection-biased audit base)"))
+    // Dedup-ledger recall audit (E155): exact Jaccard/cosine ground truth
+    // on a deterministic sample vs the banded candidate path at the
+    // LEDGER's pinned construction. The space is read off the ledger's own
+    // pin file; the SRP pin contributes its own verify threshold, the
+    // MinHash space takes --min-jaccard.
+    case c: DedupRecall =>
+      val fs = new org.apache.hadoop.fs.Path(c.ledger)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def pinExists(name: String) = fs.exists(new org.apache.hadoop.fs.Path(c.ledger, name))
       val r =
-        if (pinExists(graft.operators.SrpOps.MetaFile))
-          graft.operators.SrpOps.dedupRecall(spark, ledger,
-            spark.read.parquet(dir), a.vecCol, a.idCol, a.nQueries)
-        else if (pinExists(graft.operators.LshOps.MetaFile))
-          graft.operators.LshOps.dedupRecall(spark, ledger,
-            spark.read.parquet(dir), a.textCol, a.idCol,
-            a.minJaccard, a.nQueries)
+        if (pinExists(SrpOps.MetaFile))
+          SrpOps.dedupRecall(spark, c.ledger,
+            spark.read.parquet(c.corpusDir), c.vecCol, c.idCol, c.nQueries)
+        else if (pinExists(LshOps.MetaFile))
+          LshOps.dedupRecall(spark, c.ledger,
+            spark.read.parquet(c.corpusDir), c.textCol, c.idCol, c.minJaccard, c.nQueries)
         else throw new IllegalArgumentException(
-          s"$ledger carries neither ${graft.operators.LshOps.MetaFile} nor " +
-            s"${graft.operators.SrpOps.MetaFile} — not a band ledger, or " +
+          s"${c.ledger} carries neither ${LshOps.MetaFile} nor " +
+            s"${SrpOps.MetaFile} — not a band ledger, or " +
             "its construction pin is lost (restore it; the audit refuses " +
             "to band at guessed parameters)")
       out(s"DEDUP_RECALL_ queries=${r.nQueries} withTruth=${r.queriesWithTruth} " +
         s"truePairs=${r.truePairs} matched=${r.matchedPairs} " +
         s"recall=${r.recall} pin=[${r.pin}]")
-      return 0
-    }
+      0
 
-    // Audit mode: the EXACT near-dup pair report (E131) — every pair with
-    // shingle-set Jaccard >= tau, provably complete (prefix-filtered, not
-    // banded), shingle width from the corpus-regime rule. Writes the
-    // (doc_a, doc_b, jaccard) parquet to a NEW directory; acting on it
-    // (purge, cluster, delete) stays the caller's explicit step.
-    if (a.exactNeardup) {
-      val dir = a.corpusDir.getOrElse(
-        throw new IllegalArgumentException("--exact-neardup requires --corpus-dir P"))
-      val outd = a.outDir.getOrElse(
-        throw new IllegalArgumentException("--exact-neardup requires --out-dir P"))
-      val docs = spark.read.parquet(dir)
-      val n = graft.operators.LshOps.autoShingleN(docs, a.textCol)
-      val pairs = graft.operators.SetJoinOps.prefixJaccardJoin(
-        docs.select(org.apache.spark.sql.functions.col(a.idCol),
-          graft.functions.TextFunctions.shingles(
-            org.apache.spark.sql.functions.col(a.textCol), n).as("_sh")),
-        a.idCol, "_sh", a.tau)
-      pairs.write.mode(SaveMode.Overwrite).parquet(outd)
-      out(s"EXACT_NEARDUP_ tau=${a.tau} shingleN=$n pairs=${pairs.count()} out=$outd")
-      return 0
-    }
+    // The EXACT near-dup pair report (E131) — every pair with shingle-set
+    // Jaccard >= tau, provably complete (prefix-filtered, not banded),
+    // shingle width from the corpus-regime rule. Acting on it (purge,
+    // cluster, delete) stays the caller's explicit step.
+    case c: ExactNeardup =>
+      val docs = spark.read.parquet(c.corpusDir)
+      val n = LshOps.autoShingleN(docs, c.textCol)
+      val pairs = SetJoinOps.prefixJaccardJoin(
+        docs.select(col(c.idCol),
+          graft.functions.TextFunctions.shingles(col(c.textCol), n).as("_sh")),
+        c.idCol, "_sh", c.tau)
+      pairs.write.mode(SaveMode.Overwrite).parquet(c.outDir)
+      out(s"EXACT_NEARDUP_ tau=${c.tau} shingleN=$n pairs=${pairs.count()} out=${c.outDir}")
+      0
+  }
 
-    if (a.stream) return runStream(a, spark, out, log)
-
-    // Connection resolution is PER SIDE: an explicit override wins and its
-    // side's config (env vars, JDBC creds) is never consulted — overriding
-    // only --sink must not demand GRAFT_SINK or TARGET_DB_* to exist.
-    val source = a.sourceOverride
-      .map(PipelineConfig.parseEndpoint).map { case (f, l) => Connectors.source(f, l) }
-      .getOrElse(PipelineConfig.loadEndpoint(a.env, "SOURCE", getenv).asSource)
-    val sink = a.sinkOverride
-      .map(PipelineConfig.parseEndpoint).map { case (f, l) => Connectors.sink(f, l) }
-      .getOrElse(PipelineConfig.loadEndpoint(a.env, "TARGET", getenv).asSink)
+  private def runCopy(
+      a: Copy,
+      spark: SparkSession,
+      getenv: String => Option[String],
+      out: String => Unit,
+      log: String => Unit): Int = {
+    val source = sourceOf(a.env, a.source, getenv)
+    val sink = sinkOf(a.env, a.sink, getenv)
 
     val requested =
       if (a.tableArg.equalsIgnoreCase("all")) None
@@ -792,7 +711,7 @@ object GraftApp {
     }
     log(s"tables to process: ${specs.map(_.tableName).mkString(", ")}")
 
-    val store = StateStore(a.statePath.getOrElse("graft_state.properties"))
+    val store = StateStore(a.statePath)
     // Watermark injection: when the orchestrator supplies
     // LAST_WATERMARK_<TABLE>, that value IS this run's watermark — it
     // overrides stored state for the READ, exactly as in the reference
@@ -826,7 +745,7 @@ object GraftApp {
     if (a.strict && report.failed.nonEmpty) 1 else 0
   }
 
-  /** Streaming ingest mode (`--stream`) — the sandbox analogue of the
+  /** Streaming ingest (`--stream`) — the sandbox analogue of the
     * reference's SCHEDULED incremental runs (`dags/…incremental.py`: a
     * daily drain of whatever arrived since the last run). Each invocation
     * starts a file-stream over the source directory with
@@ -835,40 +754,23 @@ object GraftApp {
     * the CLI exactly as it calls the batch mode, and the checkpoint plays
     * the watermark's role for files.
     *
-    * Every micro-batch flows through
+    * Every dedup micro-batch flows through a ledger drain such as
     * [[graft.streaming.StreamingOps.foreachBatchLedgerDedup]]: corpus-wide
-    * exact dedup against the persistent fingerprint ledger, an epoch-keyed
-    * idempotent sink write, then the ledger commit — so a crash at ANY
-    * point (including after the sink write but before the checkpoint
-    * commit) replays the epoch onto itself: exactly-once corpus output
-    * across restarts (GraftAppSpec simulates the crash by deleting the
-    * checkpoint's last commit marker).
+    * dedup against the persistent ledger, an epoch-keyed idempotent sink
+    * write, then the ledger commit — so a crash at ANY point (including
+    * after the sink write but before the checkpoint commit) replays the
+    * epoch onto itself: exactly-once corpus output across restarts
+    * (StreamAppSpec simulates the crash by deleting the checkpoint's last
+    * commit marker).
     */
-  private def runStream(
-      a: Args,
+  private def drain(
       spark: SparkSession,
+      table: String,
+      srcDir: String,
+      ckpt: String,
       out: String => Unit,
-      log: String => Unit): Int = {
-    // Conflicting stream modes refuse loudly (the typo'd-flag rule):
-    // the PQ drain has no fingerprint ledger or corpus sink, so a
-    // --ledger (or --sink) alongside --pq-store means the caller
-    // expected the dedup pipeline — running the other one silently
-    // would discard the work they asked for.
-    if (a.pqStore.isDefined && (a.ledgerDir.isDefined || a.sinkOverride.isDefined))
-      throw new IllegalArgumentException(
-        "--stream --pq-store is the PQ-ingest drain (no ledger, no sink); " +
-          "it cannot combine with --ledger/--sink — pick ONE stream mode")
-    def need(v: Option[String], what: String): String = v.getOrElse(
-      throw new IllegalArgumentException(s"--stream requires $what"))
-    val (srcFmt, srcDir) =
-      PipelineConfig.parseEndpoint(need(a.sourceOverride, "--source parquet:<dir>"))
-    if (srcFmt != "parquet")
-      throw new IllegalArgumentException(
-        s"stream mode reads a parquet file-stream directory; got --source $srcFmt")
-    val table = a.tableArg
-    if (table.equalsIgnoreCase("all") || table.contains(","))
-      throw new IllegalArgumentException("stream mode ingests ONE table; got: " + table)
-    val ckpt = need(a.checkpointDir, "--checkpoint <dir> (streaming checkpoint)")
+      log: String => Unit)(
+      through: DataStreamWriter[Row] => DataStreamWriter[Row]): Int = {
     // File streams need an explicit schema; take it from the files already
     // present (a directory with no files yet has nothing to ingest anyway).
     val schema =
@@ -880,41 +782,8 @@ object GraftApp {
     val writer = spark.readStream.schema(schema).parquet(srcDir)
       .writeStream
       .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    // --pq-store selects the PQ-ingest drain (round 14): each epoch
-    // encodes against the store's pinned model and dynamic-overwrites
-    // its own codes partitions — the store is the product, so no sink
-    // or fingerprint ledger is involved. Otherwise --dedup selects the
-    // corpus-wide ledger operator the drain flows through: exact
-    // fingerprints (default), MinHash band near-dup, the cosine-verified
-    // SRP embedding near-dup, or k-means SemDeDup against a pinned
-    // model — all sharing the epoch-replay exactly-once protocol.
-    val q = (a.pqStore match {
-      case Some(store) =>
-        graft.streaming.StreamingOps.foreachBatchLedgerPqEncode(
-          writer, a.vecCol, a.idCol, store)
-      case None =>
-        val (skFmt, skLoc) = PipelineConfig.parseEndpoint(
-          need(a.sinkOverride, "--sink parquet-idempotent:<dir>"))
-        val idem = Connectors.sink(skFmt, skLoc) match {
-          case s: IdempotentSink => s
-          case other => throw new IllegalArgumentException(
-            "stream mode needs an idempotent sink (an epoch replay must REPLACE " +
-              s"its partial write, not append it twice); got ${other.getClass.getSimpleName} " +
-              "— use --sink parquet-idempotent:<dir>")
-        }
-        val ledger = need(a.ledgerDir, "--ledger <dir> (persistent fingerprint ledger)")
-        a.dedup match {
-          case "exact" => graft.streaming.StreamingOps.foreachBatchLedgerDedup(
-            writer, a.textCol, a.idCol, ledger, idem, table)
-          case "neardup" => graft.streaming.StreamingOps.foreachBatchLedgerNeardup(
-            writer, a.textCol, a.idCol, ledger, idem, table)
-          case "embed" => graft.streaming.StreamingOps.foreachBatchLedgerNeardupVec(
-            writer, a.vecCol, a.idCol, ledger, idem, table, minCos = a.minCos)
-          case "semantic" => graft.streaming.StreamingOps.foreachBatchLedgerSemantic(
-            writer, a.vecCol, a.idCol, ledger, idem, table, k = a.k, minCos = a.minCos)
-        }
-    }).start()
+      .trigger(Trigger.AvailableNow())
+    val q = through(writer).start()
     q.awaitTermination() // AvailableNow: returns once the backlog is drained
     // An idle drain still emits a zero-row progress event carrying the last
     // batch id — only batches that moved rows count as epochs.
@@ -927,11 +796,11 @@ object GraftApp {
   def main(argv: Array[String]): Unit = {
     val code =
       try {
-        val a = parseArgs(argv.toIndexedSeq)
+        val cmd = parseArgs(argv.toIndexedSeq)
         val spark = graft.GraftSession
           .builder(s"local[${graft.GraftSession.defaultCpus}]")
           .getOrCreate()
-        try run(a, spark)
+        try run(cmd, spark)
         finally spark.stop()
       } catch {
         case e: Throwable =>

@@ -23,12 +23,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
 
-  /** E41 sliding-window counts. */
-  def slidingAgg(df: DataFrame, tsCol: String, dur: String, slide: String): DataFrame =
-    df.groupBy(window(col(tsCol), dur, slide).as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("n"))
-
   /** E42 session windows per user (gap-based). */
   def sessionAgg(df: DataFrame, tsCol: String, gap: String): DataFrame =
     df.groupBy(session_window(col(tsCol), gap).as("w"), col("user_id"))
@@ -515,15 +509,4 @@ object StreamingOps {
           }
       }
   }
-
-  /** E45 incremental-batch CDC step as a streaming-shaped helper: read the
-    * suffix after the stored watermark, return (delta, newWatermark). The
-    * caller commits the sink, then advances state — same ordering contract
-    * as [[graft.pipeline.CopyJob]].
-    */
-  def cdcDelta(df: DataFrame, wmCol: String, state: graft.pipeline.WatermarkState, table: String): DataFrame =
-    state.get(table) match {
-      case Some(v) => df.filter(col(wmCol) > lit(v).cast(df.schema(wmCol).dataType))
-      case None    => df
-    }
 }

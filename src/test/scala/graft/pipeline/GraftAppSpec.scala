@@ -197,16 +197,14 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
 
     def cli(extra: String*): (Int, Seq[String]) = {
       val outs = scala.collection.mutable.ArrayBuffer.empty[String]
-      val args = GraftApp.parseArgs(Seq(
-        "dev", "documents", "--source", s"parquet:$src",
-        "--export-dir", out, "--shards", "4") ++ extra)
+      val args = GraftApp.parseArgs(Seq("dev", "documents", "--export-dir", out) ++ extra)
       val code = GraftApp.run(args, spark, getenv = _ => None,
         out = outs.append(_), log = _ => ())
       (code, outs.toSeq)
     }
 
     // Export writes, then immediately verifies what it just wrote.
-    val (code, lines) = cli("--export-shards")
+    val (code, lines) = cli("--export-shards", "--source", s"parquet:$src", "--shards", "4")
     assert(code == 0 && lines.exists(_.startsWith("EXPORT_SHARDS_"))
       && lines.exists(_.startsWith("VERIFY_EXPORT_")), lines.mkString("; "))
 
@@ -409,8 +407,10 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
         "--audit-dir", audit, "--key-recipe", "fp", "--key-col", "_graft_fp"))
     assert(e2.getMessage.contains("not applicable"), e2.getMessage)
     // An unknown recipe refuses at the parser.
-    intercept[IllegalArgumentException](
-      GraftApp.parseArgs(Seq("dev", "corpus", "--key-recipe", "nope")))
+    val e3 = intercept[IllegalArgumentException](
+      GraftApp.parseArgs(Seq("dev", "corpus", "--delete-ids", "2", "--ledger", ledger,
+        "--corpus-dir", corpus, "--audit-dir", audit, "--key-recipe", "nope")))
+    assert(e3.getMessage.contains("--key-recipe: nope"), e3.getMessage)
   }
 
   test("--ann-recall prints the pinned searcher's recall@k, bit-equal to the API") {
@@ -926,6 +926,11 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
     intercept[IllegalArgumentException](cli("--exact-neardup", "--corpus-dir", corpus))
   }
 
+  private def copyOf(argv: String*): GraftApp.Command.Copy = GraftApp.parseArgs(argv) match {
+    case c: GraftApp.Command.Copy => c
+    case other => fail(s"expected the copy command, got $other")
+  }
+
   test("arg parsing: usage errors and flag forms") {
     intercept[IllegalArgumentException](GraftApp.parseArgs(Seq("dev")))
     intercept[IllegalArgumentException](GraftApp.parseArgs(Seq("dev", "all", "--mode", "upsert")))
@@ -933,13 +938,112 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
     val e = intercept[IllegalArgumentException](
       GraftApp.parseArgs(Seq("dev", "all", "--parallellism", "16")))
     assert(e.getMessage.contains("--parallellism"))
-    val a = GraftApp.parseArgs(Seq("dev", "a,b", "--mode", "overwrite",
-      "--parallelism", "2", "--table-timeout-sec", "30"))
+    val a = copyOf("dev", "a,b", "--mode", "overwrite",
+      "--parallelism", "2", "--table-timeout-sec", "30")
     assert(a.mode == SaveMode.Overwrite && a.parallelism == 2)
     assert(a.tableTimeout.toSeconds == 30L)
     // --strict is valueless and must not swallow the following token.
-    val b = GraftApp.parseArgs(Seq("dev", "all", "--strict", "--parallelism", "3"))
+    val b = copyOf("dev", "all", "--strict", "--parallelism", "3")
     assert(b.strict && b.parallelism == 3)
-    assert(!GraftApp.parseArgs(Seq("dev", "all")).strict)
+    assert(!copyOf("dev", "all").strict)
+
+    // One invocation runs ONE command: no mode silently shadows another,
+    // and a flag the chosen command does not read refuses, naming it.
+    // All of these refuse in parseArgs alone, before any session exists.
+    def refuse(argv: String*): String =
+      intercept[IllegalArgumentException](GraftApp.parseArgs(argv)).getMessage
+    val two = refuse("dev", "all", "--compact-ledger", "--ledger", "L",
+      "--fold-epochs", "--checkpoint", "C")
+    assert(two.contains("--compact-ledger") && two.contains("--fold-epochs"), two)
+    val dedup = refuse("dev", "all", "--dedup", "neardup")
+    assert(dedup.contains("copy") && dedup.contains("--dedup"), dedup)
+    val ledger = refuse("dev", "all", "--ledger", "L")
+    assert(ledger.contains("copy") && ledger.contains("--ledger"), ledger)
+    val pqLedger = refuse("dev", "corpus", "--delete-ids", "1", "--audit-dir", "A",
+      "--pq-store", "P", "--ledger", "L")
+    assert(pqLedger.contains("--delete-ids --pq-store") && pqLedger.contains("--ledger"),
+      pqLedger)
+    val shards = refuse("dev", "docs", "--verify-export", "--export-dir", "P", "--shards", "4")
+    assert(shards.contains("--verify-export") && shards.contains("--shards"), shards)
+  }
+
+  test("arg parsing: one accepted argument vector per command") {
+    import GraftApp.Command._
+    import Connectors.{IdempotentParquetSink, ParquetSink, ParquetSource}
+    import scala.concurrent.duration.Duration
+    val cases: Seq[(Seq[String], GraftApp.Command)] = Seq(
+      // The four invocation shapes the end-to-end benchmark sends.
+      Seq("dev", "all", "--tables-list-path", "cat", "--source", "parquet:/s",
+        "--sink", "parquet:/d/sink", "--state", "/d/state.properties",
+        "--parallelism", "4", "--strict") ->
+        Copy("dev", "all", "cat", Some(ParquetSource("/s")), Some(ParquetSink("/d/sink")),
+          "/d/state.properties", SaveMode.Append, 4, Duration.Inf, strict = true),
+      Seq("dev", "docs", "--stream", "--dedup", "neardup", "--source", "parquet:/src",
+        "--sink", "parquet-idempotent:/cur", "--ledger", "/led", "--checkpoint", "/ck",
+        "--strict") ->
+        StreamDedup("docs", "/src", IdempotentParquetSink("/cur"), "/led", "/ck", "neardup",
+          "text", "doc_id", "embedding", 0.9, 8),
+      Seq("dev", "docs", "--compact-ledger", "--ledger", "/led") -> CompactLedger("/led"),
+      Seq("dev", "docs", "--export-shards", "--source", "parquet:/cur", "--export-dir", "/x",
+        "--id-col", "doc_id", "--content-cols", "text", "--shards", "16", "--seed", "3",
+        "--strict") ->
+        ExportShards("dev", "docs", Some(ParquetSource("/cur")), "/x", "doc_id", Seq("text"),
+          16, 3L),
+      // Every other command, with its defaults.
+      Seq("prod", "vecs", "--stream", "--pq-store", "/pq", "--source", "parquet:/in",
+        "--checkpoint", "/ck", "--id-col", "vec_id") ->
+        StreamPq("vecs", "/in", "/pq", "/ck", "embedding", "vec_id"),
+      Seq("dev", "all", "--fold-epochs", "--ledger", "/led", "--checkpoint", "/ck") ->
+        FoldEpochs("/led", "/ck"),
+      Seq("dev", "docs", "--verify-export", "--export-dir", "/x", "--content-cols", "a, b") ->
+        VerifyExport("/x", "doc_id", Seq("a", "b"), 7L),
+      Seq("dev", "docs", "--scrub-spans", "--mode", "overwrite", "--span-tokens", "3") ->
+        ScrubSpans("dev", "docs", None, None, SaveMode.Overwrite, "text", "doc_id", 3, 2),
+      Seq("dev", "docs", "--epoch-shuffle", "2", "--sink", "parquet:/e") ->
+        EpochShuffle("dev", "docs", None, Some(ParquetSink("/e")), SaveMode.Append,
+          "doc_id", 2L),
+      Seq("dev", "c", "--delete-ids", "3,4", "--pq-store", "/pq", "--audit-dir", "/a") ->
+        DeletePq(Seq(3L, 4L), "/a", "/pq", "doc_id"),
+      Seq("dev", "c", "--delete-ids", "3", "--ledger", "/l", "--corpus-dir", "/c",
+        "--audit-dir", "/a", "--key-col", "_graft_vec") ->
+        DeleteLedger(Seq(3L), "/a", "/l", "/c", Some("_graft_vec"), "text", "embedding",
+          "doc_id", hashAudit = false),
+      Seq("dev", "c", "--delete-ids", "3", "--ledger", "/l", "--corpus-dir", "/c",
+        "--audit-dir", "/a", "--key-recipe", "fp", "--hash-audit") ->
+        DeleteLedger(Seq(3L), "/a", "/l", "/c", None, "text", "embedding", "doc_id",
+          hashAudit = true),
+      Seq("dev", "c", "--delete-ids", "5,6", "--corpus-dir", "/c", "--audit-dir", "/a") ->
+        DeleteCorpus(Seq(5L, 6L), "/a", "/c", "doc_id"),
+      Seq("dev", "c", "--zorder", "a,b", "--corpus-dir", "/c", "--out-dir", "/o") ->
+        Zorder(Seq("a", "b"), "/c", "/o", 16, 64),
+      Seq("dev", "c", "--heavy-hitters", "text", "--tokenize", "--corpus-dir", "/c",
+        "--out-dir", "/o") -> HeavyHitters("text", "/c", "/o", 4096, 8, tokenize = true),
+      Seq("dev", "c", "--pq-encode", "--corpus-dir", "/c", "--out-dir", "/o",
+        "--refine-m", "4", "--refine-k", "16", "--residual") ->
+        PqEncode("/c", "/o", "embedding", "doc_id", 4, 256, 2, 256, residual = true,
+          balancedPerm = false, 4, 16),
+      Seq("dev", "c", "--pq-append", "--corpus-dir", "/c", "--out-dir", "/o",
+        "--pq-epoch", "b2") -> PqAppend("/c", "/o", "b2", "embedding", "doc_id"),
+      Seq("dev", "c", "--pq-search", "--corpus-dir", "/q", "--pq-store", "/pq",
+        "--out-dir", "/o", "--rerank", "8", "--rerank-corpus", "/c") ->
+        PqSearch("/q", "/pq", "/o", "embedding", "doc_id", 8, 1, residual = false, 8,
+          Some("/c")),
+      Seq("dev", "c", "--pq-audit", "--pq-store", "/pq", "--out-dir", "/o") ->
+        PqAudit("/pq", "/o", "doc_id"),
+      Seq("dev", "c", "--pq-rebalance", "--pq-store", "/pq", "--corpus-dir", "/c",
+        "--out-dir", "/o", "--max-cell", "8") ->
+        PqRebalance("/pq", "/c", "/o", "embedding", "doc_id", 8L, 2),
+      Seq("dev", "c", "--pq-fold", "--pq-store", "/pq", "--checkpoint", "/ck") ->
+        PqFold("/pq", "/ck"),
+      Seq("dev", "c", "--ann-recall", "--pq-store", "/pq", "--corpus-dir", "/c",
+        "--queries", "4") -> AnnRecall("/pq", "/c", "embedding", "doc_id", 8, 4, 1, 0),
+      Seq("dev", "c", "--dedup-recall", "--ledger", "/l", "--corpus-dir", "/c") ->
+        DedupRecall("/l", "/c", "text", "embedding", "doc_id", 0.8, 20),
+      Seq("dev", "c", "--exact-neardup", "--corpus-dir", "/c", "--out-dir", "/o",
+        "--tau", "0.7") -> ExactNeardup("/c", "/o", "text", "doc_id", 0.7))
+    for ((argv, want) <- cases)
+      assert(GraftApp.parseArgs(argv) == want, argv.mkString(" "))
+    // All 23 commands are covered (the ledger delete twice: vec and fp).
+    assert(cases.map(_._2.getClass).distinct.size == 23)
   }
 }
