@@ -1,6 +1,12 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Source/sink registry — Spark-native version of the reference's connector
   * factories (`/root/reference/util.py:276-335`), which dispatch on a
@@ -37,16 +43,73 @@ object Connectors {
     * layout probe goes through the Hadoop FileSystem API so it honors the
     * path's scheme — a `java.nio` probe would be always-false for
     * `hdfs://`/`s3a://` base dirs (the actual cluster deployment shape) and
-    * silently misread directory-per-table layouts.
+    * silently misread directory-per-table layouts. The schema is read on
+    * the driver from one footer ([[readParquet]]), so `read` starts no
+    * Spark job.
     */
   final case class ParquetSource(baseDir: String) extends Source {
     def read(spark: SparkSession, table: String): DataFrame = {
-      val dir = new org.apache.hadoop.fs.Path(s"$baseDir/$table")
+      val dir = new Path(s"$baseDir/$table")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val p = if (fs.exists(dir)) dir.toString else s"$baseDir/$table.parquet"
-      spark.read.parquet(p)
+      readParquet(spark, p)
     }
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark's
+    * non-merging inference reads exactly one footer — the first data file
+    * in path order — but inside a one-task job. Here that footer is read on
+    * the driver and converted by Spark's own `readSchemaFromFooter`, and the
+    * result is handed to the reader as its schema; partition columns are
+    * still discovered from the paths. Falls back to plain
+    * `spark.read.parquet` when Spark would read something else: schema
+    * merging is on, a `_metadata`/`_common_metadata` summary file sits on
+    * the way to the first data file, a file column repeats a partition
+    * column, or there is no data file (then Spark raises its own error).
+    */
+  private[pipeline] def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    if (sqlConf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    // Spark's file index hides `_x` (but not `_k=v` partition directories)
+    // and `.x` names and in-flight copies; summary files are `_x` names.
+    def visible(s: FileStatus) = {
+      val n = s.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    }
+    var summary = false
+    // Depth-first in name order, a directory sorting as `name/`, visits
+    // files in the full-path order Spark's inference sorts them by.
+    def firstFile(dir: Path): Option[FileStatus] = {
+      val entries = fs.listStatus(dir)
+      summary ||= entries.exists(e => SummaryFiles(e.getPath.getName))
+      entries.filter(visible).sortBy(e => e.getPath.getName + (if (e.isDirectory) "/" else ""))
+        .iterator.flatMap(e => if (e.isDirectory) firstFile(e.getPath) else Some(e)).nextOption()
+    }
+    val first =
+      try { val st = fs.getFileStatus(root); if (st.isDirectory) firstFile(root) else Some(st) }
+      catch { case _: java.io.FileNotFoundException => None }
+    first.filterNot(_ => summary).flatMap { st =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, footer), new ParquetToSparkSchemaConverter(sqlConf))
+      // A column that is also a partition directory keeps its data-file
+      // position under inference but moves last under a given schema.
+      val partitionKeys = Iterator.iterate(st.getPath.getParent)(_.getParent)
+        .take(st.getPath.depth - root.depth - 1)
+        .map(_.getName).filter(_.contains("=")).map(_.takeWhile(_ != '=')).toSeq
+      if (schema.fieldNames.exists(f => partitionKeys.exists(_.equalsIgnoreCase(f)))) None
+      else Some(schema)
+    }
+  }
+
+  private val SummaryFiles = Set("_metadata", "_common_metadata")
 
   final case class CsvSource(baseDir: String, header: Boolean = true) extends Source {
     def read(spark: SparkSession, table: String): DataFrame =
@@ -131,7 +194,7 @@ object Connectors {
     * scan-shape guarantees elsewhere in this file carry over unchanged. */
   final case class OrcSource(baseDir: String) extends Source {
     def read(spark: SparkSession, table: String): DataFrame = {
-      val dir = new org.apache.hadoop.fs.Path(s"$baseDir/$table")
+      val dir = new Path(s"$baseDir/$table")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val p = if (fs.exists(dir)) dir.toString else s"$baseDir/$table.orc"
       spark.read.orc(p)

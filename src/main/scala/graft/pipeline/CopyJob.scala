@@ -56,11 +56,14 @@ object CopyJob {
     // Incremental runs (an existing watermark pushed into the scan) probe
     // the delta with a limit-1 existence check BEFORE writing: the common
     // steady-state is "no new rows", and skipping the write entirely keeps
-    // sinks free of empty parquet parts (the reference skips the load too,
-    // app.py:147-153). The probe reads at most one row off the
-    // pushed-filtered scan — negligible next to the write it avoids.
-    // Initial full loads skip the probe: they are never empty in practice
-    // and the probe would be a wasted scan start-up.
+    // empty deltas out of the sink (the reference skips the load too,
+    // app.py:147-153). It does not keep every empty part out: Spark's file
+    // writer always opens a file for task 0, so a non-empty delta whose
+    // rows all sit in later tasks still leaves a 0-row `part-00000`. The
+    // probe reads at most one row off the pushed-filtered scan — negligible
+    // next to the write it avoids. Initial full loads skip the probe: they
+    // are never empty in practice and the probe would be a wasted scan
+    // start-up.
     if (wm.isDefined && delta.isEmpty)
       return CopyResult(spec.tableName, 0L, None, skipped = true)
 

@@ -773,8 +773,9 @@ object GraftApp {
       through: DataStreamWriter[Row] => DataStreamWriter[Row]): Int = {
     // File streams need an explicit schema; take it from the files already
     // present (a directory with no files yet has nothing to ingest anyway).
+    // Read on the driver from one footer: no Spark job.
     val schema =
-      try spark.read.parquet(srcDir).schema
+      try Connectors.readParquet(spark, srcDir).schema
       catch { case e: Throwable =>
         log(s"cannot infer schema from $srcDir (no parquet files yet?): ${e.getMessage}")
         return 1

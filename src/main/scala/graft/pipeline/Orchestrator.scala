@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit, TimeoutException}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, Promise}
 import scala.util.{Failure, Success, Try}
 
 /** Run report for one pipeline execution — in-process replacement for the
@@ -29,16 +29,20 @@ final case class RunReport(results: Map[String, Try[CopyResult]]) {
   */
 object Orchestrator {
 
-  /** @param tableTimeout bound on how long we wait for any single table.
-    *        A hung source (dead JDBC endpoint, stuck filesystem) must not
-    *        hang the WHOLE run forever: the await is bounded per table and a
-    *        timeout is recorded as that table's failure in the report,
-    *        preserving the reference's per-table fault isolation
-    *        (`app.py:175-177`) under hangs. On timeout the stuck job is
-    *        actively killed — its Spark job group is cancelled (aborting
-    *        in-flight stages) and its pool thread interrupted — so a
-    *        timed-out table cannot later wake up, commit its sink, and
-    *        advance the watermark underneath an external retry. The one
+  /** @param tableTimeout bound on how long any single table may run,
+    *        measured from that table's own start. A hung source (dead JDBC
+    *        endpoint, stuck filesystem) must not hang the WHOLE run
+    *        forever: a table still running `tableTimeout` after it started
+    *        is recorded as failed in the report, preserving the reference's
+    *        per-table fault isolation (`app.py:175-177`) under hangs. The
+    *        i-th table, if it has not started `(i / parallelism + 1) *
+    *        tableTimeout` after submission (by then every table queued
+    *        ahead of it has run out its clock), fails without starting, so
+    *        `runAll` always returns. On timeout the stuck job is actively
+    *        killed — its Spark job group is cancelled (aborting in-flight
+    *        stages) and its pool thread interrupted — so a timed-out table
+    *        cannot later wake up, commit its sink, and advance the
+    *        watermark underneath an external retry. The one
     *        unavoidable window (sink already committed, state not yet
     *        written) is the standard hazard-2 crash window; pair with
     *        [[IdempotentSink]] to make the retry overwrite, not append.
@@ -53,69 +57,71 @@ object Orchestrator {
       parallelism: Int = 4,
       tableTimeout: Duration = Duration.Inf): RunReport = {
 
-    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val workers = math.max(1, parallelism)
+    val pool = Executors.newFixedThreadPool(workers)
+    // Each table's deadline fires on this timer, so one table's wait never
+    // delays another's: a hung table dies `tableTimeout` after its start.
+    val timer = Executors.newSingleThreadScheduledExecutor()
     try {
-      val futures = specs.zipWithIndex.map { case (spec, i) =>
+      val outcomes = specs.zipWithIndex.map { case (spec, i) =>
         val group = s"graft-copy-$i-${spec.tableName}"
-        val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val worker = new java.util.concurrent.atomic.AtomicReference[Thread]()
-        // `worker` handoff is lock-protected so a post-timeout interrupt can
-        // never land on the pool thread AFTER it moved on to another table.
+        val outcome = Promise[CopyResult]()
+        // Every transition — start, finish, kill — happens under `lock`, so
+        // exactly one of them decides the outcome: a killed table never
+        // starts, and a kill always targets a fully registered worker + job
+        // group (never an interrupt landing on the pool thread AFTER it
+        // moved on to another table). `worker` is null before the start
+        // and after the finish.
         val lock = new Object
-        val f = Future {
-          // A table cancelled while still QUEUED (pool saturated by other
-          // hung tables) must not run at all — its job group was never set,
-          // so cancelJobGroup alone could not stop it. The check and the
-          // worker/job-group registration are ONE atomic step under `lock`:
-          // otherwise a timeout firing between them would cancel an
-          // unregistered group and interrupt a null worker, and the table
-          // would run to completion un-killed (committing sink + watermark
-          // despite its recorded timeout failure).
+        var worker: Thread = null
+        def kill(why: String): Unit = lock.synchronized {
+          if (!outcome.isCompleted) {
+            outcome.failure(new TimeoutException(s"table ${spec.tableName} $why"))
+            spark.sparkContext.cancelJobGroup(group)
+            Option(worker).foreach(_.interrupt())
+          }
+        }
+        pool.execute { () =>
           val started = lock.synchronized {
-            if (cancelled.get()) false
+            if (outcome.isCompleted) false
             else {
-              worker.set(Thread.currentThread())
+              worker = Thread.currentThread()
               spark.sparkContext.setJobGroup(group, s"copy ${spec.tableName}",
                 interruptOnCancel = true)
               true
             }
           }
-          if (!started)
-            Failure(new java.util.concurrent.TimeoutException(
-              s"table ${spec.tableName} cancelled before start"))
-          else {
-            try Try(CopyJob.run(spark, spec, source, sink, state, mode))
-            finally {
-              spark.sparkContext.clearJobGroup()
-              lock.synchronized {
-                worker.set(null)     // no further interrupts aimed here
-                Thread.interrupted() // clear any that already landed
-              }
+          if (started) {
+            schedule(timer, tableTimeout)(kill(s"did not finish within $tableTimeout"))
+            // Every throwable, the kill's InterruptedException included, is
+            // this table's failure: the outcome must always complete.
+            val result =
+              try Success(CopyJob.run(spark, spec, source, sink, state, mode))
+              catch { case e: Throwable => Failure(e) }
+              finally spark.sparkContext.clearJobGroup()
+            lock.synchronized {
+              worker = null        // no further interrupts aimed here
+              Thread.interrupted() // clear any that already landed
+              outcome.tryComplete(result)
             }
           }
         }
-        (spec.tableName, group, cancelled, worker, lock, f)
+        val queueWait = tableTimeout * (i / workers + 1).toDouble
+        schedule(timer, queueWait) {
+          lock.synchronized(if (worker == null) kill(s"did not start within $queueWait"))
+        }
+        spec.tableName -> outcome.future
       }
-      val done = futures.map { case (name, group, cancelled, worker, lock, f) =>
-        name -> Try(Await.result(f, tableTimeout)).recover {
-          case _: java.util.concurrent.TimeoutException =>
-            // Kill, don't abandon: forbid a queued start, cancel the
-            // table's Spark jobs, and interrupt its driver-side thread so
-            // it cannot commit sink or state later. Under the SAME lock as
-            // the task's start step, so exactly one of two worlds holds:
-            // the task never starts, or the cancel/interrupt targets a
-            // fully registered worker + job group.
-            lock.synchronized {
-              cancelled.set(true)
-              spark.sparkContext.cancelJobGroup(group)
-              Option(worker.get()).foreach(_.interrupt())
-            }
-            Failure(new java.util.concurrent.TimeoutException(
-              s"table $name did not finish within $tableTimeout"))
-        }.flatten
-      }
-      RunReport(done.toMap)
-    } finally pool.shutdown()
+      RunReport(outcomes.map { case (name, f) =>
+        name -> Await.ready(f, Duration.Inf).value.get
+      }.toMap)
+    } finally {
+      timer.shutdownNow()
+      pool.shutdown()
+    }
   }
+
+  private def schedule(timer: ScheduledExecutorService, after: Duration)(f: => Unit): Unit =
+    if (after.isFinite)
+      timer.schedule((() => f): Runnable, after.toNanos, TimeUnit.NANOSECONDS)
 }
