@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Result of one table copy. The reference communicates the new watermark to
   * its orchestrator by printing `NEW_WATERMARK_<T>=<v>` to stdout
@@ -19,15 +22,22 @@ final case class CopyResult(
   *
   * Dataflow: `source.read` → optional pushed-down watermark filter
   * (`util.py:149-159` rebuilt as a `Column` predicate — Catalyst pushes `>`
-  * into the parquet/JDBC scan, SURVEY §4) → empty-delta skip
-  * (`app.py:147-153`) → sink write → `agg(max(wm))` over the copied delta
-  * (`util.py:403-426`: the reference computes the watermark from the fetched
-  * data, not the source — we keep that definition, SURVEY §7.3 hazard 3).
+  * into the parquet/JDBC scan, SURVEY §4) → on incremental runs, a probe of
+  * which scan partitions hold delta rows, with the empty-delta skip
+  * (`app.py:147-153`) → sink write of those partitions only →
+  * `agg(max(wm))` over the copied delta (`util.py:403-426`: the reference
+  * computes the watermark from the fetched data, not the source — we keep
+  * that definition, SURVEY §7.3 hazard 3).
   *
   * Scale notes: no driver materialization of table data (the delta count and
   * max are single-row aggregates); the strictly-greater `>` semantics match
   * the reference (`util.py:156,159`) including its documented lossiness for
-  * equal-timestamp late arrivals (hazard 1).
+  * equal-timestamp late arrivals (hazard 1). A source without snapshot
+  * reads (JDBC) adds a second window: a row inserted, between the probe
+  * and the write, into a scan partition the probe found empty is not
+  * copied by this run, and if a later row already advanced the watermark
+  * past it, by no run. Without the probe the same risk exists only while
+  * the write scans.
   */
 object CopyJob {
 
@@ -54,26 +64,32 @@ object CopyJob {
     }
 
     // Incremental runs (an existing watermark pushed into the scan) probe
-    // the delta with a limit-1 existence check BEFORE writing: the common
-    // steady-state is "no new rows", and skipping the write entirely keeps
+    // the delta BEFORE writing: one single-stage job, no shuffle, whose
+    // tasks each scan their partition up to its first delta row. With no
+    // rows anywhere (the common steady state) the write is skipped, keeping
     // empty deltas out of the sink (the reference skips the load too,
-    // app.py:147-153). It does not keep every empty part out: Spark's file
-    // writer always opens a file for task 0, so a non-empty delta whose
-    // rows all sit in later tasks still leaves a 0-row `part-00000`. The
-    // probe reads at most one row off the pushed-filtered scan — negligible
-    // next to the write it avoids. Initial full loads skip the probe: they
-    // are never empty in practice and the probe would be a wasted scan
-    // start-up.
-    if (wm.isDefined && delta.isEmpty)
-      return CopyResult(spec.tableName, 0L, None, skipped = true)
+    // app.py:147-153). Otherwise the write reads only the partitions that
+    // hold delta rows, from the same RDD: partitions holding only history
+    // are scanned once, by the probe, and the write's task 0, for which
+    // Spark's file writer always opens a file, has rows, so no 0-row part
+    // file is written. Initial full loads skip the probe: they are never
+    // empty in practice and the probe would be a wasted scan.
+    val toWrite = if (wm.isEmpty) delta else {
+      val rows = delta.queryExecution.toRdd
+      val hasRows = spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => it.hasNext)
+      if (!hasRows.contains(true))
+        return CopyResult(spec.tableName, 0L, None, skipped = true)
+      ColumnBridge.dataFrame(spark, PartitionPruningRDD.create(rows, hasRows(_)), delta.schema)
+    }
 
-    // SINGLE scan: the row count and max(watermark) are collected as
-    // observed metrics DURING the write, so the delta is read exactly once
-    // (at 100 TB a second stats pass would double the dominant cost).
+    // No stats pass: the row count and max(watermark) are collected as
+    // observed metrics DURING the write, so the write is the only full read
+    // of the delta (at 100 TB a second stats pass would double the dominant
+    // cost).
     val obs = org.apache.spark.sql.Observation(s"copy_${spec.tableName}")
     val metricCols = count(lit(1)).as("n") +:
       spec.watermarkColumn.map(c => max(col(c)).as("wm")).toSeq
-    val observed = delta.observe(obs, metricCols.head, metricCols.tail: _*)
+    val observed = toWrite.observe(obs, metricCols.head, metricCols.tail: _*)
     sink match {
       case is: IdempotentSink =>
         // Batch token = the watermark this delta was read FROM (not to):

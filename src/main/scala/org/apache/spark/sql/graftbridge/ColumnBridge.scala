@@ -27,6 +27,18 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .streams.stateStoreCoordinator
 
+  /** A DataFrame over rows already in Catalyst's internal format, such as
+    * those of another DataFrame's `queryExecution.toRdd`
+    * (`internalCreateDataFrame` is `private[sql]`). The rows are not
+    * converted or copied, so `schema` must be the one they were produced
+    * under. */
+  def dataFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Register a function builder into an EXISTING session's registry
     * (`sessionState` is `private[sql]`; the config-driven
     * `spark.sql.extensions` path cannot retrofit a live session). */

@@ -173,12 +173,7 @@ class RankOpsSpec extends AnyFunSuite {
           records.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
     }
     def settle(): Long = {
-      var last = -1L; var stable = 0; var polls = 0
-      while (stable < 3 && polls < 100) {
-        Thread.sleep(100); polls += 1
-        val cur = records.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark)
       records.get()
     }
     val qs = (1 to 8).map(q => (q.toLong, if (q % 2 == 0) "alpha" else "beta"))

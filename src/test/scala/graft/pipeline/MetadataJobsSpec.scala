@@ -7,14 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Job-count gate for the incremental copy path: metadata (the catalog, a
   * parquet schema) is read on the driver and starts no Spark job, so a run
-  * starts only the probe and the write jobs. */
+  * starts only the probe and the write jobs; the probe is one stage with no
+  * shuffle. */
 class MetadataJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def tmp(): Path = Files.createTempDirectory("graft_jobs")
 
-  /** One file per table, so the limit-1 probe scans a single partition. */
+  /** One file per table, so each table's scan is a single partition. */
   private def seed(src: Path, upTo: Int): Unit = {
     val rows = (1 to upTo).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-${i % 27 + 1}%02d 00:00:00"), s"v$i"))
@@ -73,5 +74,38 @@ class MetadataJobsSpec extends AnyFunSuite {
     assert(emptyJobs == Map("graft-copy-0-full_a" -> 1, "graft-copy-1-full_b" -> 1,
       "graft-copy-2-wm_id" -> 1, "graft-copy-3-wm_ts" -> 1), emptyJobs)
     assert(emptyJobs.values.sum == 4)
+  }
+
+  test("an incremental copy is 2 jobs and 2 stages with no shuffle; an empty one 1 job and 1 stage") {
+    val src = tmp(); val dst = tmp()
+    val path = catalog(src)
+    val state = StateStore(s"$dst/state.properties")
+    val source = Connectors.source("parquet", src.toString)
+    val sink = Connectors.sink("parquet", dst.toString)
+    def run() = Orchestrator.runAll(spark, Catalog.load(spark, path), source, sink, state)
+    // Each call adds one file per table, so old and new rows sit in
+    // separate scan partitions and the probe covers several of them.
+    def append(ids: Range): Unit = {
+      val rows = ids.map(i =>
+        (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-${i % 27 + 1}%02d 00:00:00"), s"v$i"))
+      for (t <- Seq("full_a", "full_b", "wm_id", "wm_ts"))
+        rows.toDF("id", "ts", "v").coalesce(1).write.mode(SaveMode.Append).parquet(s"$src/$t")
+    }
+    val watermarked = Seq("graft-copy-2-wm_id", "graft-copy-3-wm_ts")
+
+    append(1 to 10)
+    append(11 to 14)
+    assert(run().failed.isEmpty) // initial full load sets both watermarks
+    append(15 to 20)
+    val (fresh, freshWork) = JobCount.work(spark)(run())
+    assert(fresh.failed.isEmpty)
+    assert(fresh.succeeded("wm_id").rowsCopied == 6L && fresh.succeeded("wm_ts").rowsCopied == 6L)
+    for (g <- watermarked)
+      assert(freshWork(g) == JobCount.Work(jobs = 2, stages = 2, shuffleWriteBytes = 0L), freshWork)
+
+    val (empty, emptyWork) = JobCount.work(spark)(run())
+    assert(empty.succeeded("wm_id").skipped && empty.succeeded("wm_ts").skipped)
+    for (g <- watermarked)
+      assert(emptyWork(g) == JobCount.Work(jobs = 1, stages = 1, shuffleWriteBytes = 0L), emptyWork)
   }
 }
