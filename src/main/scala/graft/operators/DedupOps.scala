@@ -1,21 +1,13 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A prepared dedup batch: the surviving rows, plus a ledger commit the
-  * caller invokes strictly AFTER those survivors are durably written.
-  *
-  * The two-step protocol is the same hazard-2 rule the pipeline applies to
-  * watermarks (state write strictly after the sink commit, CopyJob):
-  * appending fingerprints BEFORE the caller's sink commit would mean a
-  * failed write + re-run finds its own documents already ledgered and
-  * anti-joins them away — silent, permanent corpus loss. With the split,
-  * a crash before `commitLedger` leaves the ledger unchanged and the
-  * re-run reproduces the identical survivors.
-  */
+  * caller invokes strictly AFTER those survivors are durably written (the
+  * [[Ledger]] write-then-commit protocol). */
 final class PendingDedup private[operators] (
     /** Batch rows new to the corpus (fingerprint columns removed). */
     val survivors: DataFrame,
@@ -44,79 +36,29 @@ object DedupOps {
 
   /** Compute the batch rows that are new to the corpus. Returns a
     * [[PendingDedup]]; the ledger is NOT touched until the caller commits.
+    * With an `epochToken` (at-least-once replayed callers, e.g. streaming
+    * foreachBatch) the batch is an epoch of the [[Ledger]] replay protocol.
     *
     * Fingerprint = (xxhash64, charHash mod 1e9+7) — two independent hashes,
     * ~94 combined bits. A single ~30-bit hash would see birthday collisions
     * after ~35 k docs and silently drop distinct documents forever (the
     * ledger entry persists); at ~94 bits the expected first collision sits
-    * beyond 10^13 docs, comfortably past a billions-of-docs corpus.
+    * beyond 10^13 docs, comfortably past a billions-of-docs corpus. The
+    * ledger has no pin: the fingerprint has no parameters.
     */
   def incrementalDedup(
       spark: SparkSession,
       batch: DataFrame,
       textCol: String,
       idCol: String,
-      ledgerDir: String): PendingDedup = {
-    val survivors = dedupAgainst(batch, textCol, idCol,
-      readLedger(spark, ledgerDir, Set("_graft_fp", "_graft_fp2")))
-    val fps = survivors.select(col("_graft_fp"), col("_graft_fp2"))
-    new PendingDedup(
-      survivors.drop("_graft_fp", "_graft_fp2"),
-      () => fps.write.mode(SaveMode.Append).parquet(ledgerDir))
-  }
-
-  /** Epoch-keyed variant for at-least-once replayed callers (streaming
-    * foreachBatch): fingerprints land in an `_graft_epoch=<token>` ledger
-    * partition, the anti-join EXCLUDES the batch's own epoch, and the
-    * commit dynamically overwrites only that partition. So a crash at ANY
-    * point — before the sink write, between write and commit, or after
-    * commit but before the caller's checkpoint — replays to the identical
-    * survivor set and an identical ledger (plain [[incrementalDedup]]
-    * would find its own post-commit fingerprints and anti-join the whole
-    * replayed batch away).
-    */
-  def incrementalDedupEpoch(
-      spark: SparkSession,
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
       ledgerDir: String,
-      epochToken: String): PendingDedup = {
-    val prior = readLedger(spark, ledgerDir,
-      Set("_graft_fp", "_graft_fp2", "_graft_epoch"))
-      .map(_.filter(col("_graft_epoch") =!= epochToken))
+      epochToken: Option[String] = None): PendingDedup = {
+    val prior = Ledger.prior(spark, ledgerDir, Ledger.Fingerprints, "", epochToken)
     val survivors = dedupAgainst(batch, textCol, idCol, prior)
     val fps = survivors.select(col("_graft_fp"), col("_graft_fp2"))
     new PendingDedup(
       survivors.drop("_graft_fp", "_graft_fp2"),
-      () => fps.withColumn("_graft_epoch", lit(epochToken))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_graft_epoch")
-        .parquet(ledgerDir))
-  }
-
-  /** Read the ledger if present, refusing a schema we don't own (e.g. a
-    * pre-two-hash single-column ledger, or a plain ledger opened in epoch
-    * mode) with an actionable error instead of a downstream
-    * AnalysisException — the ledger is permanent state. */
-  private def readLedger(
-      spark: SparkSession,
-      ledgerDir: String,
-      expected: Set[String]): Option[DataFrame] = {
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(ledgerPath)) None
-    else {
-      val ledger = spark.read.parquet(ledgerDir)
-      if (ledger.columns.toSet != expected)
-        throw new IllegalStateException(
-          s"fingerprint ledger at $ledgerDir has columns " +
-            s"${ledger.columns.mkString("[", ",", "]")}, expected " +
-            s"${expected.toSeq.sorted.mkString("[", ",", "]")} — " +
-            "rebuild the ledger (re-fingerprint the corpus) before ingesting")
-      Some(ledger)
-    }
+      () => Ledger.commit(fps, ledgerDir, Ledger.Fingerprints, "", epochToken))
   }
 
   /** Fingerprint the batch, drop rows whose fingerprint is in `prior`, keep
@@ -212,8 +154,7 @@ object DedupOps {
   }
 
   /** [[incrementalSpans]]' two-step result: flagged positions now, ledger
-    * append only after the caller's sink commit — the same write-then-
-    * commit protocol as [[PendingDedup]]. */
+    * commit only after the caller's sink commit ([[Ledger]]). */
   final class PendingSpanFlags private[operators] (
       /** (id, start_tok, n_docs) positions in THIS batch whose span
         * appears in ≥ minDocs distinct documents across ledger + batch. */
@@ -244,7 +185,10 @@ object DedupOps {
     * spans. `spanTokens` is pinned in ledger metadata with a loud drift
     * refusal (a 4-token batch against an 8-token ledger would silently
     * never collide); `minDocs` is a READ-time knob, deliberately not
-    * pinned — tightening the bar next epoch needs no ledger rebuild.
+    * pinned — tightening the bar next epoch needs no ledger rebuild. With
+    * an `epochToken` the batch is an epoch of the [[Ledger]] replay
+    * protocol: a replayed batch reproduces identical flags instead of
+    * double-counting its own spans.
     */
   def incrementalSpans(
       spark: SparkSession,
@@ -253,85 +197,13 @@ object DedupOps {
       idCol: String,
       ledgerDir: String,
       spanTokens: Int,
-      minDocs: Int = 2): PendingSpanFlags =
-    spansCore(spark, batch, textCol, idCol, ledgerDir, spanTokens, minDocs,
-      epochToken = None)
-
-  /** Epoch-keyed [[incrementalSpans]] for at-least-once replayed callers
-    * (streaming foreachBatch): the batch's counts land in an
-    * `_graft_epoch=<token>` partition, the frequency read EXCLUDES the
-    * batch's own epoch, and the commit dynamically overwrites only that
-    * partition — a replayed batch reproduces identical flags instead of
-    * double-counting its own spans. */
-  def incrementalSpansEpoch(
-      spark: SparkSession,
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      epochToken: String,
-      spanTokens: Int,
-      minDocs: Int = 2): PendingSpanFlags =
-    spansCore(spark, batch, textCol, idCol, ledgerDir, spanTokens, minDocs,
-      epochToken = Some(epochToken))
-
-  private val SpanMetaFile = "_graft_span_construction"
-
-  private def spansCore(
-      spark: SparkSession,
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      spanTokens: Int,
-      minDocs: Int,
-      epochToken: Option[String]): PendingSpanFlags = {
+      minDocs: Int = 2,
+      epochToken: Option[String] = None): PendingSpanFlags = {
     require(spanTokens > 0, s"spanTokens must be positive: $spanTokens")
     require(minDocs >= 2,
       s"minDocs must be at least 2 (1 would flag every window): $minDocs")
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val params = s"spanTokens=$spanTokens"
-    val prior: Option[DataFrame] =
-      if (!fs.exists(ledgerPath)) None
-      else {
-        // One directory listing for both the pin-or-refuse check and
-        // the empty-ledger short-circuit (a remote LIST is not free).
-        val hasData = MaintenanceOps.ledgerHasData(fs, ledgerPath)
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, SpanMetaFile)
-        if (fs.exists(metaPath)) {
-          val in = fs.open(metaPath)
-          val stored =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          if (stored != params)
-            throw new IllegalStateException(
-              s"span ledger at $ledgerDir was built with [$stored] but this ingest " +
-                s"windows with [$params] — duplicate spans would silently never " +
-                "collide. Use the ledger's width or rebuild it.")
-        } else if (hasData)
-          // Pin-or-refuse (round 13): committed span counts without the
-          // width pin cannot be validated — a different-width ingest
-          // would pass silently and spans would never collide.
-          throw new IllegalStateException(
-            s"span ledger at $ledgerDir holds committed batches but no " +
-              s"$SpanMetaFile construction pin — its window width cannot be " +
-              "validated. Restore the pin or rebuild the ledger.")
-        // A pinned-but-empty dir (crash between pin and first data
-        // commit) is an empty ledger, not a readable parquet store.
-        if (!hasData) None
-        else {
-          // Counts are SUMMED at read, so epoch leftovers of a crashed
-          // fold (already merged into base, dirs not yet deleted — see
-          // MaintenanceOps.foldEpochs' crash contract) must be excluded
-          // or they double-count; membership ledgers tolerate them, this
-          // one cannot.
-          val unfolded = MaintenanceOps.excludeFoldLeftovers(
-            fs, ledgerPath, spark.read.parquet(ledgerDir))
-          Some(epochToken.fold(unfolded)(t =>
-            unfolded.filter(col("_graft_epoch") =!= t)))
-        }
-      }
+    val prior = Ledger.prior(spark, ledgerDir, Ledger.Spans, params, epochToken)
     // Pinned eagerly: every downstream frame must keep seeing the
     // PRE-commit batch/ledger state even if evaluated after commitLedger.
     val spans = batch
@@ -363,29 +235,7 @@ object DedupOps {
       .localCheckpoint(true)
     new PendingSpanFlags(
       flags,
-      () => {
-        // Pin BEFORE data (round 13): a crash between the two leaves a
-        // pinned-but-empty ledger, never committed counts whose width
-        // can no longer be validated.
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, SpanMetaFile)
-        if (!fs.exists(metaPath)) {
-          val outS = fs.create(metaPath, true)
-          try outS.write(params.getBytes("UTF-8")) finally outS.close()
-        }
-        epochToken match {
-          case None =>
-            batchCounts.write.mode(SaveMode.Append).parquet(ledgerDir)
-          case Some(t) =>
-            batchCounts.withColumn("_graft_epoch", lit(t))
-              .write.mode(SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_graft_epoch")
-              .parquet(ledgerDir)
-        }
-        // Counts sum at read → foldEpochs must re-aggregate, declared
-        // here by the writer (never sniffed from the schema).
-        MaintenanceOps.declareCountFoldRule(fs, ledgerPath)
-      })
+      () => Ledger.commit(batchCounts, ledgerDir, Ledger.Spans, params, epochToken))
   }
 
   /** E106: span SURGERY — remove every [[duplicateSpans]]-flagged window

@@ -830,28 +830,10 @@ object KmeansOps {
     }
   }
 
-  /** A prepared incremental semantic batch: survivors plus a ledger commit
-    * the caller invokes strictly AFTER the survivors are durably written —
-    * the [[SrpOps.PendingNeardup]] write-then-commit protocol in cluster
-    * space. */
-  final class PendingSemantic private[operators] (
-      /** Batch vectors semantically duplicating neither the ledgered
-        * corpus nor a smaller-id batch survivor. */
-      val survivors: DataFrame,
-      /** (idCol) of batch vectors dropped by a same-cluster ledgered
-        * vector at cosine ≥ minCos. */
-      val ledgerHits: DataFrame,
-      commit: () => Unit) {
-    /** Persist the pinned model (first commit only) and append the
-      * survivors' (cluster, vector) rows. Call ONLY after the survivors
-      * are durably written. */
-    def commitLedger(): Unit = commit()
-  }
-
   /** Incremental SemDeDup against a persistent cluster ledger — "purge
     * today's crawl against yesterday's clusters WITHOUT re-fitting", the
     * semantic member of the exact/neardup/embed ledger trio
-    * ([[DedupOps.incrementalDedupEpoch]], [[LshOps.incrementalNeardup]],
+    * ([[DedupOps.incrementalDedup]], [[LshOps.incrementalNeardup]],
     * [[SrpOps.incrementalNeardup]]).
     *
     * The FIRST ingest fits k-means on its own batch (the deterministic
@@ -877,6 +859,10 @@ object KmeansOps {
     * model's clusters have grown past it — the signal to re-fit the corpus
     * with a larger k (rebuild the ledger), surfaced as an error instead of
     * a quadratic plan.
+    *
+    * With an `epochToken` the batch is an epoch of the [[Ledger]] replay
+    * protocol; the model re-derivation is deterministic, so even a crash
+    * before the first commit replays identically.
     */
   def incrementalSemantic(
       spark: org.apache.spark.sql.SparkSession,
@@ -887,54 +873,16 @@ object KmeansOps {
       k: Int,
       iters: Int,
       minCos: Double,
-      maxClusterForPairs: Long = 10000L): PendingSemantic =
-    semanticCore(spark, batch, vecCol, idCol, ledgerDir, k, iters, minCos,
-      maxClusterForPairs, epochToken = None)
-
-  /** Epoch-keyed variant for at-least-once replayed callers (streaming
-    * foreachBatch): survivor rows land in an `_graft_epoch=<token>`
-    * partition, the collision read EXCLUDES the batch's own epoch, and the
-    * commit dynamically overwrites only that partition — a crash at any
-    * point replays to the identical survivor set (the model re-derivation
-    * is deterministic, so even a crash before the first commit replays
-    * identically). Same protocol as [[SrpOps.incrementalNeardupEpoch]]. */
-  def incrementalSemanticEpoch(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      ledgerDir: String,
-      epochToken: String,
-      k: Int,
-      iters: Int,
-      minCos: Double,
-      maxClusterForPairs: Long = 10000L): PendingSemantic =
-    semanticCore(spark, batch, vecCol, idCol, ledgerDir, k, iters, minCos,
-      maxClusterForPairs, Some(epochToken))
-
-  private def semanticCore(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      ledgerDir: String,
-      k: Int,
-      iters: Int,
-      minCos: Double,
-      maxClusterForPairs: Long,
-      epochToken: Option[String]): PendingSemantic = {
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val modelPath = new org.apache.hadoop.fs.Path(ledgerDir, ModelFile)
+      maxClusterForPairs: Long = 10000L,
+      epochToken: Option[String] = None): Ledger.Pending = {
     val params = s"k=$k,iters=$iters,minCos=$minCos"
-    // A name parquet would read as data: not dot-hidden, and underscore
-    // names are skipped UNLESS they carry a partition "=" (which is how
-    // the _graft_epoch=<token> partitions stay visible).
-    def isDataName(n: String): Boolean =
-      !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
-    val hasRows = fs.exists(ledgerPath) &&
-      fs.listStatus(ledgerPath).exists(st => isDataName(st.getPath.getName))
-    val modelExists = fs.exists(modelPath)
+    // Refuses a mismatched model and rows without a model before any fit:
+    // re-fitting on the batch would orphan every ledgered row.
+    val prior = Ledger.prior(spark, ledgerDir, Ledger.Clusters, params, epochToken)
+    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
+    val model = Ledger.readPin(
+      ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      ledgerPath, Ledger.Clusters.pin.get.file)
     // Bootstrap pass-through: with no model pinned yet, a batch smaller
     // than k cannot seed the fit — and a streaming caller would otherwise
     // WEDGE (the replayed first batch re-throws forever; every sibling
@@ -943,26 +891,13 @@ object KmeansOps {
     // replay is trivially identical; the model pins at the first batch
     // with ≥ k rows. Callers who need the bootstrap rows deduped use a
     // smaller k or a larger first batch.
-    if (!modelExists && !hasRows && batch.count() < k) {
+    if (model.isEmpty && batch.count() < k) {
       val noHits = batch.select(col(idCol)).filter(lit(false)).localCheckpoint(true)
-      return new PendingSemantic(batch, noHits, () => ())
+      return new Ledger.Pending(batch, noHits, () => ())
     }
-    // Load-or-fit, pinned: the model is written strictly BEFORE the first
-    // rows commit, so rows without a model mean a manually-damaged ledger
-    // — refuse rather than re-fit on the batch and orphan every row.
-    val cents: Array[Array[Double]] =
-      if (modelExists) {
-        val in = fs.open(modelPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        if (lines.headOption.getOrElse("") != params)
-          throw new IllegalStateException(
-            s"semantic ledger at $ledgerDir pins [${lines.headOption.getOrElse("")}] but " +
-              s"this ingest asks [$params] — assignment against a differently-shaped " +
-              "model would relabel the cluster space. Use the ledger's parameters or " +
-              "rebuild it.")
-        val loaded = lines.tail.map(_.split(",").map(_.toDouble)).toArray
+    val cents: Array[Array[Double]] = model match {
+      case Some(pin) =>
+        val loaded = pin.linesIterator.drop(1).map(_.split(",").map(_.toDouble)).toArray
         // A torn write can leave an intact params line over m < k centroid
         // rows; assigning against the survivors would silently orphan the
         // missing clusters' ledger rows — every other damage mode here is
@@ -973,27 +908,9 @@ object KmeansOps {
               s"${loaded.length} centroid rows — torn model file; restore it or " +
               "rebuild the ledger.")
         loaded
-      } else if (hasRows) {
-        throw new IllegalStateException(
-          s"semantic ledger at $ledgerDir has data rows but no $ModelFile model pin — " +
-            "refusing to re-fit on the batch (it would orphan every ledgered row); " +
-            "restore the model file or rebuild the ledger.")
-      } else fit(batch, vecCol, idCol, k, iters).centroids
-    val expectedCols = epochToken match {
-      case Some(_) => Set("_graft_cluster", "_graft_vec", "_graft_epoch")
-      case None    => Set("_graft_cluster", "_graft_vec")
+      case None => fit(batch, vecCol, idCol, k, iters).centroids
     }
-    val prior: Option[DataFrame] =
-      if (!hasRows) None
-      else {
-        val l = spark.read.parquet(ledgerDir)
-        if (l.columns.toSet != expectedCols)
-          throw new IllegalStateException(
-            s"semantic ledger at $ledgerDir has columns ${l.columns.mkString("[", ",", "]")}, " +
-              s"expected ${expectedCols.toSeq.sorted.mkString("[", ",", "]")} — a plain " +
-              "ledger opened in epoch mode (or vice versa); rebuild before ingesting")
-        Some(epochToken.fold(l)(t => l.filter(col("_graft_epoch") =!= t)))
-      }
+    val pinBody = model.getOrElse((params +: cents.map(_.mkString(","))).mkString("\n"))
     // Pinned eagerly: the assignment is read by the gauge, the ledger
     // join, the pair join, and the commit — and every frame the caller
     // touches after return must keep seeing the PRE-commit state.
@@ -1046,39 +963,9 @@ object KmeansOps {
       .join(batchDrops, Seq(idCol), "left_anti")
       .select(col("cluster").as("_graft_cluster"), col(vecCol).as("_graft_vec"))
       .localCheckpoint(true)
-    new PendingSemantic(
+    new Ledger.Pending(
       survivors,
       hits,
-      () => {
-        // Model BEFORE rows: a crash in between leaves a pinned model and
-        // no rows — the next ingest loads the pin and proceeds; rows
-        // without a model are unreachable except by manual damage.
-        // create(overwrite = false): two jobs bootstrapping the same
-        // ledger concurrently would otherwise BOTH pass the !exists guard
-        // and the second would silently replace the first's pin while the
-        // first's rows stay labeled by the replaced model — the race dies
-        // loudly here instead.
-        if (!fs.exists(modelPath)) {
-          val outS = fs.create(modelPath, false)
-          val body = (params +: cents.map(_.mkString(","))).mkString("\n")
-          try outS.write(body.getBytes("UTF-8")) finally outS.close()
-        }
-        epochToken match {
-          case None =>
-            survivorRows.write
-              .mode(org.apache.spark.sql.SaveMode.Append).parquet(ledgerDir)
-          case Some(t) =>
-            survivorRows.withColumn("_graft_epoch", lit(t))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_graft_epoch")
-              .parquet(ledgerDir)
-        }
-      })
+      () => Ledger.commit(survivorRows, ledgerDir, Ledger.Clusters, pinBody, epochToken))
   }
-
-  /** Pinned model file inside the semantic ledger dir: params line, then k
-    * comma-joined centroid rows (underscore prefix, no "=": parquet
-    * directory listings skip it). */
-  private val ModelFile = "_graft_semantic_model"
 }

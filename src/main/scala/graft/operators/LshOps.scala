@@ -248,25 +248,6 @@ object LshOps {
       distinctBuckets = stats.getLong(2))(exploded)
   }
 
-  /** A prepared incremental near-dup batch: survivors plus a ledger commit
-    * the caller invokes strictly AFTER the survivors are durably written —
-    * the same write-then-commit protocol as
-    * [[DedupOps.incrementalDedup]] (a pre-write commit + crash would
-    * anti-join the re-run's own documents away). */
-  final class PendingNeardup private[operators] (
-      /** Batch rows that are near-dups of neither the ledgered corpus nor
-        * a smaller-id batch survivor. */
-      val survivors: DataFrame,
-      /** (idCol) of batch rows dropped by a ledger-bucket collision —
-        * callers wanting verification-before-purge join these back to the
-        * corpus text store. */
-      val ledgerHits: DataFrame,
-      commit: () => Unit) {
-    /** Append the SURVIVORS' band buckets to the ledger. Call ONLY after
-      * the survivors are durably written. */
-    def commitLedger(): Unit = commit()
-  }
-
   /** Incremental NEAR-dup against a persistent band ledger — the q77
     * pattern (exact-fingerprint ledger) extended to LSH: "near-dedup
     * today's crawl against the whole corpus" without re-banding the
@@ -278,12 +259,20 @@ object LshOps {
     * with the ledgered corpus is dropped (recall-first, the standard
     * crawl-dedup posture: an LSH bucket collision is strong near-dup
     * evidence at these band widths, and the corpus copy survives). The
-    * dropped ids are returned in [[PendingNeardup.ledgerHits]] for
+    * dropped ids are returned in [[Ledger.Pending.ledgerHits]] for
     * pipelines that verify (e.g. exact Jaccard against the corpus text
     * store) before discarding. Within the batch, survivors then dedup
     * against each other with the usual keep-min-id policy. Only SURVIVOR
     * buckets are committed — a dropped doc is not corpus, so its buckets
-    * must not poison future batches.
+    * must not poison future batches. With an `epochToken` the batch is an
+    * epoch of the [[Ledger]] replay protocol: a replay does not drop
+    * itself as "near-dups of its own committed buckets".
+    *
+    * Bucket membership is only meaningful between frames banded with
+    * IDENTICAL construction parameters — a batch banded 4-gram against a
+    * 3-gram ledger would simply never collide and every near-dup would
+    * sail through — so the ledger pins `(k, shingleN, nBands,
+    * rowsPerBand)` ([[Ledger.MinhashBands]]).
     */
   def incrementalNeardup(
       spark: org.apache.spark.sql.SparkSession,
@@ -295,98 +284,11 @@ object LshOps {
       shingleN: Int = 3,
       nBands: Int = 4,
       rowsPerBand: Int = 4,
-      maxBucket: Int = 10000): PendingNeardup =
-    neardupCore(spark, batch, textCol, idCol, ledgerDir,
-      k, shingleN, nBands, rowsPerBand, maxBucket, epochToken = None)
-
-  /** Epoch-keyed variant for at-least-once replayed callers (streaming
-    * foreachBatch) — the same replay protocol as
-    * [[DedupOps.incrementalDedupEpoch]]: survivor buckets land in an
-    * `_graft_epoch=<token>` ledger partition, the collision read EXCLUDES
-    * the batch's own epoch, and the commit dynamically overwrites only
-    * that partition. A crash at any point (before the sink write, between
-    * write and commit, after commit but before the caller's checkpoint)
-    * therefore replays to the identical survivor set — the plain variant
-    * would find its own post-commit buckets and drop the whole replayed
-    * batch as "near-dups of themselves". */
-  def incrementalNeardupEpoch(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      epochToken: String,
-      k: Int = 16,
-      shingleN: Int = 3,
-      nBands: Int = 4,
-      rowsPerBand: Int = 4,
-      maxBucket: Int = 10000): PendingNeardup =
-    neardupCore(spark, batch, textCol, idCol, ledgerDir,
-      k, shingleN, nBands, rowsPerBand, maxBucket, epochToken = Some(epochToken))
-
-  private def neardupCore(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      k: Int,
-      shingleN: Int,
-      nBands: Int,
-      rowsPerBand: Int,
-      maxBucket: Int,
-      epochToken: Option[String]): PendingNeardup = {
+      maxBucket: Int = 10000,
+      epochToken: Option[String] = None): Ledger.Pending = {
     val banded = bandedMinhash(batch, textCol, idCol, k, shingleN, nBands, rowsPerBand, maxBucket)
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val params = s"k=$k,shingleN=$shingleN,nBands=$nBands,rowsPerBand=$rowsPerBand"
-    val expectedCols = epochToken match {
-      case Some(_) => Set("_graft_b", "_graft_bh", "_graft_epoch")
-      case None    => Set("_graft_b", "_graft_bh")
-    }
-    val prior: Option[DataFrame] =
-      if (!fs.exists(ledgerPath)) None
-      else {
-        // Bucket membership is only meaningful between frames banded with
-        // IDENTICAL construction parameters — a batch banded 4-gram against
-        // a 3-gram ledger would simply never collide and every near-dup
-        // would sail through. The ledger pins its construction in a
-        // metadata file (underscore-prefixed: parquet readers skip it) and
-        // refuses a mismatched ingest loudly.
-        // One directory listing for both the pin-or-refuse check and
-        // the empty-ledger short-circuit (a remote LIST is not free).
-        val hasData = MaintenanceOps.ledgerHasData(fs, ledgerPath)
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, MetaFile)
-        if (fs.exists(metaPath)) {
-          val in = fs.open(metaPath)
-          val stored =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          if (stored != params)
-            throw new IllegalStateException(
-              s"band ledger at $ledgerDir was built with [$stored] but this ingest " +
-                s"bands with [$params] — near-dups would silently never collide. " +
-                "Use the ledger's parameters or rebuild it.")
-        } else if (hasData)
-          // Pin-or-refuse (round 13): committed buckets without the pin
-          // cannot be validated — a mismatched ingest would pass silently.
-          throw new IllegalStateException(
-            s"band ledger at $ledgerDir holds committed batches but no $MetaFile " +
-              "construction pin — its banding cannot be validated. Restore the " +
-              "pin or rebuild the ledger.")
-        // A pinned-but-empty dir (crash between pin and first data
-        // commit) is an empty ledger, not a readable parquet store.
-        if (!hasData) None
-        else {
-          val l = spark.read.parquet(ledgerDir)
-          if (l.columns.toSet != expectedCols)
-            throw new IllegalStateException(
-              s"band ledger at $ledgerDir has columns ${l.columns.mkString("[", ",", "]")}, " +
-                s"expected ${expectedCols.toSeq.sorted.mkString("[", ",", "]")} — a plain " +
-                "ledger opened in epoch mode (or vice versa); rebuild before ingesting")
-          Some(epochToken.fold(l)(t => l.filter(col("_graft_epoch") =!= t)))
-        }
-      }
+    val prior = Ledger.prior(spark, ledgerDir, Ledger.MinhashBands, params, epochToken)
     // Pinned eagerly: the hit set READS the ledger, and every downstream
     // frame (keptBands, survivors) must keep seeing the PRE-commit ledger
     // even if evaluated after commitLedger() appended to it.
@@ -400,7 +302,7 @@ object LshOps {
     }).localCheckpoint(true)
     val keptBands = banded.bands.join(hits, Seq(idCol), "left_anti")
     // Eager so the banded cache can be RELEASED before this call returns:
-    // a streaming caller runs one neardupCore per micro-batch, and Spark's
+    // a streaming caller runs one ingest per micro-batch, and Spark's
     // CacheManager holds persisted frames until explicit unpersist — the
     // pre-round-8 lazy batchDrops kept the cache referenced, leaking one
     // cached signature frame per epoch for the whole drain.
@@ -417,34 +319,11 @@ object LshOps {
     // Everything downstream (hits, batchDrops, survivorBuckets) is pinned;
     // survivors only references the caller's batch plus pinned frames.
     banded.unpersist()
-    new PendingNeardup(
+    new Ledger.Pending(
       survivors,
       hits,
-      () => {
-        // Pin BEFORE data (round 13): a crash between the two leaves a
-        // pinned-but-empty ledger, never unvalidatable committed buckets.
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, MetaFile)
-        if (!fs.exists(metaPath)) {
-          val outS = fs.create(metaPath, true)
-          try outS.write(params.getBytes("UTF-8")) finally outS.close()
-        }
-        epochToken match {
-          case None =>
-            survivorBuckets.write
-              .mode(org.apache.spark.sql.SaveMode.Append).parquet(ledgerDir)
-          case Some(t) =>
-            survivorBuckets.withColumn("_graft_epoch", lit(t))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_graft_epoch")
-              .parquet(ledgerDir)
-        }
-      })
+      () => Ledger.commit(survivorBuckets, ledgerDir, Ledger.MinhashBands, params, epochToken))
   }
-
-  /** Construction-parameter pin inside the band ledger dir (underscore
-    * prefix: parquet directory listings skip it). */
-  private[graft] val MetaFile = "_graft_lsh_meta"
 
   /** A dedup-ledger recall audit's result (E155). `recall` is the mean,
     * over sampled queries that HAVE at least one exact near-dup, of the
@@ -495,29 +374,9 @@ object LshOps {
     require(nQueries >= 1, s"nQueries out of range: $nQueries")
     require(minJaccard > 0.0 && minJaccard <= 1.0,
       s"minJaccard must be in (0,1]: $minJaccard")
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, MetaFile)
-    // Pin-or-refuse: the audit bands with the LEDGER's construction —
-    // auditing at guessed parameters would measure a different path.
-    require(fs.exists(metaPath),
-      s"band ledger at $ledgerDir has no $MetaFile construction pin — " +
-        "the audit must band with the ledger's own parameters; restore " +
-        "the pin or rebuild the ledger")
-    val pin = {
-      val in = fs.open(metaPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    val kv = pin.split(",").map(_.split("=")).collect {
-      case Array(k0, v0) => k0 -> v0
-    }.toMap
-    val (k, shingleN, nBands, rowsPerBand) =
-      try (kv("k").toInt, kv("shingleN").toInt,
-        kv("nBands").toInt, kv("rowsPerBand").toInt)
-      catch { case e: Exception =>
-        throw new IllegalStateException(
-          s"unparseable construction pin at $metaPath: [$pin]", e)
+    val (pin, (k, shingleN, nBands, rowsPerBand)) =
+      Ledger.auditPin(spark, ledgerDir, Ledger.MinhashBands) { kv =>
+        (kv("k").toInt, kv("shingleN").toInt, kv("nBands").toInt, kv("rowsPerBand").toInt)
       }
     // Materialize the sample ONCE (the annRecall rule): leaving the
     // TakeOrdered lazy would re-execute its corpus pass inside both the

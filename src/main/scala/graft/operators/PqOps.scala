@@ -1150,17 +1150,12 @@ object PqOps {
   }
 
   private def readMeta(spark: SparkSession, dir: String): String = {
-    val (fs, _) = fsOf(spark, dir)
-    val metaPath = new org.apache.hadoop.fs.Path(dir, PqMetaFile)
-    if (!fs.exists(metaPath))
-      throw new IllegalStateException(
-        s"PQ artifact store at $dir has no construction pin ($PqMetaFile) — " +
-          "codes cannot be trusted against these codebooks (an ADC run " +
-          "against re-fit codebooks silently mis-scores). Rebuild with " +
-          "writePqArtifacts / --pq-encode.")
-    val in = fs.open(metaPath)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
+    val (fs, p) = fsOf(spark, dir)
+    Ledger.readPin(fs, p, PqMetaFile).getOrElse(throw new IllegalStateException(
+      s"PQ artifact store at $dir has no construction pin ($PqMetaFile) — " +
+        "codes cannot be trusted against these codebooks (an ADC run " +
+        "against re-fit codebooks silently mis-scores). Rebuild with " +
+        "writePqArtifacts / --pq-encode."))
   }
 
   /** Full build: fit the coarse quantizer and the PQ codebooks on
@@ -1406,9 +1401,9 @@ object PqOps {
     * levels sum element-wise at re-rank). */
   private def readRefinement(
       spark: SparkSession, dir: String, dim: Int): (Option[PqModel], Option[DataFrame]) = {
-    val (fs, _) = fsOf(spark, dir)
-    val pinPath = new org.apache.hadoop.fs.Path(dir, PqRefineMetaFile)
-    if (!fs.exists(pinPath)) {
+    val (fs, p) = fsOf(spark, dir)
+    val pin = Ledger.readPin(fs, p, PqRefineMetaFile)
+    if (pin.isEmpty) {
       val orphan = Seq("rcodes", "rcodebooks")
         .filter(d => fs.exists(new org.apache.hadoop.fs.Path(dir, d)))
       if (orphan.nonEmpty)
@@ -1419,10 +1414,7 @@ object PqOps {
             "/ --pq-encode --refine-m N --refine-k N.")
       return (None, None)
     }
-    val in = fs.open(pinPath)
-    val params =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
+    val params = pin.get
     def malformed(detail: String) = new IllegalStateException(
       s"malformed PQ refinement pin at $dir ($detail): [$params] — the pin is " +
         "the refinement level's integrity contract; rebuild with " +
@@ -2273,17 +2265,9 @@ object PqOps {
     new PendingPqCodes(
       prior.unionByName(batchCodes.select(prior.columns.map(col).toIndexedSeq: _*)),
       () => {
-        batchCodes
-          .withColumn("_graft_epoch", lit(epochToken))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_graft_epoch", "cell")
-          .parquet(s"$dir/codes")
-        batchRcodes.foreach(_.withColumn("_graft_epoch", lit(epochToken))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_graft_epoch", "cell")
-          .parquet(s"$dir/rcodes"))
+        Ledger.commit(batchCodes, s"$dir/codes", Ledger.PqCodes, "", Some(epochToken), Seq("cell"))
+        batchRcodes.foreach(Ledger.commit(
+          _, s"$dir/rcodes", Ledger.PqCodes, "", Some(epochToken), Seq("cell")))
       })
   }
 }

@@ -201,10 +201,9 @@ object SketchOps {
         col("err_max"))
   }
 
-  /** [[incrementalHeavyHitters]]' two-step result — the same
-    * write-then-commit protocol as every ledger operator here: read
-    * `top` now, `commitLedger()` only after the batch's processed
-    * output is durably written. */
+  /** [[incrementalHeavyHitters]]' two-step result ([[Ledger]]): read
+    * `top` now, `commitLedger()` only after the batch's processed output
+    * is durably written. */
   final class PendingHeavyHitters private[operators] (
       /** Corpus-lifetime top-k as of ledger + THIS batch:
         * (value, est, err_max), est descending with the value
@@ -214,8 +213,6 @@ object SketchOps {
       commit: () => Unit) {
     def commitLedger(): Unit = commit()
   }
-
-  private val HhMetaFile = "_graft_hh_construction"
 
   /** E138: INCREMENTAL heavy hitters — corpus-lifetime frequent items
     * without ever re-reading the corpus, the q77/q104/q108/q119/q128
@@ -239,11 +236,9 @@ object SketchOps {
     *
     * `capacity` is pinned in ledger metadata with a loud drift refusal
     * (mixing capacities silently changes what err_max means); `k` is a
-    * read-time knob. Epoch variant: the batch's rows land in an
-    * `_graft_epoch=<token>` partition, the read EXCLUDES the batch's
-    * own epoch and crashed-fold leftovers, and the commit dynamically
-    * overwrites only that partition — at-least-once replay reproduces
-    * identical totals instead of double-counting (the E109 protocol).
+    * read-time knob. With an `epochToken` the batch is an epoch of the
+    * [[Ledger]] replay protocol: replay reproduces identical totals
+    * instead of double-counting.
     */
   def incrementalHeavyHitters(
       spark: org.apache.spark.sql.SparkSession,
@@ -254,49 +249,9 @@ object SketchOps {
       k: Int,
       epochToken: Option[String] = None): PendingHeavyHitters = {
     require(k >= 1, s"k must be >= 1, got $k")
-    import org.apache.spark.sql.SaveMode
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val params = s"capacity=$capacity"
-    val prior: Option[DataFrame] =
-      if (!fs.exists(ledgerPath)) None
-      else {
-        // One directory listing for both the pin-or-refuse check and
-        // the empty-ledger short-circuit (a remote LIST is not free).
-        val hasData = MaintenanceOps.ledgerHasData(fs, ledgerPath)
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, HhMetaFile)
-        if (fs.exists(metaPath)) {
-          val in = fs.open(metaPath)
-          val stored =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          if (stored != params)
-            throw new IllegalStateException(
-              s"heavy-hitter ledger at $ledgerDir was built with [$stored] but " +
-                s"this ingest sketches with [$params] — the error bound would " +
-                "silently change meaning. Use the ledger's capacity or rebuild it.")
-        } else if (hasData)
-          // Pin-or-refuse: committed counters without their capacity pin
-          // cannot be validated — a different-capacity ingest would pass
-          // silently and change what err_max means.
-          throw new IllegalStateException(
-            s"heavy-hitter ledger at $ledgerDir holds committed batches but no " +
-              s"$HhMetaFile construction pin — its capacity cannot be validated. " +
-              "Restore the pin or rebuild the ledger.")
-        // A pinned-but-empty dir (crash between pin and first data
-        // commit) is an empty ledger, not a readable parquet store.
-        if (!hasData) None
-        else {
-          // Counts are SUMMED at read: crashed-fold leftovers (already
-          // merged into base) must be excluded — the E109 discipline,
-          // shared via MaintenanceOps.excludeFoldLeftovers.
-          val unfolded = MaintenanceOps.excludeFoldLeftovers(
-            fs, ledgerPath, spark.read.parquet(ledgerDir))
-          Some(epochToken.fold(unfolded)(t =>
-            unfolded.filter(col("_graft_epoch") =!= t))
-            .select(col("value"), col("_graft_n")))
-        }
-      }
+    val prior = Ledger.prior(spark, ledgerDir, Ledger.HeavyHitters, params, epochToken)
+      .map(_.select(col("value"), col("_graft_n")))
     // The batch's sketch: one MGBuf row, exploded to counter rows plus
     // the null-keyed decrement-mass row. Pinned eagerly — the read and
     // the commit must see the same sketch.
@@ -318,29 +273,6 @@ object SketchOps {
       .localCheckpoint(true)
     new PendingHeavyHitters(
       top,
-      () => {
-        // Pin BEFORE data (round 13): a crash between the two must leave
-        // a pinned-but-empty ledger (harmless — the pin just preempts the
-        // capacity choice), never committed counters whose capacity can
-        // no longer be validated.
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, HhMetaFile)
-        if (!fs.exists(metaPath)) {
-          val outS = fs.create(metaPath, true)
-          try outS.write(params.getBytes("UTF-8")) finally outS.close()
-        }
-        epochToken match {
-          case None =>
-            batchRows.write.mode(SaveMode.Append).parquet(ledgerDir)
-          case Some(t) =>
-            batchRows.withColumn("_graft_epoch", lit(t))
-              .write.mode(SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_graft_epoch")
-              .parquet(ledgerDir)
-        }
-        // Counts sum at read → foldEpochs must re-aggregate, declared
-        // here by the writer (never sniffed from the schema).
-        MaintenanceOps.declareCountFoldRule(fs, ledgerPath)
-      })
+      () => Ledger.commit(batchRows, ledgerDir, Ledger.HeavyHitters, params, epochToken))
   }
 }

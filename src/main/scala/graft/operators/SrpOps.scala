@@ -240,22 +240,6 @@ object SrpOps {
       .distinct()
   }
 
-  /** A prepared incremental batch: survivors plus a ledger commit the
-    * caller invokes strictly AFTER the survivors are durably written —
-    * the [[LshOps.PendingNeardup]] write-then-commit protocol. */
-  final class PendingNeardup private[operators] (
-      /** Batch vectors near-dup of neither the ledgered corpus nor a
-        * smaller-id batch survivor. */
-      val survivors: DataFrame,
-      /** (idCol) of batch vectors dropped by a VERIFIED corpus collision
-        * (exact cosine ≥ minCos against a ledgered vector). */
-      val ledgerHits: DataFrame,
-      commit: () => Unit) {
-    /** Append the survivors' (band, bucket, vector) rows to the ledger.
-      * Call ONLY after the survivors are durably written. */
-    def commitLedger(): Unit = commit()
-  }
-
   /** Incremental embedding near-dup against a persistent SRP band ledger —
     * "near-dedup today's embeddings against the whole corpus" without
     * re-banding the corpus, the vector twin of
@@ -276,7 +260,9 @@ object SrpOps {
     * Construction parameters (and the threshold) are pinned in a ledger
     * metadata file; a mismatched ingest is refused loudly — batch bands at
     * a different width would simply never collide and every near-dup
-    * would sail through ([[LshOps]] learned this the measured way).
+    * would sail through ([[LshOps]] learned this the measured way). With
+    * an `epochToken` the batch is an epoch of the [[Ledger]] replay
+    * protocol.
     */
   def incrementalNeardup(
       spark: org.apache.spark.sql.SparkSession,
@@ -288,88 +274,11 @@ object SrpOps {
       bitsPerBand: Int = 10,
       maxBucket: Int = 200,
       minCos: Double = 0.9,
-      maxMeanOccupancy: Double = DefaultMaxMeanOccupancy): PendingNeardup =
-    neardupCore(spark, batch, vecCol, idCol, ledgerDir,
-      nBands, bitsPerBand, maxBucket, minCos, maxMeanOccupancy, epochToken = None)
-
-  /** Epoch-keyed variant for at-least-once replayed callers (streaming
-    * foreachBatch) — survivor rows land in an `_graft_epoch=<token>`
-    * partition, the collision read EXCLUDES the batch's own epoch, and the
-    * commit dynamically overwrites only that partition, so a crash at any
-    * point replays to the identical survivor set. Same protocol as
-    * [[LshOps.incrementalNeardupEpoch]]. */
-  def incrementalNeardupEpoch(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      ledgerDir: String,
-      epochToken: String,
-      nBands: Int = 4,
-      bitsPerBand: Int = 10,
-      maxBucket: Int = 200,
-      minCos: Double = 0.9,
-      maxMeanOccupancy: Double = DefaultMaxMeanOccupancy): PendingNeardup =
-    neardupCore(spark, batch, vecCol, idCol, ledgerDir,
-      nBands, bitsPerBand, maxBucket, minCos, maxMeanOccupancy, Some(epochToken))
-
-  private def neardupCore(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      vecCol: String,
-      idCol: String,
-      ledgerDir: String,
-      nBands: Int,
-      bitsPerBand: Int,
-      maxBucket: Int,
-      minCos: Double,
-      maxMeanOccupancy: Double,
-      epochToken: Option[String]): PendingNeardup = {
+      maxMeanOccupancy: Double = DefaultMaxMeanOccupancy,
+      epochToken: Option[String] = None): Ledger.Pending = {
     val banded = bandedSrp(batch, vecCol, idCol, nBands, bitsPerBand, maxBucket, maxMeanOccupancy)
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val params = s"nBands=$nBands,bitsPerBand=$bitsPerBand,minCos=$minCos"
-    val expectedCols = epochToken match {
-      case Some(_) => Set("_graft_b", "_graft_bv", "_graft_vec", "_graft_epoch")
-      case None    => Set("_graft_b", "_graft_bv", "_graft_vec")
-    }
-    val prior: Option[DataFrame] =
-      if (!fs.exists(ledgerPath)) None
-      else {
-        // One directory listing for both the pin-or-refuse check and
-        // the empty-ledger short-circuit (a remote LIST is not free).
-        val hasData = MaintenanceOps.ledgerHasData(fs, ledgerPath)
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, MetaFile)
-        if (fs.exists(metaPath)) {
-          val in = fs.open(metaPath)
-          val stored =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          if (stored != params)
-            throw new IllegalStateException(
-              s"SRP band ledger at $ledgerDir was built with [$stored] but this ingest " +
-                s"bands with [$params] — near-dups would silently never collide. " +
-                "Use the ledger's parameters or rebuild it.")
-        } else if (hasData)
-          // Pin-or-refuse (round 13): committed buckets without the pin
-          // cannot be validated — a mismatched ingest would pass silently.
-          throw new IllegalStateException(
-            s"SRP band ledger at $ledgerDir holds committed batches but no $MetaFile " +
-              "construction pin — its banding cannot be validated. Restore the " +
-              "pin or rebuild the ledger.")
-        // A pinned-but-empty dir (crash between pin and first data
-        // commit) is an empty ledger, not a readable parquet store.
-        if (!hasData) None
-        else {
-          val l = spark.read.parquet(ledgerDir)
-          if (l.columns.toSet != expectedCols)
-            throw new IllegalStateException(
-              s"SRP band ledger at $ledgerDir has columns ${l.columns.mkString("[", ",", "]")}, " +
-                s"expected ${expectedCols.toSeq.sorted.mkString("[", ",", "]")} — a plain " +
-                "ledger opened in epoch mode (or vice versa); rebuild before ingesting")
-          Some(epochToken.fold(l)(t => l.filter(col("_graft_epoch") =!= t)))
-        }
-      }
+    val prior = Ledger.prior(spark, ledgerDir, Ledger.SrpBands, params, epochToken)
     // Pinned eagerly: every downstream frame must keep seeing the
     // PRE-commit ledger even when evaluated after commitLedger().
     val hits = (prior match {
@@ -383,7 +292,7 @@ object SrpOps {
     }).localCheckpoint(true)
     val keptBands = banded.bands.join(hits, Seq(idCol), "left_anti")
     // Eager so the banded cache can be RELEASED before this call returns:
-    // a streaming caller runs one neardupCore per micro-batch, and Spark's
+    // a streaming caller runs one ingest per micro-batch, and Spark's
     // CacheManager holds persisted frames until explicit unpersist — the
     // pre-round-8 lazy batchDrops kept the cache referenced, leaking one
     // cached signature frame per epoch for the whole drain.
@@ -400,34 +309,11 @@ object SrpOps {
     // Everything downstream (hits, batchDrops, survivorRows) is pinned;
     // survivors only references the caller's batch plus pinned frames.
     banded.unpersist()
-    new PendingNeardup(
+    new Ledger.Pending(
       survivors,
       hits,
-      () => {
-        // Pin BEFORE data (round 13): a crash between the two leaves a
-        // pinned-but-empty ledger, never unvalidatable committed buckets.
-        val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, MetaFile)
-        if (!fs.exists(metaPath)) {
-          val outS = fs.create(metaPath, true)
-          try outS.write(params.getBytes("UTF-8")) finally outS.close()
-        }
-        epochToken match {
-          case None =>
-            survivorRows.write
-              .mode(org.apache.spark.sql.SaveMode.Append).parquet(ledgerDir)
-          case Some(t) =>
-            survivorRows.withColumn("_graft_epoch", lit(t))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_graft_epoch")
-              .parquet(ledgerDir)
-        }
-      })
+      () => Ledger.commit(survivorRows, ledgerDir, Ledger.SrpBands, params, epochToken))
   }
-
-  /** Construction-parameter pin inside the SRP band ledger dir
-    * (underscore prefix: parquet directory listings skip it). */
-  private[graft] val MetaFile = "_graft_srp_meta"
 
   /** E155 (round 17): RECALL AUDIT for the SRP band-ledger dedup path —
     * the vector twin of [[LshOps.dedupRecall]]. The LEDGER contributes
@@ -461,26 +347,9 @@ object SrpOps {
       maxBucket: Int = 200,
       maxMeanOccupancy: Double = DefaultMaxMeanOccupancy): LshOps.DedupRecallReport = {
     require(nQueries >= 1, s"nQueries out of range: $nQueries")
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaPath = new org.apache.hadoop.fs.Path(ledgerDir, MetaFile)
-    require(fs.exists(metaPath),
-      s"SRP band ledger at $ledgerDir has no $MetaFile construction pin — " +
-        "the audit must band (and verify) with the ledger's own " +
-        "parameters; restore the pin or rebuild the ledger")
-    val pin = {
-      val in = fs.open(metaPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    val kv = pin.split(",").map(_.split("=")).collect {
-      case Array(k0, v0) => k0 -> v0
-    }.toMap
-    val (nBands, bitsPerBand, minCos) =
-      try (kv("nBands").toInt, kv("bitsPerBand").toInt, kv("minCos").toDouble)
-      catch { case e: Exception =>
-        throw new IllegalStateException(
-          s"unparseable construction pin at $metaPath: [$pin]", e)
+    val (pin, (nBands, bitsPerBand, minCos)) =
+      Ledger.auditPin(spark, ledgerDir, Ledger.SrpBands) { kv =>
+        (kv("nBands").toInt, kv("bitsPerBand").toInt, kv("minCos").toDouble)
       }
     // Materialize the sample ONCE (the annRecall rule).
     val qSchema = vecs.select(col(idCol), col(vecCol)).schema

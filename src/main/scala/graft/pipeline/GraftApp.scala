@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.operators.{DedupOps, ExportOps, LshOps, MaintenanceOps, PqOps, SamplingOps, SetJoinOps, SketchOps, SrpOps}
+import graft.operators.{DedupOps, ExportOps, Ledger, LshOps, MaintenanceOps, PqOps, SamplingOps, SetJoinOps, SketchOps, SrpOps}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.{Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, xxhash64}
@@ -658,17 +658,18 @@ object GraftApp {
     case c: DedupRecall =>
       val fs = new org.apache.hadoop.fs.Path(c.ledger)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def pinExists(name: String) = fs.exists(new org.apache.hadoop.fs.Path(c.ledger, name))
+      def pinned(space: Ledger.Space) =
+        fs.exists(new org.apache.hadoop.fs.Path(c.ledger, space.pin.get.file))
       val r =
-        if (pinExists(SrpOps.MetaFile))
+        if (pinned(Ledger.SrpBands))
           SrpOps.dedupRecall(spark, c.ledger,
             spark.read.parquet(c.corpusDir), c.vecCol, c.idCol, c.nQueries)
-        else if (pinExists(LshOps.MetaFile))
+        else if (pinned(Ledger.MinhashBands))
           LshOps.dedupRecall(spark, c.ledger,
             spark.read.parquet(c.corpusDir), c.textCol, c.idCol, c.minJaccard, c.nQueries)
         else throw new IllegalArgumentException(
-          s"${c.ledger} carries neither ${LshOps.MetaFile} nor " +
-            s"${SrpOps.MetaFile} — not a band ledger, or " +
+          s"${c.ledger} carries neither ${Ledger.MinhashBands.pin.get.file} nor " +
+            s"${Ledger.SrpBands.pin.get.file} — not a band ledger, or " +
             "its construction pin is lost (restore it; the audit refuses " +
             "to band at guessed parameters)")
       out(s"DEDUP_RECALL_ queries=${r.nQueries} withTruth=${r.queriesWithTruth} " +

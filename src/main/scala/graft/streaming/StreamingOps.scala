@@ -86,11 +86,11 @@ object StreamingOps {
     * micro-batch drops documents already in the persistent fingerprint
     * ledger, writes the survivors through the epoch-keyed idempotent sink,
     * THEN commits its fingerprints into the ledger's epoch partition —
-    * [[graft.operators.DedupOps.incrementalDedupEpoch]]'s replay-safe
-    * protocol. The dedup state is the on-disk ledger (16 bytes/doc), not
-    * Spark's state store: it survives checkpoint resets, is shared with
-    * batch ingests of the same corpus, and — unlike
-    * `dropDuplicatesWithinWatermark` — is never aged out by a watermark.
+    * [[graft.operators.Ledger]]'s replay-safe protocol. The dedup state is
+    * the on-disk ledger (16 bytes/doc), not Spark's state store: it
+    * survives checkpoint resets, is shared with batch ingests of the same
+    * corpus, and — unlike `dropDuplicatesWithinWatermark` — is never aged
+    * out by a watermark.
     */
   def foreachBatchLedgerDedup(
       writer: DataStreamWriter[Row],
@@ -99,18 +99,15 @@ object StreamingOps {
       ledgerDir: String,
       sink: IdempotentSink,
       table: String): DataStreamWriter[Row] =
-    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      assertNoForeignEpochs(batch, ledgerDir, batchId)
-      val token = s"epoch$batchId"
-      val pending = graft.operators.DedupOps.incrementalDedupEpoch(
-        batch.sparkSession, batch, textCol, idCol, ledgerDir, token)
-      sink.writeBatch(pending.survivors, table, token)
-      pending.commitLedger()
+    ledgerDrain(writer, ledgerDir, Some((sink, table))) { (batch, token) =>
+      val p = graft.operators.DedupOps.incrementalDedup(
+        batch.sparkSession, batch, textCol, idCol, ledgerDir, Some(token))
+      (p.survivors, p.commitLedger _)
     }
 
   /** Streaming duplicate-SPAN flagging with cross-run frequencies — the
     * span-ledger member of the foreachBatch family, built on
-    * [[graft.operators.DedupOps.incrementalSpansEpoch]]: every
+    * [[graft.operators.DedupOps.incrementalSpans]]: every
     * micro-batch's token windows are counted against the persistent
     * span-frequency ledger, positions whose span reaches `minDocs`
     * distinct documents across corpus history + batch are emitted as
@@ -128,14 +125,10 @@ object StreamingOps {
       table: String,
       spanTokens: Int = 8,
       minDocs: Int = 2): DataStreamWriter[Row] =
-    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      assertNoForeignEpochs(batch, ledgerDir, batchId)
-      val token = s"epoch$batchId"
-      val pending = graft.operators.DedupOps.incrementalSpansEpoch(
-        batch.sparkSession, batch, textCol, idCol, ledgerDir, token,
-        spanTokens, minDocs)
-      sink.writeBatch(pending.flags, table, token)
-      pending.commitLedger()
+    ledgerDrain(writer, ledgerDir, Some((sink, table))) { (batch, token) =>
+      val p = graft.operators.DedupOps.incrementalSpans(
+        batch.sparkSession, batch, textCol, idCol, ledgerDir, spanTokens, minDocs, Some(token))
+      (p.flags, p.commitLedger _)
     }
 
   /** Streaming corpus ingest with cross-run NEAR-dup (round 6) — the
@@ -144,9 +137,8 @@ object StreamingOps {
     * dropped (drop-on-collision, see
     * [[graft.operators.LshOps.incrementalNeardup]]), survivors write
     * through the epoch-keyed idempotent sink, THEN their buckets commit
-    * into the ledger's epoch partition
-    * ([[graft.operators.LshOps.incrementalNeardupEpoch]]'s replay-safe
-    * protocol). Dedup state is `nBands` longs per corpus doc on disk —
+    * into the ledger's epoch partition ([[graft.operators.Ledger]]'s
+    * replay-safe protocol). Dedup state is `nBands` longs per corpus doc on disk —
     * shared with batch ingests, never aged out by a watermark, and the
     * corpus text is never re-read.
     */
@@ -158,18 +150,16 @@ object StreamingOps {
       sink: IdempotentSink,
       table: String,
       shingleN: Int = 3): DataStreamWriter[Row] =
-    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      assertNoForeignEpochs(batch, ledgerDir, batchId)
-      val token = s"epoch$batchId"
-      val pending = graft.operators.LshOps.incrementalNeardupEpoch(
-        batch.sparkSession, batch, textCol, idCol, ledgerDir, token, shingleN = shingleN)
-      sink.writeBatch(pending.survivors, table, token)
-      pending.commitLedger()
+    ledgerDrain(writer, ledgerDir, Some((sink, table))) { (batch, token) =>
+      val p = graft.operators.LshOps.incrementalNeardup(
+        batch.sparkSession, batch, textCol, idCol, ledgerDir, shingleN = shingleN,
+        epochToken = Some(token))
+      (p.survivors, p.commitLedger _)
     }
 
   /** Streaming EMBEDDING ingest with cross-run near-dup (round 7) — the
     * vector twin of [[foreachBatchLedgerNeardup]], built on
-    * [[graft.operators.SrpOps.incrementalNeardupEpoch]]: every micro-batch
+    * [[graft.operators.SrpOps.incrementalNeardup]]: every micro-batch
     * is SRP-banded, collisions against the ledgered corpus are verified by
     * EXACT COSINE before dropping (an SRP bucket space is small by
     * construction — collision-only dropping would mass-purge on a full
@@ -188,19 +178,16 @@ object StreamingOps {
       nBands: Int = 4,
       bitsPerBand: Int = 10,
       minCos: Double = 0.9): DataStreamWriter[Row] =
-    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      assertNoForeignEpochs(batch, ledgerDir, batchId)
-      val token = s"epoch$batchId"
-      val pending = graft.operators.SrpOps.incrementalNeardupEpoch(
-        batch.sparkSession, batch, vecCol, idCol, ledgerDir, token,
-        nBands = nBands, bitsPerBand = bitsPerBand, minCos = minCos)
-      sink.writeBatch(pending.survivors, table, token)
-      pending.commitLedger()
+    ledgerDrain(writer, ledgerDir, Some((sink, table))) { (batch, token) =>
+      val p = graft.operators.SrpOps.incrementalNeardup(
+        batch.sparkSession, batch, vecCol, idCol, ledgerDir,
+        nBands = nBands, bitsPerBand = bitsPerBand, minCos = minCos, epochToken = Some(token))
+      (p.survivors, p.commitLedger _)
     }
 
   /** Streaming SEMANTIC ingest with cross-run SemDeDup (round 9) — the
     * cluster-space member of the ledger trio, built on
-    * [[graft.operators.KmeansOps.incrementalSemanticEpoch]]: the FIRST
+    * [[graft.operators.KmeansOps.incrementalSemantic]]: the FIRST
     * micro-batch fits the k-means model (deterministic smallest-id seed)
     * and pins it in the ledger; every later batch is assigned against the
     * PINNED centroids (never re-fit — a per-batch re-fit would relabel the
@@ -223,15 +210,11 @@ object StreamingOps {
       iters: Int = 2,
       minCos: Double = 0.9,
       maxClusterForPairs: Long = 10000L): DataStreamWriter[Row] =
-    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      assertNoForeignEpochs(batch, ledgerDir, batchId)
-      val token = s"epoch$batchId"
-      val pending = graft.operators.KmeansOps.incrementalSemanticEpoch(
-        batch.sparkSession, batch, vecCol, idCol, ledgerDir, token,
-        k = k, iters = iters, minCos = minCos,
-        maxClusterForPairs = maxClusterForPairs)
-      sink.writeBatch(pending.survivors, table, token)
-      pending.commitLedger()
+    ledgerDrain(writer, ledgerDir, Some((sink, table))) { (batch, token) =>
+      val p = graft.operators.KmeansOps.incrementalSemantic(
+        batch.sparkSession, batch, vecCol, idCol, ledgerDir, k, iters, minCos,
+        maxClusterForPairs, Some(token))
+      (p.survivors, p.commitLedger _)
     }
 
   /** Streaming PQ INGEST (round 14) — the code store's drain, putting
@@ -254,11 +237,10 @@ object StreamingOps {
       vecCol: String,
       idCol: String,
       storeDir: String): DataStreamWriter[Row] =
-    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      assertNoForeignEpochs(batch, s"$storeDir/codes", batchId)
-      graft.operators.PqOps.incrementalPqEncode(
-          batch.sparkSession, batch, vecCol, idCol, storeDir, s"epoch$batchId")
-        .commitLedger()
+    ledgerDrain(writer, s"$storeDir/codes", None) { (batch, token) =>
+      val p = graft.operators.PqOps.incrementalPqEncode(
+        batch.sparkSession, batch, vecCol, idCol, storeDir, token)
+      (p.codes, p.commitLedger _)
     }
 
   /** E95's streaming side — continuous training-data delivery: every
@@ -284,6 +266,24 @@ object StreamingOps {
         batch, dir, idCol, contentCols, nShards, seed)
       graft.operators.ExportOps.verifyShards(
         batch.sparkSession, dir, idCol, contentCols, seed)
+    }
+
+  /** The one body of the `foreachBatchLedger*` drains: checkpoint-reset
+    * guard, epoch token from the batch id, `prepare` (the space's epoch
+    * ingest, returning its output and its commit), the output through the
+    * epoch-keyed idempotent sink when there is one, then the commit —
+    * strictly after the write ([[graft.operators.Ledger]]). */
+  private def ledgerDrain(
+      writer: DataStreamWriter[Row],
+      ledgerDir: String,
+      out: Option[(IdempotentSink, String)])(
+      prepare: (DataFrame, String) => (DataFrame, () => Unit)): DataStreamWriter[Row] =
+    writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      assertNoForeignEpochs(batch, ledgerDir, batchId)
+      val token = s"epoch$batchId"
+      val (rows, commit) = prepare(batch, token)
+      out.foreach { case (sink, table) => sink.writeBatch(rows, table, token) }
+      commit()
     }
 
   /** Checkpoint-reset guard for the epoch-keyed ledger ingests: epoch

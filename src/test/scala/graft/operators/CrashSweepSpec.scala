@@ -326,6 +326,53 @@ class CrashSweepSpec extends AnyFunSuite {
     info(s"count-ledger foldEpochs: $boundaries boundaries, all EXACT")
   }
 
+  // The ingest side, one sweep per ledger space: the fixture commits
+  // epoch0; the op prepares epoch1, writes its output through the
+  // epoch-keyed idempotent sink, then commits; recovery replays epoch1
+  // with the same token. Every boundary must land the no-crash ledger
+  // (rows as a set, or per-key sums for a count space) and the no-crash
+  // output in the sink.
+  for (space <- Ledger.spaces) {
+    test(s"${space.name} epoch ingest converges from every crash boundary") {
+      assert(LedgerSpaces.ingests.keySet == Ledger.spaces.toSet)
+      val ops = LedgerSpaces.ingests(space)
+      def epoch1(dir: String): Unit = {
+        val p = ops.prepare(spark, dir, 1, Some("epoch1"))
+        // Materialized first: a write whose plan has an exchange commits
+        // on an AQE stage thread, where CrashFs would not count it.
+        graft.pipeline.Connectors.IdempotentParquetSink(s"$dir-sink")
+          .writeBatch(p.output.localCheckpoint(true), "out", "epoch1")
+        p.commit()
+      }
+      def sinkRows(dir: String) = LedgerSpaces.rowSet(
+        spark.read.parquet(s"$dir-sink/out").drop("_graft_batch"))
+      // Epoch0 committed once on plain file://, copied per crash point.
+      val tpl = Files.createTempDirectory("crash_sweep_ingest_tpl")
+        .resolve("ledger").toString
+      ops.setup(spark, tpl)
+      ops.prepare(spark, tpl, 0, Some("epoch0")).commit()
+      val want = Files.createTempDirectory("crash_sweep_ingest_want")
+        .resolve("ledger").toString
+      ops.setup(spark, want)
+      ops.prepare(spark, want, 0, Some("epoch0")).commit()
+      epoch1(want)
+      val wantLedger = LedgerSpaces.ledgerView(spark, space, ops.ledgerDir(want))
+      val wantOut = sinkRows(want)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val tplPath = new Path(tpl)
+      val boundaries = sweep("ingest", cap = 80) { dir =>
+        assert(org.apache.hadoop.fs.FileUtil.copy(tplPath.getFileSystem(conf), tplPath,
+          fsFor(dir), new Path(dir), false, conf))
+      }(epoch1)(epoch1) { (dir, n, crashed) =>
+        assert(LedgerSpaces.ledgerView(spark, space, ops.ledgerDir(dir)) == wantLedger,
+          s"crash point $n (crashed=$crashed): ledger differs from the no-crash run")
+        assert(sinkRows(dir) == wantOut,
+          s"crash point $n (crashed=$crashed): output differs from the no-crash run")
+      }
+      info(s"${space.name} ingest: $boundaries crash boundaries, all convergent")
+    }
+  }
+
   test("foldEpochs (membership ledger) converges from every crash boundary") {
     val boundaries = sweep("fold", cap = 120) { dir =>
       Seq(("a", "base"), ("b", "epoch0"), ("c", "epoch1"))

@@ -48,10 +48,10 @@ class DedupOpsSpec extends AnyFunSuite {
     val ledger = java.nio.file.Files
       .createTempDirectory("graft_dedup_epoch").resolve("fp").toString
     val b0 = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-    val p0 = DedupOps.incrementalDedupEpoch(spark, b0, "text", "doc_id", ledger, "epoch0")
+    val p0 = DedupOps.incrementalDedup(spark, b0, "text", "doc_id", ledger, epochToken = Some("epoch0"))
     p0.commitLedger()
     val b1 = Seq((3L, "beta"), (4L, "gamma"), (5L, "gamma")).toDF("doc_id", "text")
-    val p1 = DedupOps.incrementalDedupEpoch(spark, b1, "text", "doc_id", ledger, "epoch1")
+    val p1 = DedupOps.incrementalDedup(spark, b1, "text", "doc_id", ledger, epochToken = Some("epoch1"))
     val out1 = p1.survivors.as[(Long, String)].collect().toSet
     assert(out1 == Set((4L, "gamma"))) // beta ledgered, within-batch min id
     p1.commitLedger()
@@ -61,7 +61,7 @@ class DedupOpsSpec extends AnyFunSuite {
     // whole batch away; the epoch variant excludes its OWN partition and
     // reproduces the identical survivors, then its re-commit replaces (not
     // duplicates) the epoch's fingerprints.
-    val replay = DedupOps.incrementalDedupEpoch(spark, b1, "text", "doc_id", ledger, "epoch1")
+    val replay = DedupOps.incrementalDedup(spark, b1, "text", "doc_id", ledger, epochToken = Some("epoch1"))
     assert(replay.survivors.as[(Long, String)].collect().toSet == out1,
       "post-commit epoch replay must reproduce the same survivors")
     replay.commitLedger()
@@ -176,19 +176,19 @@ class DedupOpsSpec extends AnyFunSuite {
   test("incrementalSpansEpoch: a replayed epoch never double-counts its own spans") {
     val ledger = Files.createTempDirectory("span_epoch").resolve("spans").toString
     val b1 = Seq((1L, "one two three four five")).toDF("doc_id", "text")
-    DedupOps.incrementalSpansEpoch(spark, b1, "text", "doc_id", ledger, "e1",
-      spanTokens = 5).commitLedger()
+    DedupOps.incrementalSpans(spark, b1, "text", "doc_id", ledger,
+      spanTokens = 5, epochToken = Some("e1")).commitLedger()
     // Replay of epoch e1 AFTER its commit: the read excludes the epoch's
     // own partition, so the single-doc span must NOT flag against itself.
-    val replay = DedupOps.incrementalSpansEpoch(spark, b1, "text", "doc_id",
-      ledger, "e1", spanTokens = 5)
+    val replay = DedupOps.incrementalSpans(spark, b1, "text", "doc_id",
+      ledger, spanTokens = 5, epochToken = Some("e1"))
     assert(replay.flags.count() == 0L,
       "a replayed batch must not collide with its own committed counts")
     replay.commitLedger() // dynamic overwrite of e1, not a duplicate append
     // A genuinely new epoch sharing the span DOES flag.
     val b2 = Seq((2L, "one two three four five")).toDF("doc_id", "text")
-    val p2 = DedupOps.incrementalSpansEpoch(spark, b2, "text", "doc_id",
-      ledger, "e2", spanTokens = 5)
+    val p2 = DedupOps.incrementalSpans(spark, b2, "text", "doc_id",
+      ledger, spanTokens = 5, epochToken = Some("e2"))
     assert(p2.flags.as[(Long, Int, Long)].collect().toSet == Set((2L, 0, 2L)))
   }
 

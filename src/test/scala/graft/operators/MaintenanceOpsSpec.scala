@@ -92,12 +92,12 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     val ledger = Files.createTempDirectory("compact_srp_ledger").resolve("bands").toString
     val base2 = unitVec(2L)
     // Two epochs of commits → two _graft_epoch partitions of small files.
-    SrpOps.incrementalNeardupEpoch(spark,
+    SrpOps.incrementalNeardup(spark,
       Seq((2L, base2), (4L, unitVec(4L))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch0").commitLedger()
-    SrpOps.incrementalNeardupEpoch(spark,
+      "embedding", "vec_id", ledger, epochToken = Some("epoch0")).commitLedger()
+    SrpOps.incrementalNeardup(spark,
       Seq((6L, unitVec(6L))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch1").commitLedger()
+      "embedding", "vec_id", ledger, epochToken = Some("epoch1")).commitLedger()
 
     val report = MaintenanceOps.compactLedger(spark, ledger, targetMB = 128)
     assert(report.filesAfter <= report.filesBefore && report.filesAfter >= 2, report)
@@ -110,15 +110,15 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       .count(_.getPath.getName.startsWith("_graft_epoch=")) == 2)
     // Post-compaction ingest still VERIFIES and drops a near-dup of the
     // compacted corpus...
-    val pending = SrpOps.incrementalNeardupEpoch(spark,
+    val pending = SrpOps.incrementalNeardup(spark,
       Seq((11L, unitVec(111L, Some((base2, 0.02))))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch2")
+      "embedding", "vec_id", ledger, epochToken = Some("epoch2"))
     assert(pending.ledgerHits.as[Long].collect().toSet == Set(11L))
     // ...and still refuses a width-drifted ingest loudly.
     val e = intercept[IllegalStateException] {
-      SrpOps.incrementalNeardupEpoch(spark,
+      SrpOps.incrementalNeardup(spark,
         Seq((13L, unitVec(13L))).toDF("vec_id", "embedding"),
-        "embedding", "vec_id", ledger, "epoch2", bitsPerBand = 12)
+        "embedding", "vec_id", ledger, bitsPerBand = 12, epochToken = Some("epoch2"))
     }
     assert(e.getMessage.contains("never collide"))
   }
@@ -154,15 +154,15 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     val ledger = Files.createTempDirectory("fold_srp_ledger").resolve("bands").toString
     val base2 = unitVec(2L)
     val v6 = unitVec(6L)
-    SrpOps.incrementalNeardupEpoch(spark,
+    SrpOps.incrementalNeardup(spark,
       Seq((2L, base2)).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch0").commitLedger()
-    SrpOps.incrementalNeardupEpoch(spark,
+      "embedding", "vec_id", ledger, epochToken = Some("epoch0")).commitLedger()
+    SrpOps.incrementalNeardup(spark,
       Seq((4L, unitVec(4L))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch1").commitLedger()
-    SrpOps.incrementalNeardupEpoch(spark,
+      "embedding", "vec_id", ledger, epochToken = Some("epoch1")).commitLedger()
+    SrpOps.incrementalNeardup(spark,
       Seq((6L, v6)).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch2").commitLedger()
+      "embedding", "vec_id", ledger, epochToken = Some("epoch2")).commitLedger()
 
     val r = MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 1L)
     assert(r.rows == 8L, r) // 2 vectors x 4 bands folded
@@ -175,25 +175,25 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     assert(parts() == Set("_graft_epoch=base", "_graft_epoch=epoch2"), parts())
     // A near-dup of a FOLDED corpus vector still drops (base partition is
     // included in every collision read)...
-    val pending = SrpOps.incrementalNeardupEpoch(spark,
+    val pending = SrpOps.incrementalNeardup(spark,
       Seq((11L, unitVec(111L, Some((base2, 0.02))))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch3")
+      "embedding", "vec_id", ledger, epochToken = Some("epoch3"))
     assert(pending.ledgerHits.as[Long].collect().toSet == Set(11L))
     // ...and the unfolded epoch2 still replays exactly-once onto itself
     // (its own partition exists to be overwritten; base is excluded from
     // nothing, so 6 is not "a near-dup of itself" only because the replay
     // excludes epoch2 — the protocol must be undisturbed by the fold).
-    val replay = SrpOps.incrementalNeardupEpoch(spark,
+    val replay = SrpOps.incrementalNeardup(spark,
       Seq((6L, v6)).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch2")
+      "embedding", "vec_id", ledger, epochToken = Some("epoch2"))
     replay.commitLedger()
     assert(replay.survivors.select($"vec_id").as[Long].collect().toSet == Set(6L))
     // Folding again with a horizon covering epoch2 converges to base only.
     MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 2L)
     assert(parts() == Set("_graft_epoch=base"), parts())
-    val pending2 = SrpOps.incrementalNeardupEpoch(spark,
+    val pending2 = SrpOps.incrementalNeardup(spark,
       Seq((13L, unitVec(113L, Some((v6, 0.02))))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch3")
+      "embedding", "vec_id", ledger, epochToken = Some("epoch3"))
     assert(pending2.ledgerHits.as[Long].collect().toSet == Set(13L))
   }
 
@@ -209,12 +209,12 @@ class MaintenanceOpsSpec extends AnyFunSuite {
   test("the --fold-epochs CLI mode derives its horizon from the checkpoint") {
     val root = Files.createTempDirectory("fold_cli")
     val ledger = root.resolve("bands").toString
-    SrpOps.incrementalNeardupEpoch(spark,
+    SrpOps.incrementalNeardup(spark,
       Seq((2L, unitVec(2L))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch0").commitLedger()
-    SrpOps.incrementalNeardupEpoch(spark,
+      "embedding", "vec_id", ledger, epochToken = Some("epoch0")).commitLedger()
+    SrpOps.incrementalNeardup(spark,
       Seq((4L, unitVec(4L))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch1").commitLedger()
+      "embedding", "vec_id", ledger, epochToken = Some("epoch1")).commitLedger()
     val ckpt = root.resolve("ckpt")
     Files.createDirectories(ckpt.resolve("commits"))
     Files.write(ckpt.resolve("commits").resolve("0"), "v1".getBytes)
@@ -514,10 +514,10 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     def doc(id: Long, text: String) =
       Seq((id, text)).toDF("doc_id", "text")
     // The span "a b c d" appears in both committed batches.
-    DedupOps.incrementalSpansEpoch(spark, doc(1L, "a b c d x"),
-      "text", "doc_id", ledger, "epoch0", spanTokens = 4).commitLedger()
-    val p1 = DedupOps.incrementalSpansEpoch(spark, doc(2L, "a b c d y"),
-      "text", "doc_id", ledger, "epoch1", spanTokens = 4)
+    DedupOps.incrementalSpans(spark, doc(1L, "a b c d x"),
+      "text", "doc_id", ledger, spanTokens = 4, epochToken = Some("epoch0")).commitLedger()
+    val p1 = DedupOps.incrementalSpans(spark, doc(2L, "a b c d y"),
+      "text", "doc_id", ledger, spanTokens = 4, epochToken = Some("epoch1"))
     p1.commitLedger()
 
     val r = MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 1L)
@@ -536,8 +536,8 @@ class MaintenanceOpsSpec extends AnyFunSuite {
 
     // The folded ledger still answers: a third doc carrying the span
     // sees 2 ledgered + 1 in-batch distinct docs.
-    val p2 = DedupOps.incrementalSpansEpoch(spark, doc(3L, "a b c d z"),
-      "text", "doc_id", ledger, "epoch2", spanTokens = 4)
+    val p2 = DedupOps.incrementalSpans(spark, doc(3L, "a b c d z"),
+      "text", "doc_id", ledger, spanTokens = 4, epochToken = Some("epoch2"))
     assert(p2.flags.as[(Long, Int, Long)].collect().toSet == Set((3L, 0, 3L)))
 
     // Crash simulation: epoch1's directory resurrected AFTER its rows
@@ -547,8 +547,8 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       ledger, "_graft_epoch=epoch1")))
     // Read side: the leftover is at-or-under the fold marker, so the
     // collision read EXCLUDES it — n_docs stays 3, not 4.
-    val p3 = DedupOps.incrementalSpansEpoch(spark, doc(4L, "a b c d w"),
-      "text", "doc_id", ledger, "epoch3", spanTokens = 4)
+    val p3 = DedupOps.incrementalSpans(spark, doc(4L, "a b c d w"),
+      "text", "doc_id", ledger, spanTokens = 4, epochToken = Some("epoch3"))
     assert(p3.flags.as[(Long, Int, Long)].collect().toSet == Set((4L, 0, 3L)),
       "a crashed fold's leftover epoch must not double-count")
     // Re-running the fold deletes the leftover WITHOUT re-merging.

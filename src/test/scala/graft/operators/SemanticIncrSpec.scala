@@ -219,23 +219,25 @@ class SemanticIncrSpec extends AnyFunSuite {
   test("epoch replay is exactly-once: same token lands on itself") {
     val ledger = tmp()
     val base = axisVec(0)
-    KmeansOps.incrementalSemanticEpoch(
+    KmeansOps.incrementalSemantic(
       spark, Seq((2L, base)).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch0", k = 1, iters = 0, minCos = 0.9)
+      "embedding", "vec_id", ledger, k = 1, iters = 0, minCos = 0.9, epochToken = Some("epoch0"))
       .commitLedger()
     val batch1 = Seq(
       (11L, base),       // exact copy of the epoch0 vector: certain drop
       (13L, axisVec(1))) // fresh
       .toDF("vec_id", "embedding")
-    val first = KmeansOps.incrementalSemanticEpoch(
-      spark, batch1, "embedding", "vec_id", ledger, "epoch1", k = 1, iters = 0, minCos = 0.9)
+    val first = KmeansOps.incrementalSemantic(
+      spark, batch1, "embedding", "vec_id", ledger, k = 1, iters = 0, minCos = 0.9,
+      epochToken = Some("epoch1"))
     first.commitLedger()
     assert(first.survivors.select($"vec_id").as[Long].collect().toSet == Set(13L))
     // Crash between ledger commit and checkpoint commit: the replayed
     // epoch1 excludes its OWN partition on read, so 13 is not "a dup of
     // itself" and the survivor set is identical.
-    val replay = KmeansOps.incrementalSemanticEpoch(
-      spark, batch1, "embedding", "vec_id", ledger, "epoch1", k = 1, iters = 0, minCos = 0.9)
+    val replay = KmeansOps.incrementalSemantic(
+      spark, batch1, "embedding", "vec_id", ledger, k = 1, iters = 0, minCos = 0.9,
+      epochToken = Some("epoch1"))
     replay.commitLedger()
     assert(replay.survivors.select($"vec_id").as[Long].collect().toSet == Set(13L))
     assert(replay.ledgerHits.as[Long].collect().toSet == Set(11L))

@@ -124,9 +124,9 @@ class SrpIncrSpec extends AnyFunSuite {
   test("epoch replay is exactly-once: same token lands on itself") {
     val ledger = tmp()
     val base2 = unitVec(2L)
-    SrpOps.incrementalNeardupEpoch(spark,
+    SrpOps.incrementalNeardup(spark,
       Seq((2L, base2)).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger, "epoch0").commitLedger()
+      "embedding", "vec_id", ledger, epochToken = Some("epoch0")).commitLedger()
     val batch1 = Seq(
       // An exact copy of the epoch0 vector: identical signature, so the
       // band collision is GUARANTEED (a 0.02-noise copy collides with
@@ -134,15 +134,15 @@ class SrpIncrSpec extends AnyFunSuite {
       // recall geometry, so take the certain case).
       (11L, base2),
       (13L, unitVec(13L))).toDF("vec_id", "embedding")
-    val first = SrpOps.incrementalNeardupEpoch(
-      spark, batch1, "embedding", "vec_id", ledger, "epoch1")
+    val first = SrpOps.incrementalNeardup(
+      spark, batch1, "embedding", "vec_id", ledger, epochToken = Some("epoch1"))
     first.commitLedger()
     assert(first.survivors.select($"vec_id").as[Long].collect().toSet == Set(13L))
     // Crash between ledger commit and checkpoint commit: the replayed
     // epoch1 excludes its OWN partition on read, so 13 is not "a near-dup
     // of itself" and the survivor set is identical.
-    val replay = SrpOps.incrementalNeardupEpoch(
-      spark, batch1, "embedding", "vec_id", ledger, "epoch1")
+    val replay = SrpOps.incrementalNeardup(
+      spark, batch1, "embedding", "vec_id", ledger, epochToken = Some("epoch1"))
     replay.commitLedger()
     assert(replay.survivors.select($"vec_id").as[Long].collect().toSet == Set(13L))
     assert(replay.ledgerHits.as[Long].collect().toSet == Set(11L))

@@ -417,11 +417,11 @@ class StreamingSpec extends AnyFunSuite {
       // At-least-once redelivery of epoch 1: same batch, same token —
       // identical flags (own-epoch counts excluded), idempotent sink
       // lands on itself.
-      val pending = graft.operators.DedupOps.incrementalSpansEpoch(
+      val pending = graft.operators.DedupOps.incrementalSpans(
         spark,
         Seq((3L, "intro words the shared legal header text trailing"))
           .toDF("doc_id", "text"),
-        "text", "doc_id", ledger, "epoch1", spanTokens = 5)
+        "text", "doc_id", ledger, spanTokens = 5, epochToken = Some("epoch1"))
       sink.writeBatch(pending.flags, "flags", "epoch1")
       pending.commitLedger()
       assert(flags() == Set((3L, 2, 2L)),
@@ -459,11 +459,11 @@ class StreamingSpec extends AnyFunSuite {
       // checkpoint commit): replaying the SAME batch with the SAME token
       // must land on itself — the epoch-partitioned ledger excludes the
       // batch's own buckets, so doc 5 is not "a near-dup of itself".
-      val pending = graft.operators.LshOps.incrementalNeardupEpoch(
+      val pending = graft.operators.LshOps.incrementalNeardup(
         spark,
         Seq((4L, "alpha beta gamma delta epsilon zeta"),
           (5L, "totally fresh words appearing nowhere else")).toDF("doc_id", "text"),
-        "text", "doc_id", ledger, "epoch1")
+        "text", "doc_id", ledger, epochToken = Some("epoch1"))
       sink.writeBatch(pending.survivors, "docs", "epoch1")
       pending.commitLedger()
       assert(corpus() == Set(1L, 2L, 5L), "epoch replay must be exactly-once")
@@ -542,8 +542,8 @@ class StreamingSpec extends AnyFunSuite {
     // A prior run committed epochs 0 and 1 into the ledger...
     Seq(("epoch0", 1L, "alpha beta gamma delta epsilon zeta"),
       ("epoch1", 2L, "one two three four five six seven")).foreach { case (tok, id, txt) =>
-      graft.operators.LshOps.incrementalNeardupEpoch(
-        spark, Seq((id, txt)).toDF("doc_id", "text"), "text", "doc_id", ledger, tok)
+      graft.operators.LshOps.incrementalNeardup(
+        spark, Seq((id, txt)).toDF("doc_id", "text"), "text", "doc_id", ledger, epochToken = Some(tok))
         .commitLedger()
     }
     // ...then the checkpoint was lost: a fresh query restarts batchIds at 0,
@@ -578,9 +578,9 @@ class StreamingSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft_stream_folded")
     val sink = Connectors.IdempotentParquetSink(s"$base/out")
     val ledger = s"$base/ledger"
-    graft.operators.LshOps.incrementalNeardupEpoch(
+    graft.operators.LshOps.incrementalNeardup(
       spark, Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"),
-      "text", "doc_id", ledger, "epoch5")
+      "text", "doc_id", ledger, epochToken = Some("epoch5"))
       .commitLedger()
     graft.operators.MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 5L)
     val mem = MemoryStream[(Long, String)]
