@@ -10,6 +10,19 @@ import org.apache.spark.sql.SparkSession
   * re-plan for skew/broadcast at scale), shuffle partitions sized to local
   * cores rather than the 200 default (at cluster scale this is set to
   * ~2-3x total cores by the submitter).
+  *
+  * Artifact isolation is off. With it on (Spark's default) every session
+  * gets its own job artifact state, executors run its tasks under a
+  * classloader built for that session, and Spark 4.1 keys its
+  * generated-code cache by the task's context classloader. A streaming
+  * query runs in a fresh clone of the session, so each query start (one
+  * per `--stream` drain) misses the cache: every generated class is
+  * compiled again, byte-identical to the last drain's, and the new classes
+  * start out interpreted. The engine adds no session artifacts (no
+  * `addArtifact`, `addJar` or `addFile`), so isolation buys it nothing.
+  * Turning it back on restores per-session jar visibility at the cost of
+  * that recompile: 42–51 classes per near-dup drain in `DrainCountersSpec`,
+  * against none for a restarted drain with it off.
   */
 object GraftSession {
 
@@ -32,6 +45,15 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // One executor classloader for every session, so a restarted drain
+      // reuses the compiled code of the last one (see the scaladoc above).
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // Generated classes are named without their whole-stage id. Adaptive
+      // execution numbers a plan's stages in the order its query stages
+      // finish, so the same plan can number them differently from one
+      // run to the next, and an id in the class name is then a new
+      // source text that misses the cache.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // Parquet pushdown + vectorized reads are on by default; pinned here
       // because the 100 TB design depends on them (SURVEY §4).
       .config("spark.sql.parquet.filterPushdown", "true")

@@ -22,6 +22,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *    read excludes that epoch, so a crash at ANY point (before the write,
   *    between write and commit, after commit but before the caller's
   *    checkpoint) replays to the identical output and ledger.
+  *  - One layout. A ledger is flat (plain commits) or epoch-partitioned
+  *    (epoch commits), never both: the commit refuses, before it writes,
+  *    rows in the layout the directory does not have.
   *  - Pin before data. The commit writes the space's pin before the
   *    first rows. A crash between the two leaves a pinned-but-empty
   *    ledger, which reads as empty; never committed rows whose parameters
@@ -154,7 +157,8 @@ object Ledger {
     }
     if (!hasData) None
     else {
-      val raw = spark.read.parquet(dir)
+      // The schema comes from one footer read on the driver: no Spark job.
+      val raw = graft.pipeline.Connectors.readParquet(spark, dir)
       // A count space's totals are read whole in either mode: a plain
       // read of an epoch ledger is how its lifetime totals are queried.
       val epochs = epochToken.isDefined ||
@@ -186,6 +190,7 @@ object Ledger {
       extraPartitionCols: Seq[String] = Nil): Unit = {
     val path = new Path(dir)
     val fs = path.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    refuseOtherLayout(fs, path, space, epochToken.isDefined)
     space.pin.foreach { pin =>
       readPin(fs, path, pin.file) match {
         case Some(stored) if stored != pinBody.trim =>
@@ -213,6 +218,31 @@ object Ledger {
     (if (parts.isEmpty) writer else writer.partitionBy(parts: _*)).parquet(dir)
     if (space.countsSummed) MaintenanceOps.declareCountFoldRule(fs, path)
   }
+
+  /** Refuses a commit whose layout differs from the ledger's: rows appended
+    * flat beside `_graft_epoch=` partitions, or an epoch partition beside
+    * flat part files. Either way one of the two sets of rows drops out of
+    * later reads (Spark reads a directory as partitioned or as flat, not
+    * both), so the batch would be committed and silently lost. */
+  private def refuseOtherLayout(
+      fs: FileSystem, path: Path, space: Space, epochs: Boolean): Unit =
+    if (fs.exists(path)) {
+      val names = fs.listStatus(path).map(_.getPath.getName)
+      val clash =
+        if (epochs) names.filterNot(n => n.startsWith("_") || n.startsWith("."))
+        else names.filter(_.startsWith("_graft_epoch="))
+      if (clash.nonEmpty) {
+        val (has, asks) =
+          if (epochs) ("flat (part files at its root)", "an epoch partition")
+          else ("epoch-partitioned (`_graft_epoch=` directories)", "flat part files")
+        throw new IllegalStateException(
+          s"${space.name} at $path is $has, but this commit would add $asks " +
+            s"(found ${clash.sorted.take(3).mkString(", ")}) — rows of one layout are " +
+            "not read beside the other, so the batch would be lost. Commit with the " +
+            "ledger's own mode (with an epoch token into an epoch ledger, without one " +
+            "into a flat ledger) or rebuild it.")
+      }
+    }
 
   /** The content of the pin file `file` in `dir`, trimmed, or None when
     * it is absent. The one reader of every pin. */

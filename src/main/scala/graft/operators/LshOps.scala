@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -201,6 +201,29 @@ object LshOps {
     AutoBanded(banded, n, vocabEstimate = vocab, docCount = nDocs)
   }
 
+  /** (id, b, bh) rows: one per band of each doc, none for a doc below
+    * `shingleN` tokens. ONE pass per doc (round 18): the fused expression
+    * tokenizes once and emits an EMPTY band array below shingleN tokens,
+    * so the posexplode drops sub-shingle docs — hazard 1's former
+    * tokenCount filter (which re-tokenized) plus the interpreted HOF band
+    * fold, both gone. Bit-equal rows, parity-gated in NativeExprSpec. */
+  private def bandRows(
+      docs: DataFrame,
+      textCol: String,
+      idCol: String,
+      k: Int,
+      shingleN: Int,
+      nBands: Int,
+      rowsPerBand: Int,
+      maxBucket: Int): DataFrame = {
+    require(k == nBands * rowsPerBand,
+      s"signature length k=$k must equal nBands*rowsPerBand=${nBands * rowsPerBand} " +
+        "(a shorter signature would band over missing values; a longer one would ignore rows)")
+    require(maxBucket > 0, s"maxBucket must be positive: $maxBucket")
+    docs.select(col(idCol), posexplode(
+      minhashBandHashes(col(textCol), k, shingleN, nBands, rowsPerBand)).as(Seq("b", "bh")))
+  }
+
   /** Explode docs into capped (id, band, bandHash) rows, ready for the
     * candidate-pair self-join. One shuffle on (b, bh) for the bucket-size
     * window; the downstream self-join reuses that partitioning.
@@ -214,18 +237,7 @@ object LshOps {
       nBands: Int = 4,
       rowsPerBand: Int = 4,
       maxBucket: Int = 10000): Banded = {
-    require(k == nBands * rowsPerBand,
-      s"signature length k=$k must equal nBands*rowsPerBand=${nBands * rowsPerBand} " +
-        "(a shorter signature would band over missing values; a longer one would ignore rows)")
-    require(maxBucket > 0, s"maxBucket must be positive: $maxBucket")
-    val exploded = docs
-      // ONE pass per doc (round 18): the fused expression tokenizes once
-      // and emits an EMPTY band array below shingleN tokens, so the
-      // posexplode drops sub-shingle docs — hazard 1's former tokenCount
-      // filter (which re-tokenized) plus the interpreted HOF band fold,
-      // both gone. Bit-equal rows, parity-gated in NativeExprSpec.
-      .select(col(idCol), posexplode(
-        minhashBandHashes(col(textCol), k, shingleN, nBands, rowsPerBand)).as(Seq("b", "bh")))
+    val exploded = bandRows(docs, textCol, idCol, k, shingleN, nBands, rowsPerBand, maxBucket)
       // Hazard 2: bucket occupancy, computed on the same (b, bh)
       // partitioning the self-join will use.
       .withColumn("_graft_bn", count(lit(1)).over(Window.partitionBy(col("b"), col("bh"))))
@@ -273,6 +285,21 @@ object LshOps {
     * 3-gram ledger would simply never collide and every near-dup would
     * sail through — so the ledger pins `(k, shingleN, nBands,
     * rowsPerBand)` ([[Ledger.MinhashBands]]).
+    *
+    * The whole verdict is ONE plan over the batch's band rows, pinned by
+    * a single `localCheckpoint`: each (id, b, bh) row meets the prior
+    * ledger's rows of its bucket in one (b, bh) window, rows of buckets
+    * over `maxBucket` are dropped, `hit` marks every row of an id with a
+    * bucket in the ledger, `m` is the smallest non-hit id of each bucket,
+    * and `dropped` marks every row of a non-hit id above the `m` of one
+    * of its buckets — [[purgeList]]'s keep-min-id rule. A row whose id is
+    * null is never dropped and never drops another, as under the
+    * equi-joins of that rule. The three outputs are lazy projections of
+    * the pinned frame: `ledgerHits` the hit ids, `survivors` the batch
+    * without hit or dropped ids, and the committed buckets those of the
+    * remaining rows. The pin fixes the pre-commit ledger read, so every
+    * output evaluated after `commitLedger()` still sees the ledger as it
+    * was; nothing is cached, so nothing outlives the batch.
     */
   def incrementalNeardup(
       spark: org.apache.spark.sql.SparkSession,
@@ -286,43 +313,43 @@ object LshOps {
       rowsPerBand: Int = 4,
       maxBucket: Int = 10000,
       epochToken: Option[String] = None): Ledger.Pending = {
-    val banded = bandedMinhash(batch, textCol, idCol, k, shingleN, nBands, rowsPerBand, maxBucket)
+    val rows = bandRows(batch, textCol, idCol, k, shingleN, nBands, rowsPerBand, maxBucket)
+      .withColumn("_graft_l", lit(false))
     val params = s"k=$k,shingleN=$shingleN,nBands=$nBands,rowsPerBand=$rowsPerBand"
     val prior = Ledger.prior(spark, ledgerDir, Ledger.MinhashBands, params, epochToken)
-    // Pinned eagerly: the hit set READS the ledger, and every downstream
-    // frame (keptBands, survivors) must keep seeing the PRE-commit ledger
-    // even if evaluated after commitLedger() appended to it.
-    val hits = (prior match {
-      case Some(l) =>
-        banded.bands.join(
-          l.select(col("_graft_b").as("b"), col("_graft_bh").as("bh")).distinct(),
-          Seq("b", "bh"), "left_semi")
-          .select(col(idCol)).distinct()
-      case None => banded.bands.select(col(idCol)).filter(lit(false))
-    }).localCheckpoint(true)
-    val keptBands = banded.bands.join(hits, Seq(idCol), "left_anti")
-    // Eager so the banded cache can be RELEASED before this call returns:
-    // a streaming caller runs one ingest per micro-batch, and Spark's
-    // CacheManager holds persisted frames until explicit unpersist — the
-    // pre-round-8 lazy batchDrops kept the cache referenced, leaking one
-    // cached signature frame per epoch for the whole drain.
-    val batchDrops = purgeList(keptBands, idCol).localCheckpoint(true)
-    val survivors = batch
-      .join(hits, Seq(idCol), "left_anti")
-      .join(batchDrops.withColumnRenamed("drop_id", idCol), Seq(idCol), "left_anti")
-    // Pin survivor buckets BEFORE the commit can change what the ledger
-    // read would return (same localCheckpoint rationale as DedupOps).
-    val survivorBuckets = keptBands
-      .join(batchDrops.withColumnRenamed("drop_id", idCol), Seq(idCol), "left_anti")
-      .select(col("b").as("_graft_b"), col("bh").as("_graft_bh")).distinct()
+    // Ledger buckets ride in the batch's (b, bh) exchange as flagged rows:
+    // one shuffle settles both membership and occupancy.
+    val keyed = prior.fold(rows)(l => rows.unionByName(l.select(
+      lit(null).cast(rows.schema(idCol).dataType).as(idCol),
+      col("_graft_b").as("b"), col("_graft_bh").as("bh"), lit(true).as("_graft_l"))))
+    val id = col(idCol)
+    val bucket = Window.partitionBy(col("b"), col("bh"))
+    val doc = Window.partitionBy(id)
+    val hit = col("_graft_hit")
+    // A null id cannot be anti-joined out of the batch, so it stays live.
+    val live = !hit || id.isNull
+    val verdict = keyed
+      .withColumn("_graft_in", max(col("_graft_l")).over(bucket))
+      .withColumn("_graft_bn", count(when(!col("_graft_l"), 1)).over(bucket))
+      .filter(!col("_graft_l") && col("_graft_bn") <= maxBucket)
+      .withColumn("_graft_hit", max(col("_graft_in")).over(doc))
+      .withColumn("_graft_m", min(when(live, id)).over(bucket))
+      .withColumn("_graft_drop",
+        coalesce(max(live && id =!= col("_graft_m")).over(doc), lit(false)))
+      .select(id, col("b"), col("bh"), hit, col("_graft_drop"))
       .localCheckpoint(true)
-    // Everything downstream (hits, batchDrops, survivorBuckets) is pinned;
-    // survivors only references the caller's batch plus pinned frames.
-    banded.unpersist()
+    // Both drop sets are ids of one batch, at most nBands rows per id:
+    // broadcast as they are, so the survivors' write never shuffles the
+    // batch's documents.
+    def ids(where: Column) = broadcast(verdict.filter(where).select(id))
     new Ledger.Pending(
-      survivors,
-      hits,
-      () => Ledger.commit(survivorBuckets, ledgerDir, Ledger.MinhashBands, params, epochToken))
+      batch.join(ids(hit), Seq(idCol), "left_anti")
+        .join(ids(col("_graft_drop")), Seq(idCol), "left_anti"),
+      verdict.filter(hit).select(id).distinct(),
+      () => Ledger.commit(
+        verdict.filter(live && !col("_graft_drop"))
+          .select(col("b").as("_graft_b"), col("bh").as("_graft_bh")).distinct(),
+        ledgerDir, Ledger.MinhashBands, params, epochToken))
   }
 
   /** A dedup-ledger recall audit's result (E155). `recall` is the mean,

@@ -67,7 +67,7 @@ object Connectors {
     * the way to the first data file, a file column repeats a partition
     * column, or there is no data file (then Spark raises its own error).
     */
-  private[pipeline] def readParquet(spark: SparkSession, path: String): DataFrame =
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
     footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {

@@ -338,10 +338,8 @@ class CrashSweepSpec extends AnyFunSuite {
       val ops = LedgerSpaces.ingests(space)
       def epoch1(dir: String): Unit = {
         val p = ops.prepare(spark, dir, 1, Some("epoch1"))
-        // Materialized first: a write whose plan has an exchange commits
-        // on an AQE stage thread, where CrashFs would not count it.
         graft.pipeline.Connectors.IdempotentParquetSink(s"$dir-sink")
-          .writeBatch(p.output.localCheckpoint(true), "out", "epoch1")
+          .writeBatch(p.output, "out", "epoch1")
         p.commit()
       }
       def sinkRows(dir: String) = LedgerSpaces.rowSet(

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The ledger protocol, table-driven over every space in
   * [[Ledger.spaces]] through [[LedgerSpaces.ingests]]: the commit's pin
-  * check and the prior read's handling of a directory that holds only
-  * Spark's commit debris. */
+  * and layout checks and the prior read's handling of a directory that
+  * holds only Spark's commit debris. */
 class LedgerProtocolSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -83,6 +83,49 @@ class LedgerProtocolSpec extends AnyFunSuite {
       got.commit()
       assert(LedgerSpaces.ledgerView(spark, space, ops.ledgerDir(root)) ==
         LedgerSpaces.ledgerView(spark, space, ops.ledgerDir(clean)))
+    }
+  }
+
+  test("a plain commit into an epoch-partitioned count ledger is refused, not lost") {
+    // The loss this refusal closes: epoch0 {a:2, b:1}, then a plain
+    // commit of {a} appended a flat part file beside the epoch
+    // partitions, and a plain read reported a=2, not 3.
+    import spark.implicits._
+    val ledger = tmp("layout_hh")
+    def ingest(values: Seq[String], token: Option[String]) =
+      SketchOps.incrementalHeavyHitters(spark, values.toDF("v"), "v", ledger,
+        capacity = 16, k = 3, epochToken = token)
+    def top(p: SketchOps.PendingHeavyHitters) = p.top.as[(String, Long, Long)].collect().toSet
+    ingest(Seq("a", "a", "b"), Some("epoch0")).commitLedger()
+    val plain = ingest(Seq("a"), None)
+    assert(top(plain) == Set(("a", 3L, 0L), ("b", 1L, 0L)))
+    val e = intercept[IllegalStateException](plain.commitLedger())
+    assert(e.getMessage.contains("heavy-hitter ledger") &&
+      e.getMessage.contains("epoch-partitioned") && e.getMessage.contains("flat"), e.getMessage)
+    // Nothing was written: the ledger still holds epoch0 alone.
+    assert(top(ingest(Nil, None)) == Set(("a", 2L, 0L), ("b", 1L, 0L)))
+    val next = ingest(Seq("a"), Some("epoch1"))
+    next.commitLedger()
+    assert(top(ingest(Nil, None)) == Set(("a", 3L, 0L), ("b", 1L, 0L)))
+  }
+
+  // The PQ store has no plain mode: its ingest always takes an epoch.
+  for (space <- Ledger.spaces if space != Ledger.PqCodes) {
+    test(s"${space.name}: a commit in the other layout is refused and writes nothing") {
+      val ops = LedgerSpaces.ingests(space)
+      for ((winner, loser) <- Seq((Some("epoch0"), None), (None, Some("epoch1")))) {
+        // Both batches see an empty ledger; the winner commits first.
+        val root = tmp("layout")
+        ops.setup(spark, root)
+        val a = ops.prepare(spark, root, 0, winner)
+        val b = ops.prepare(spark, root, 1, loser)
+        a.commit()
+        val files = dataFiles(ops.ledgerDir(root))
+        val e = intercept[IllegalStateException](b.commit())
+        assert(e.getMessage.contains(space.name) && e.getMessage.contains("flat") &&
+          e.getMessage.contains("epoch"), e.getMessage)
+        assert(dataFiles(ops.ledgerDir(root)) == files, "the refused commit wrote rows")
+      }
     }
   }
 }
