@@ -23,6 +23,23 @@ import org.apache.spark.sql.SparkSession
   * Turning it back on restores per-session jar visibility at the cost of
   * that recompile: 42–51 classes per near-dup drain in `DrainCountersSpec`,
   * against none for a restarted drain with it off.
+  *
+  * The local file system starts no process. Spark ships Hadoop without
+  * libhadoop, and there Hadoop's local FS runs a `chmod` process for every
+  * permission it sets (each directory level a `mkdirs` creates, each file
+  * and each `.crc` sidecar) and a `readlink` process in `getFileLinkStatus`,
+  * which every streaming checkpoint-log rename calls. That `readlink` is
+  * handed the path's `file:` URI, a name no file has, so it always fails
+  * and the status returned is the plain file status anyway. With Hadoop's
+  * local FS, one near-dup drain epoch on a fresh checkpoint started 70
+  * processes (38 `chmod`, 32 `readlink`). `fs.file.impl` and
+  * `fs.AbstractFileSystem.file.impl` bind the same checksummed local FS
+  * over [[NoForkRawLocalFileSystem]], which sets permissions in process and
+  * falls back to Hadoop's code where that would differ. It is a fixed engine default, not an option. Hadoop
+  * caches one local `FileSystem` per JVM and user, whatever configuration
+  * later asks for it, so the binding holds for every file system opened in
+  * a JVM whose first local FS came from this session's configuration: the
+  * CLI, the benchmark and the test suite all build their session first.
   */
 object GraftSession {
 
@@ -54,6 +71,10 @@ object GraftSession {
       // run to the next, and an id in the class name is then a new
       // source text that misses the cache.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // The local file system without its chmod and readlink processes
+      // (see the scaladoc above).
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
       // Parquet pushdown + vectorized reads are on by default; pinned here
       // because the 100 TB design depends on them (SURVEY §4).
       .config("spark.sql.parquet.filterPushdown", "true")

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** MinHash + LSH banding as a reusable operator (SURVEY §2.3 E38/E51): the
   * shared machinery behind the q48 candidate-pair and q52 purge-list
@@ -286,20 +287,29 @@ object LshOps {
     * sail through — so the ledger pins `(k, shingleN, nBands,
     * rowsPerBand)` ([[Ledger.MinhashBands]]).
     *
-    * The whole verdict is ONE plan over the batch's band rows, pinned by
-    * a single `localCheckpoint`: each (id, b, bh) row meets the prior
-    * ledger's rows of its bucket in one (b, bh) window, rows of buckets
-    * over `maxBucket` are dropped, `hit` marks every row of an id with a
-    * bucket in the ledger, `m` is the smallest non-hit id of each bucket,
-    * and `dropped` marks every row of a non-hit id above the `m` of one
-    * of its buckets — [[purgeList]]'s keep-min-id rule. A row whose id is
-    * null is never dropped and never drops another, as under the
-    * equi-joins of that rule. The three outputs are lazy projections of
-    * the pinned frame: `ledgerHits` the hit ids, `survivors` the batch
-    * without hit or dropped ids, and the committed buckets those of the
-    * remaining rows. The pin fixes the pre-commit ledger read, so every
-    * output evaluated after `commitLedger()` still sees the ledger as it
-    * was; nothing is cached, so nothing outlives the batch.
+    * The verdict takes ONE exchange. The batch's band rows and the prior
+    * ledger's buckets (as flagged rows) meet in one `(b, bh)` window,
+    * pinned by a single `localCheckpoint`: each under-cap batch row with
+    * its bucket's ledger flag and its occupancy (rows of buckets over
+    * `maxBucket` drop out). The driver then reads the COLLIDING rows
+    * once, those whose bucket is in the ledger or holds two or more batch
+    * rows, each bucket's rows in Spark's id order, and settles two id sets
+    * from them: the hits (ids with a bucket in the ledger) and the drops
+    * (every non-hit id above the smallest non-hit id of one of its
+    * buckets: [[purgeList]]'s keep-min-id rule). A null id is never
+    * dropped and never drops another, and equal ids never drop each
+    * other, as under the equi-joins of that rule. That read is at most
+    * `nBands` rows per colliding doc, the order of the two id sets; the
+    * singleton buckets, most rows, never leave the executors.
+    *
+    * Nothing shuffles the batch again. `ledgerHits` is the hit set,
+    * `survivors` the batch anti-joined with the broadcast hits and then
+    * with the broadcast drops, and the committed buckets a filter of the
+    * pinned rows: a singleton bucket whose id is null or in neither set,
+    * and each colliding bucket that holds such an id once, through one
+    * row the driver picked. The pin fixes the pre-commit ledger read, so
+    * every output evaluated after `commitLedger()` still sees the ledger
+    * as it was; nothing is cached, so nothing outlives the batch.
     */
   def incrementalNeardup(
       spark: org.apache.spark.sql.SparkSession,
@@ -324,32 +334,71 @@ object LshOps {
       col("_graft_b").as("b"), col("_graft_bh").as("bh"), lit(true).as("_graft_l"))))
     val id = col(idCol)
     val bucket = Window.partitionBy(col("b"), col("bh"))
-    val doc = Window.partitionBy(id)
-    val hit = col("_graft_hit")
-    // A null id cannot be anti-joined out of the batch, so it stays live.
-    val live = !hit || id.isNull
-    val verdict = keyed
+    val inLedger = col("_graft_in")
+    val colliding = inLedger || col("_graft_bn") >= 2
+    val row = col("_graft_row")
+    // Materialized by the colliding-row read below, its first action: the
+    // exchange's map stage and that read are the verdict's two jobs.
+    val pin = keyed
       .withColumn("_graft_in", max(col("_graft_l")).over(bucket))
       .withColumn("_graft_bn", count(when(!col("_graft_l"), 1)).over(bucket))
       .filter(!col("_graft_l") && col("_graft_bn") <= maxBucket)
-      .withColumn("_graft_hit", max(col("_graft_in")).over(doc))
-      .withColumn("_graft_m", min(when(live, id)).over(bucket))
-      .withColumn("_graft_drop",
-        coalesce(max(live && id =!= col("_graft_m")).over(doc), lit(false)))
-      .select(id, col("b"), col("bh"), hit, col("_graft_drop"))
-      .localCheckpoint(true)
-    // Both drop sets are ids of one batch, at most nBands rows per id:
-    // broadcast as they are, so the survivors' write never shuffles the
-    // batch's documents.
-    def ids(where: Column) = broadcast(verdict.filter(where).select(id))
+      .select(id, col("b"), col("bh"), inLedger, col("_graft_bn"),
+        monotonically_increasing_id().as("_graft_row"))
+      .localCheckpoint(eager = false)
+    // The window left every bucket inside one partition, so sorting each
+    // partition by id puts every bucket's rows in Spark's id order.
+    val v = settle(pin.filter(colliding)
+      .select(id, col("b"), col("bh"), inLedger, row)
+      .sortWithinPartitions(id)
+      .collect())
+    // One scan of driver rows, not a local relation: the optimizer would
+    // fold an empty set's anti join away and the plan would vary by batch.
+    val settled = spark.createDataFrame(
+      spark.sparkContext.parallelize(v.hits.map(Row(_, true)) ++ v.drops.map(Row(_, false)), 1),
+      StructType(Seq(pin.schema(idCol).copy(nullable = true),
+        StructField("_graft_hit", BooleanType))))
+    def ids(hit: Boolean) = settled.filter(col("_graft_hit") === hit).select(id)
+    // A singleton bucket is committed unless its id is settled; a colliding
+    // one through the one row the driver kept for it.
+    val committed = when(colliding, row.isInCollection(v.kept))
+      .otherwise(id.isNull || !id.isInCollection((v.hits ++ v.drops).filter(_ != null)))
     new Ledger.Pending(
-      batch.join(ids(hit), Seq(idCol), "left_anti")
-        .join(ids(col("_graft_drop")), Seq(idCol), "left_anti"),
-      verdict.filter(hit).select(id).distinct(),
+      batch.join(broadcast(ids(true)), Seq(idCol), "left_anti")
+        .join(broadcast(ids(false)), Seq(idCol), "left_anti"),
+      ids(true),
       () => Ledger.commit(
-        verdict.filter(live && !col("_graft_drop"))
-          .select(col("b").as("_graft_b"), col("bh").as("_graft_bh")).distinct(),
+        pin.filter(committed).select(col("b").as("_graft_b"), col("bh").as("_graft_bh")),
         ledgerDir, Ledger.MinhashBands, params, epochToken))
+  }
+
+  /** What [[settle]] decides for an epoch: the hit ids, the drop ids, and
+    * one `_graft_row` for each colliding bucket that is committed. */
+  private final case class Verdict(hits: Seq[Any], drops: Seq[Any], kept: Seq[Long])
+
+  /** The verdict of [[incrementalNeardup]]'s colliding rows `(id, b, bh,
+    * inLedger, _graft_row)`, given each bucket's rows in Spark's id order,
+    * nulls first. An id is a hit when one of its rows is in a ledger
+    * bucket, a drop when a smaller non-hit id shares one of its buckets; a
+    * bucket is committed when a row of a null or unsettled id is in it.
+    * Ids are compared as Spark compares them: a float's -0.0 equals 0.0,
+    * NaNs equal each other, binary ids by content. */
+  private def settle(rows: Array[Row]): Verdict = {
+    def key(r: Row): Any = r.get(0) match {
+      case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+      case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+      case b: Array[Byte] => b.toSeq
+      case other => other
+    }
+    val hits = rows.filter(_.getBoolean(3)).map(r => key(r) -> r.get(0)).toMap
+    val buckets = rows.groupBy(r => (r.get(1), r.get(2))).values.toSeq
+    val drops = buckets.flatMap { bucket =>
+      val live = bucket.filter(r => !r.isNullAt(0) && !hits.contains(key(r)))
+      live.drop(1).filter(r => key(r) != key(live.head)).map(r => key(r) -> r.get(0))
+    }.toMap
+    val kept = buckets.flatMap(_.find(r => r.isNullAt(0) ||
+      !hits.contains(key(r)) && !drops.contains(key(r))).map(_.getLong(4)))
+    Verdict(hits.values.toSeq, drops.values.toSeq, kept)
   }
 
   /** A dedup-ledger recall audit's result (E155). `recall` is the mean,

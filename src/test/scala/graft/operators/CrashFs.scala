@@ -1,17 +1,19 @@
 package graft.operators
 
+import graft.NoForkRawLocalFileSystem
 import java.io.IOException
 import java.net.URI
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.TaskContext
 
 /** Fault-injecting LOCAL filesystem for crash-point sweeps, registered
   * under the `crash://` scheme (`fs.crash.impl`). Delegates every call
-  * to the local FS, but the Nth MUTATING call (rename / delete /
+  * to the engine's local FS (the fork-free one the session binds to
+  * `file://`), but the Nth MUTATING call (rename / delete /
   * create) issued on the DRIVER while armed throws instead of executing —
   * one injected crash per arming, everything after it proceeds
   * normally, exactly like a process that died at that boundary and was
@@ -31,7 +33,7 @@ import org.apache.spark.TaskContext
   *    either, for the same reason: the family's contract starts where
   *    the committed files exist.
   */
-class CrashFs extends RawLocalFileSystem {
+class CrashFs extends NoForkRawLocalFileSystem {
   override def getScheme: String = "crash"
   override def getUri: URI = CrashFs.Name
 

@@ -26,7 +26,7 @@ class DrainCountersSpec extends AnyFunSuite {
     (0 until n).map(i => (from + i, texts(if (i % 10 == 9) i - 1 else i))).toDF("doc_id", "text")
   }
 
-  test("one LSH epoch body (ingest, sink write, ledger commit) runs at most 12 jobs and stages") {
+  test("one LSH epoch body runs at most 8 jobs and 8 stages") {
     val base = Files.createTempDirectory("drain_jobs")
     val ledger = s"$base/ledger"
     val sink = Connectors.IdempotentParquetSink(s"$base/out")
@@ -43,7 +43,7 @@ class DrainCountersSpec extends AnyFunSuite {
     }
     val w = work(JobCount.Caller)
     info(s"epoch body: ${w.jobs} jobs, ${w.stages} stages")
-    assert(w.jobs <= 12 && w.stages <= 12, s"epoch body ran $w")
+    assert(w.jobs <= 8 && w.stages <= 8, s"epoch body ran $w")
     // The replayed docs 5000+ are ledger hits; the fresh batch survives
     // minus its own planted near-dups.
     val kept = spark.read.parquet(s"$base/out/docs").filter($"_graft_batch" === "epoch1")
