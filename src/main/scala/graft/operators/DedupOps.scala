@@ -61,6 +61,14 @@ object DedupOps {
       () => Ledger.commit(fps, ledgerDir, Ledger.Fingerprints, "", epochToken))
   }
 
+  /** `df` with the ingest's fingerprint pair of `textCol`: `_graft_fp`
+    * (charHash, ~30 bits) and `_graft_fp2` (xxhash64). Dedup identity is
+    * the pair, because charHash alone collides at birthday scale (~35 k
+    * docs) — and so is the fingerprint ledger's takedown key. */
+  private[graft] def withFingerprints(df: DataFrame, textCol: String): DataFrame =
+    df.withColumn("_graft_fp", TextFunctions.charHash(col(textCol)))
+      .withColumn("_graft_fp2", xxhash64(col(textCol)))
+
   /** Fingerprint the batch, drop rows whose fingerprint is in `prior`, keep
     * the smallest-id representative per within-batch fingerprint. Returns
     * the survivor frame WITH its fingerprint columns, eagerly checkpointed:
@@ -74,9 +82,7 @@ object DedupOps {
       textCol: String,
       idCol: String,
       prior: Option[DataFrame]): DataFrame = {
-    val withFp = batch
-      .withColumn("_graft_fp", TextFunctions.charHash(col(textCol)))
-      .withColumn("_graft_fp2", xxhash64(col(textCol)))
+    val withFp = withFingerprints(batch, textCol)
     val unseen = prior match {
       case Some(ledger) =>
         withFp.join(ledger.select(col("_graft_fp"), col("_graft_fp2")),

@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions.{col, lit}
   *    commit debris (`_temporary`, `.spark-staging-*`, left by a crash in
   *    the first commit) is an empty ledger.
   *  - Summed counts. Count spaces sum their rows at read, so the read
-  *    drops crashed-fold leftovers and the commit declares the `sum` fold
-  *    rule for `MaintenanceOps.foldEpochs`.
+  *    drops crashed-fold leftovers and `MaintenanceOps.foldEpochs` sums
+  *    them by key; it takes the space, so nothing on disk declares this.
   */
 object Ledger {
 
@@ -52,54 +52,62 @@ object Ledger {
 
   /** What differs between ledger spaces: the name error messages use, the
     * pin (None for a space whose rows need no parameters), the data
-    * columns without `_graft_epoch`, and whether rows are summed at read
-    * (a count space). */
+    * columns without `_graft_epoch`, whether rows are summed at read (a
+    * count space; its fold sums them by key), the partition columns
+    * nested below `_graft_epoch`, and the columns a takedown matches
+    * (empty: the space keeps no per-document rows to erase). */
   final case class Space(
       name: String,
       pin: Option[Pin],
       columns: Set[String],
-      countsSummed: Boolean)
+      countsSummed: Boolean,
+      partitionCols: Seq[String],
+      eraseKeys: Seq[String])
 
-  /** Exact (charHash, xxhash64) document fingerprints. */
+  /** Exact (charHash, xxhash64) document fingerprints, erased on the
+    * pair: `_graft_fp` alone collides at birthday scale (~35 k docs). */
   val Fingerprints = Space("fingerprint ledger", None,
-    Set("_graft_fp", "_graft_fp2"), countsSummed = false)
+    Set("_graft_fp", "_graft_fp2"), countsSummed = false, Nil, Seq("_graft_fp", "_graft_fp2"))
 
   /** Span-key distinct-document counts, pinned on the window width. */
   val Spans = Space("span ledger",
     Some(Pin("_graft_span_construction", "duplicate spans would silently never collide")),
-    Set("_graft_h1", "_graft_h2", "_graft_n"), countsSummed = true)
+    Set("_graft_h1", "_graft_h2", "_graft_n"), countsSummed = true, Nil, Nil)
 
   /** MinHash (band, bucket) keys, pinned on the banding. */
   val MinhashBands = Space("band ledger",
     Some(Pin("_graft_lsh_meta", "near-dups would silently never collide")),
-    Set("_graft_b", "_graft_bh"), countsSummed = false)
+    Set("_graft_b", "_graft_bh"), countsSummed = false, Nil, Nil)
 
   /** SRP (band, bucket, vector) rows, pinned on the banding and the
-    * verify threshold. */
+    * verify threshold; erased on the stored vector. */
   val SrpBands = Space("SRP band ledger",
     Some(Pin("_graft_srp_meta", "near-dups would silently never collide")),
-    Set("_graft_b", "_graft_bv", "_graft_vec"), countsSummed = false)
+    Set("_graft_b", "_graft_bv", "_graft_vec"), countsSummed = false, Nil, Seq("_graft_vec"))
 
   /** (cluster, vector) rows under a pinned k-means model: the pin is the
-    * parameter line followed by the k centroid rows. */
+    * parameter line followed by the k centroid rows. Erased on the
+    * stored vector. */
   val Clusters = Space("semantic ledger",
     Some(Pin("_graft_semantic_model",
       "assignment against a differently-shaped model would relabel the cluster space",
       noun = "model pin")),
-    Set("_graft_cluster", "_graft_vec"), countsSummed = false)
+    Set("_graft_cluster", "_graft_vec"), countsSummed = false, Nil, Seq("_graft_vec"))
 
   /** Misra–Gries counters plus the null-keyed error mass, pinned on the
     * capacity. */
   val HeavyHitters = Space("heavy-hitter ledger",
     Some(Pin("_graft_hh_construction", "the error bound would silently change meaning")),
-    Set("value", "_graft_n"), countsSummed = true)
+    Set("value", "_graft_n"), countsSummed = true, Nil, Nil)
 
   /** PQ codes (and refinement codes), partitioned by epoch and cell. The
     * store's construction pin lives at the store root, written once by
     * `PqOps.writePqArtifacts` and required by `PqOps.readPqArtifacts`
     * before any encode, so the codes namespaces carry none; their read is
-    * the store's own, so no columns are declared here. */
-  val PqCodes = Space("PQ code store", None, Set.empty, countsSummed = false)
+    * the store's own, so no columns are declared here. A takedown keys on
+    * the store's id column (`PqOps.pqStoreDelete`), not on a fixed one. */
+  val PqCodes = Space("PQ code store", None, Set.empty, countsSummed = false,
+    Seq("cell"), Nil)
 
   /** Every ledger space. Protocol specs iterate this list, so a new space
     * cannot skip them. */
@@ -179,15 +187,14 @@ object Ledger {
 
   /** Commit a prepared batch's ledger rows: pin (or check the pin), then
     * append the rows — or, with an `epochToken`, dynamically overwrite
-    * their `_graft_epoch` partition (`extraPartitionCols` nest below it)
-    * — then, for a count space, declare the fold rule. */
+    * their `_graft_epoch` partition (the space's partition columns nest
+    * below it). */
   def commit(
       rows: DataFrame,
       dir: String,
       space: Space,
       pinBody: String,
-      epochToken: Option[String],
-      extraPartitionCols: Seq[String] = Nil): Unit = {
+      epochToken: Option[String]): Unit = {
     val path = new Path(dir)
     val fs = path.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
     refuseOtherLayout(fs, path, space, epochToken.isDefined)
@@ -207,7 +214,7 @@ object Ledger {
           try out.write(pinBody.getBytes("UTF-8")) finally out.close()
       }
     }
-    val parts = epochToken.map(_ => "_graft_epoch").toSeq ++ extraPartitionCols
+    val parts = epochToken.map(_ => "_graft_epoch").toSeq ++ space.partitionCols
     val writer = epochToken match {
       case None => rows.write.mode(SaveMode.Append)
       case Some(t) =>
@@ -216,7 +223,36 @@ object Ledger {
           .option("partitionOverwriteMode", "dynamic")
     }
     (if (parts.isEmpty) writer else writer.partitionBy(parts: _*)).parquet(dir)
-    if (space.countsSummed) MaintenanceOps.declareCountFoldRule(fs, path)
+  }
+
+  /** The space of the ledger at `dir`: the one whose pin file it holds,
+    * or, for the fingerprint ledger, which has no pin, the one whose
+    * columns one footer read on the driver finds. Refuses a PQ store or
+    * code namespace (the store has its own maintenance commands), a
+    * directory without a pin or data, and data without a pin. */
+  def spaceAt(spark: SparkSession, dir: String): Space = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def refuse(why: String): Nothing = throw new IllegalArgumentException(s"$dir $why")
+    if (Iterator(path, path.getParent).exists(p =>
+        p != null && fs.exists(new Path(p, PqOps.PqMetaFile))))
+      refuse("is a PQ code store or one of its namespaces — fold it with --pq-fold, " +
+        "erase from it with --delete-ids --pq-store")
+    if (!fs.exists(path)) refuse("does not exist")
+    spaces.filter(_.pin.exists(p => fs.exists(new Path(path, p.file)))) match {
+      case Seq(space) => space
+      case Seq() if !MaintenanceOps.ledgerHasData(fs, path) =>
+        refuse("holds neither a ledger pin nor ledger data")
+      case Seq() =>
+        val cols = graft.pipeline.Connectors.readParquet(spark, dir).columns.toSet -
+          "_graft_epoch"
+        if (cols == Fingerprints.columns) Fingerprints
+        else refuse(s"holds data with columns ${cols.toSeq.sorted.mkString("[", ",", "]")} " +
+          "but no ledger pin — not a ledger, or its construction pin is lost " +
+          "(restore it or rebuild the ledger)")
+      case several =>
+        refuse(s"holds the pins of ${several.map(_.name).mkString(" and ")}")
+    }
   }
 
   /** Refuses a commit whose layout differs from the ledger's: rows appended

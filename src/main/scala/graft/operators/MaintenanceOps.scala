@@ -7,7 +7,8 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * pipelines (CopyJob appends a part per run) accumulate files far smaller
   * than a scan partition; at cluster scale the file-listing and per-file
   * open costs come to dominate reads. Compaction rewrites the directory
-  * into ~`targetMB`-sized files.
+  * into ~`targetMB`-sized files; a directory already holding no more
+  * files than that is left as it is.
   *
   * The swap never has a moment with ZERO copies on disk: the live dir is
   * renamed to a backup, the compacted dir renamed into place, then the
@@ -64,31 +65,27 @@ object MaintenanceOps {
     if (before.isEmpty) return CompactionReport(0, 0, 0L)
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes / (targetMB * 1024.0 * 1024.0)).toInt)
+    // Already at its target: a rewrite would produce the same file count.
+    // The rows come from the footers, read on the driver (no Spark job).
+    if (before.length <= nOut)
+      return CompactionReport(before.length, before.length, before.map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, fs.getConf))
+        try r.getRecordCount finally r.close()
+      }.sum)
 
     // Row count rides the rewrite as an observed metric — a separate
     // count() pass would double the dominant I/O cost (same single-scan
     // rule as CopyJob).
     val obs = org.apache.spark.sql.Observation(s"compact_${path.getName}")
-    val tmp = new Path(path.getParent, s".${path.getName}_compact_tmp")
+    val tmp = stagedPath(path, "compact")
     spark.read.parquet(dir)
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
       .repartition(nOut)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val rows = obs.get("n").asInstanceOf[Long]
-
-    val bak = new Path(path.getParent, s".${path.getName}_compact_bak")
-    fs.delete(bak, true)
-    def renameOrThrow(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"compaction swap failed: rename $from -> $to")
-    renameOrThrow(path, bak)
-    renameOrThrow(tmp, path)
-    // In-leaf `_graft_*` pins/markers (a folded base partition carries
-    // its fold marker INSIDE the leaf since round 17) ride out of the
-    // bak before it drops — the compacted tmp never had them.
-    copyGraftPins(fs, bak, path)
-    fs.delete(bak, true)
+    swapIn(fs, tmp, path, "compact")
     CompactionReport(before.length, dataFiles().length, rows)
   }
 
@@ -166,7 +163,7 @@ object MaintenanceOps {
           org.apache.spark.sql.types.LongType, nullable = false))))
     val src = spark.read.parquet(dir)
     val obs = org.apache.spark.sql.Observation(s"delete_${path.getName}")
-    val tmp = new Path(path.getParent, s".${path.getName}_delete_tmp")
+    val tmp = stagedPath(path, "delete")
     // ONE scan: the anti-joined rewrite observes the before/hit counts
     // AND the set of deny ids that actually matched (collect_set skips
     // the anti-join survivors' nulls; the metric row is bounded by the
@@ -192,14 +189,7 @@ object MaintenanceOps {
     idsDistinct.map(i => (i, foundIds.contains(i))).toDF("id", "found")
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(auditDir)
-    val bak = new Path(path.getParent, s".${path.getName}_delete_bak")
-    fs.delete(bak, true)
-    def renameOrThrow(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"delete swap failed: rename $from -> $to")
-    renameOrThrow(path, bak)
-    renameOrThrow(tmp, path)
-    fs.delete(bak, true)
+    swapIn(fs, tmp, path, "delete")
     DeleteReport(before, hit, before - hit, idsDistinct.size.toLong - foundIds.size)
   }
 
@@ -223,19 +213,12 @@ object MaintenanceOps {
     * rewrite in place via the [[compactParquet]] swap protocol; a leaf
     * whose rows all match is deleted — its partition simply vanishes).
     *
-    * The ledgers are not id-keyed, so the KEY RECIPE is per space and
-    * the caller derives it from the corpus BEFORE the corpus delete:
-    *  - PQ store codes/rcodes: `keyCol` = the id column
-    *    ([[PqOps.pqStoreDelete]] wraps both namespaces);
-    *  - SRP band ledger: `keyCol = "_graft_vec"`, keys = the deleted
-    *    rows' vector column (stored verbatim at ingest);
-    *  - semantic ledger: `keyCol = "_graft_vec"` likewise;
-    *  - fingerprint ledger: `keyCols = Seq("_graft_fp", "_graft_fp2")`
-    *    (the composite overload), keys = the deleted docs' fingerprints
-    *    recomputed with the ingest's two hashes — the PAIR, because
-    *    `_graft_fp` alone collides at birthday scale ~35 k docs and a
-    *    single-hash takedown would erase unrelated docs' rows.
-    * Count ledgers (span counts) hold no per-id rows — nothing to erase.
+    * The ledgers are not id-keyed: each space names the columns a
+    * takedown matches ([[Ledger.Space]]'s `eraseKeys` — the stored
+    * vector for the SRP and semantic ledgers, the fingerprint PAIR for
+    * the fingerprint ledger), and the caller derives their values from
+    * the corpus BEFORE the corpus delete. The PQ store's namespaces key
+    * on the id column ([[PqOps.pqStoreDelete]] wraps both).
     *
     * Cost: ONE full ledger scan (a left broadcast join groups total/hit
     * counts and the matched keys per FILE via `_metadata.file_path` —
@@ -245,9 +228,8 @@ object MaintenanceOps {
     * never write over the directory being read (the foldEpochs rule,
     * here by construction): the partitioned branch stages ALL hit
     * leaves' survivors into a hidden tmp tree in one job, then swaps
-    * each hit leaf via the family's rename protocol (old leaf aside to
-    * `.bak`, staged leaf in, bak dropped — the [[compactParquet]]
-    * discipline), and the flat branch tmp-rewrites + swaps the root.
+    * each hit leaf in ([[swapIn]]), and the flat branch tmp-rewrites
+    * and swaps the root the same way.
     * The audit tombstones `(key, found)` append BEFORE any rewrite (an
     * unaudited takedown is the failure the audit exists to prevent);
     * a crash mid-way leaves whole leaves either old or new (per-leaf
@@ -438,14 +420,10 @@ object MaintenanceOps {
       .mapValues(_.map(r => r.getLong(1)).sum).toMap
     val hitByLeaf = perFile.groupBy(r => leafOf(r.getString(0))).view
       .mapValues(_.map(r => r.getLong(2)).sum).toMap
-    def renameOrThrow(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"ledgerDelete swap failed: rename $from -> $to")
     val flatRoot = hitLeaves.exists(l => fs.makeQualified(l).toUri == rootUri)
     if (flatRoot) {
-      // FLAT ledger: the root itself is the one leaf — atomic
-      // tmp-rewrite + swap, with the root-level `_graft_*` pins
-      // snapshotted and restored (the compactLedger rule).
+      // FLAT ledger: the root itself is the one leaf — tmp-rewrite, then
+      // the staged swap, which carries the root-level `_graft_*` pins.
       require(hitLeaves.length == 1,
         s"ledger at $ledgerDir mixes root-level files with partition " +
           "subdirectories — a layout no writer of this family produces")
@@ -455,40 +433,12 @@ object MaintenanceOps {
           s"ledgerDelete would remove EVERY row of the flat ledger at " +
             s"$ledgerDir — delete the directory (and its pins) explicitly " +
             "instead of erasing it empty.")
-      val metaSnapshot = fs.listStatus(leaf).filter { s =>
-        s.isFile && s.getPath.getName.startsWith("_graft_")
-      }.map { s =>
-        val in = fs.open(s.getPath)
-        try s.getPath.getName -> {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-          buf.toByteArray
-        } finally in.close()
-      }.toMap
-      val tmp = new Path(leaf.getParent, s".${leaf.getName}_erase_tmp")
+      val tmp = stagedPath(leaf, "erase")
       fs.delete(tmp, true)
       spark.read.parquet(leaf.toString)
         .join(keyDf, matchCond, "left_anti")
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val bak = new Path(leaf.getParent, s".${leaf.getName}_erase_bak")
-      fs.delete(bak, true)
-      renameOrThrow(leaf, bak)
-      renameOrThrow(tmp, leaf)
-      // Pins restored BEFORE the bak is dropped (round-17 reorder): the
-      // staged tmp never carried the `_graft_*` pins, so until they are
-      // rewritten the leaf is not whole — the family's own protocol
-      // ("bak kept until the staged leaf is in") demands the bak outlive
-      // the gap. A crash inside it now leaves the pins recoverable from
-      // the bak, and [[recoverEraseBaks]] copies them out before it
-      // drops a bak whose original exists.
-      metaSnapshot.foreach { case (name, bytes) =>
-        val p = new Path(leaf, name)
-        if (!fs.exists(p)) {
-          val out = fs.create(p, true)
-          try out.write(bytes) finally out.close()
-        }
-      }
-      fs.delete(bak, true)
+      swapIn(fs, tmp, leaf, "erase")
     } else if (hitLeaves.nonEmpty) {
       // PARTITIONED ledger: ONE job stages every hit leaf's survivors
       // into a hidden tmp tree — a takedown touching 200 leaves must
@@ -550,17 +500,7 @@ object MaintenanceOps {
         val staged = new Path(tmpRoot, rel)
         val survivors = allByLeaf(leaf) - hitByLeaf(leaf)
         if (fs.exists(staged)) {
-          val bak = new Path(leaf.getParent, s".${leaf.getName}_erase_bak")
-          fs.delete(bak, true)
-          renameOrThrow(leaf, bak)
-          renameOrThrow(staged, leaf)
-          // In-leaf `_graft_*` pins/markers (the folded base partition
-          // carries its fold marker INSIDE the leaf since round 17)
-          // ride out of the bak before it drops — the staged tree never
-          // had them, and losing the in-base marker would re-open the
-          // replay horizon the fold just committed.
-          copyGraftPins(fs, bak, leaf)
-          fs.delete(bak, true)
+          swapIn(fs, staged, leaf, "erase")
         } else if (survivors == 0L) {
           // Every row matched (pass-1 accounting, not inferred from the
           // staged dir's absence) — the partition vanishes, except any
@@ -682,11 +622,11 @@ object MaintenanceOps {
     *  - the `_graft_*_meta` construction-parameter pin. A partitioned
     *    ledger keeps it naturally (only `col=value` leaves are rewritten);
     *    a FLAT ledger's [[compactParquet]] swap replaces the whole
-    *    directory, so the root-level `_`-prefixed metadata files are
-    *    snapshotted (they are bytes-small) and restored after the swap.
-    *    Losing the pin would not corrupt data but would disarm the
-    *    width-drift refusal — the next mismatched ingest would silently
-    *    never collide and then RE-pin at the drifted parameters.
+    *    directory, and the swap ([[swapIn]]) copies the root-level
+    *    `_graft_*` files out of the bak before dropping it. Losing the
+    *    pin would not corrupt data but would disarm the width-drift
+    *    refusal — the next mismatched ingest would silently never
+    *    collide and then RE-pin at the drifted parameters.
     *  - the epoch partition layout (replay safety): leaves are compacted
     *    in place, never folded together, so a crash-replayed epoch still
     *    dynamically overwrites exactly its own partition. Fold/expire of
@@ -707,27 +647,8 @@ object MaintenanceOps {
     // restored before the compaction walks the layout, or its rows are
     // left out of the rewrite it believes is whole.
     recoverEraseBaks(fs, path)
-    val metaFiles = fs.listStatus(path).filter { s =>
-      s.isFile && s.getPath.getName.startsWith("_graft_")
-    }.map { s =>
-      val in = fs.open(s.getPath)
-      try s.getPath.getName -> {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-        buf.toByteArray
-      } finally in.close()
-    }.toMap
-    val report =
-      if (dataDirs(fs, path).nonEmpty) compactPartitioned(spark, ledgerDir, targetMB)
-      else compactParquet(spark, ledgerDir, targetMB)
-    metaFiles.foreach { case (name, bytes) =>
-      val p = new Path(path, name)
-      if (!fs.exists(p)) {
-        val out = fs.create(p, true)
-        try out.write(bytes) finally out.close()
-      }
-    }
-    report
+    if (dataDirs(fs, path).nonEmpty) compactPartitioned(spark, ledgerDir, targetMB)
+    else compactParquet(spark, ledgerDir, targetMB)
   }
 
   /** Fold committed epoch partitions of a band ledger into one `base`
@@ -746,109 +667,107 @@ object MaintenanceOps {
     * foreign-epoch checkpoint-reset guard ignores it, and (c) collision
     * reads (`_graft_epoch =!= "epoch<batchId>"`) always include it.
     *
-    * MEMBERSHIP ledgers (fingerprint/band/SRP/cluster rows) fold as a
-    * plain union — bucket membership is a set, and hit reads are
-    * semi-join/distinct. COUNT ledgers (the span ledger's
-    * `(spanKey, _graft_n)` rows, detected by schema) RE-AGGREGATE on
-    * fold: the base keeps one summed row per distinct key instead of one
-    * row per (batch, key), so the read-side sum stays bounded by the
-    * distinct-span count over years of drains instead of growing with
-    * drain count — and, because counts are summed at read time,
+    * What a fold does with the rows is the `space`'s: MEMBERSHIP
+    * spaces (fingerprint/band/SRP/cluster rows, PQ codes) fold as a plain
+    * union — bucket membership is a set, and hit reads are
+    * semi-join/distinct. COUNT spaces (`countsSummed`: span counts,
+    * heavy hitters) RE-AGGREGATE `_graft_n` per key: the base keeps one
+    * summed row per distinct key instead of one row per (batch, key),
+    * so the read-side sum stays bounded by the distinct-key count over
+    * years of drains — and, because counts are summed at read time,
     * duplicates are NOT harmless there, which is what the marker below
-    * exists for.
+    * exists for. The base is repartitioned by the space's
+    * `partitionCols` (the PQ store's `cell`) and written partitioned by
+    * them: without that, the merge's layout would fan every (base, cell)
+    * partition into many small files and the fold would WORSEN the
+    * listing cost it exists to remove.
     *
-    * Crash contract (hardened round 17, after the crash-point sweep
-    * found the dynamic-overwrite commit gap): the merged base is staged
-    * into a hidden sibling tmp WITH the new `_graft_folded_through`
-    * marker inside it, then swapped in behind a bak
-    * ([[swapBasePartition]]) — the old base exists until the new one is
-    * whole, and data + horizon commit in ONE rename. Then the folded
-    * epoch directories are deleted. Epoch dirs at-or-under the marker
-    * are LEFTOVERS of a crashed fold — already merged into base — so a
-    * re-run deletes them without re-merging (convergent for the count
-    * ledger, where a re-merge would double counts) and the span
-    * ledger's collision read excludes them meanwhile. Every boundary of
-    * this sequence is enumerated convergent by CrashSweepSpec — the
-    * former base-write→marker-write gap no longer exists, because the
-    * marker rides the swap. Run between drains, like compaction.
+    * Crash contract: the merged base is staged into a hidden sibling
+    * tmp WITH the new `_graft_folded_through` marker inside it, then
+    * swapped in ([[swapIn]]) — the old base exists until the new one is
+    * whole (a dynamic partition overwrite deletes the old base before it
+    * renames its staging in, and a crash between the two would destroy
+    * the only copy of the pre-fold base rows), and data + horizon commit
+    * in ONE rename. Then superseded root-level markers
+    * and the folded epoch directories are deleted. Epoch dirs at-or-under
+    * the marker are LEFTOVERS of a crashed fold — already merged into
+    * base — so a re-run deletes them without re-merging (convergent for
+    * a count space, where a re-merge would double counts) and the count
+    * spaces' reads exclude them meanwhile. Every boundary of this
+    * sequence is enumerated convergent by CrashSweepSpec. Run between
+    * drains, like compaction.
     */
   def foldEpochs(
       spark: SparkSession,
       ledgerDir: String,
+      space: Ledger.Space,
       upToBatchId: Long): CompactionReport = {
-    import org.apache.spark.sql.functions.{col, lit, sum}
+    import org.apache.spark.sql.functions.{col, sum}
     require(upToBatchId >= 0L, s"upToBatchId must be >= 0: $upToBatchId")
     val path = new Path(ledgerDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Erase-crash recovery BEFORE anything lists epochs (round-17 lead
-    // fix): an epoch hidden at its `_erase_bak` by a crashed
-    // [[ledgerDelete]] swap is invisible to this listing — without the
-    // sweep the fold would advance the marker past it, and the eventual
-    // recovery would restore an epoch [[deleteFoldLeftovers]] then
-    // deletes UNMERGED (committed batch silently lost). Restored here,
-    // it folds with everything else or stays live above the marker.
+    // Erase-crash recovery BEFORE anything lists epochs: an epoch hidden
+    // at its `_erase_bak` by a crashed [[ledgerDelete]] swap is invisible
+    // to this listing — without the sweep the fold would advance the
+    // marker past it, and the eventual recovery would restore an epoch
+    // [[deleteFoldLeftovers]] then deletes UNMERGED (committed batch
+    // silently lost). Restored here, it folds with everything else or
+    // stays live above the marker.
     recoverEraseBaks(fs, path)
     val priorMark = foldedThrough(fs, path)
     // The shared digits-only parse — see foldableEpochId's scaladoc for
     // why every fold-protocol site must use it.
-    def epochId(name: String): Option[Long] = epochDirId(name)
     val all = fs.listStatus(path).filter { s =>
-      s.isDirectory && epochId(s.getPath.getName).isDefined
+      s.isDirectory && epochDirId(s.getPath.getName).isDefined
     }
     // Leftovers of a crashed fold: their rows are already in base.
-    all.filter(d => epochId(d.getPath.getName).exists(_ <= priorMark))
+    all.filter(d => epochDirId(d.getPath.getName).exists(_ <= priorMark))
       .foreach(d => fs.delete(d.getPath, true))
-    val folded = all.filter(d => epochId(d.getPath.getName)
+    val folded = all.filter(d => epochDirId(d.getPath.getName)
       .exists(id => id > priorMark && id <= upToBatchId))
     if (folded.isEmpty) return CompactionReport(0, 0, 0L)
     val foldTokens = folded.map(_.getPath.getName.stripPrefix("_graft_epoch=")).toSet
-    val maxFolded = folded.flatMap(d => epochId(d.getPath.getName)).max
-    val filesBefore = folded.map(d => fs.listStatus(d.getPath).count(_.isFile)).sum
-    // One read of the whole ledger, filtered to base + the folded epochs;
-    // rewrite as the new base via dynamic partition overwrite (only the
-    // base partition is replaced — live epochs are untouched).
-    // Materialized BEFORE the write: the write replaces the base partition
-    // of the very directory the rows were read from, and Spark (rightly)
-    // refuses a write whose input files live under the output path. The
-    // pinned copy also makes the subsequent write independent of the
-    // delete step. Maintenance-sized data by construction (band/bucket
-    // keys + vectors, not the corpus).
+    val maxFolded = folded.flatMap(d => epochDirId(d.getPath.getName)).max
+    val filesBefore = folded.map(d => dataFileCount(fs, d.getPath)).sum
+    // One read of the whole ledger, filtered to base + the folded epochs.
     val unioned = spark.read.parquet(ledgerDir)
       .filter(col("_graft_epoch") === "base" ||
         col("_graft_epoch").isInCollection(foldTokens))
-      .withColumn("_graft_epoch", lit("base"))
+      .drop("_graft_epoch")
     val merged =
-      if (!countFoldRule(fs, path)) unioned
+      if (!space.countsSummed) unioned
       else {
-        // Count-ledger fold (declared by the writer via _graft_fold_rule,
-        // never sniffed from a column name): one summed row per distinct
-        // key.
         require(unioned.columns.contains("_graft_n"),
-          s"ledger at $ledgerDir declares the count fold rule but has no " +
-            "_graft_n column — refusing a fold whose semantics can't hold")
-        val keys = unioned.columns
-          .filterNot(c => c == "_graft_n" || c == "_graft_epoch")
-        unioned.groupBy(keys.map(col): _*)
+          s"${space.name} at $ledgerDir sums counts but has no _graft_n " +
+            "column — refusing a fold whose semantics can't hold")
+        unioned.groupBy(unioned.columns.filterNot(_ == "_graft_n").map(col).toIndexedSeq: _*)
           .agg(sum(col("_graft_n")).as("_graft_n"))
-          .withColumn("_graft_epoch", lit("base"))
-          .select(unioned.columns.map(col): _*)
+          .select(unioned.columns.map(col).toIndexedSeq: _*)
       }
-    val rowsDf = merged.localCheckpoint(true)
-    val rows = rowsDf.count()
-    // Staged base swap with the marker inside (round 17) — see
-    // [[swapBasePartition]] for why the former dynamic partition
-    // overwrite could destroy the pre-fold base, and how riding the
-    // marker in the same rename closes the count-ledger double-merge
-    // window.
-    swapBasePartition(fs, path, rowsDf.drop("_graft_epoch"),
-      math.max(priorMark, maxFolded))
+    val parts = space.partitionCols
+    // Materialized BEFORE the write: the swap replaces the base partition
+    // of the very directory the rows were read from, and the pinned copy
+    // makes the write independent of it. Maintenance-sized data by
+    // construction (band/bucket keys, vectors and codes, not the corpus).
+    val pinned =
+      (if (parts.isEmpty) merged else merged.repartition(parts.map(col): _*))
+        .localCheckpoint(true)
+    val rows = pinned.count()
+    val base = new Path(path, "_graft_epoch=base")
+    val tmp = stagedPath(base, "erase")
+    fs.delete(tmp, true)
+    val w = pinned.write.mode(SaveMode.Overwrite)
+    (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(tmp.toString)
+    writeFoldedThrough(fs, tmp, math.max(priorMark, maxFolded))
+    swapIn(fs, tmp, base, "erase")
+    // The in-base marker is authoritative and >= any root-level one;
+    // superseded root markers are debris (a crash here leaves extras —
+    // max still answers correctly).
+    fs.listStatus(path)
+      .filter(_.getPath.getName.startsWith(FoldMarkerPrefix))
+      .foreach(p => fs.delete(p.getPath, false))
     folded.foreach(d => fs.delete(d.getPath, true))
-    val filesAfter = fs.listStatus(new Path(path, "_graft_epoch=base"))
-      .count { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    CompactionReport(filesBefore, filesAfter, rows)
+    CompactionReport(filesBefore, dataFileCount(fs, base), rows)
   }
 
   /** Name PREFIX of the fold high-water marker (`_`-prefixed: invisible
@@ -885,18 +804,94 @@ object MaintenanceOps {
       foldableEpochId(dirName.stripPrefix("_graft_epoch="))
     else None
 
+  /** Copy `_graft_*` pin/marker files present in `from` but missing in
+    * `to` — the whole-leaf-old-or-new rule's tail: a staged rewrite's
+    * tmp never carries the in-leaf pins (construction pins, the in-base
+    * fold marker), so every swap that drops its bak must first copy the
+    * pins out of it, and every recovery that drops a bak whose original
+    * exists must do the same. A fold marker is not copied into a leaf
+    * that already holds one: that leaf is a fold's new base, whose own
+    * marker supersedes the old base's. */
+  private def copyGraftPins(
+      fs: org.apache.hadoop.fs.FileSystem, from: Path, to: Path): Unit = {
+    val marked = fs.listStatus(to).exists(_.getPath.getName.startsWith(FoldMarkerPrefix))
+    fs.listStatus(from).foreach { f =>
+      val name = f.getPath.getName
+      if (f.isFile && name.startsWith("_graft_") &&
+          !(marked && name.startsWith(FoldMarkerPrefix))) {
+        val dst = new Path(to, name)
+        if (!fs.exists(dst)) {
+          val in = fs.open(f.getPath)
+          val out = fs.create(dst, true)
+          try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
+          finally { in.close(); out.close() }
+        }
+      }
+    }
+  }
+
+  /** Where a staged rewrite of `leaf` is written: a hidden sibling that
+    * [[recoverEraseBaks]] sweeps. `kind` is the op family (`compact`,
+    * `delete`, `erase`). */
+  private def stagedPath(leaf: Path, kind: String): Path =
+    new Path(leaf.getParent, s".${leaf.getName}_${kind}_tmp")
+
+  /** The staged swap every rewrite of the family commits with: `leaf`
+    * (if it exists — a first fold has no base yet) is renamed aside to
+    * its hidden `_<kind>_bak` sibling, `staged` is renamed in, the
+    * `_graft_*` files the staged side lacks are copied out of the bak,
+    * and only then is the bak dropped — so a crash at any step leaves
+    * either the old leaf or the whole new one, recoverable by
+    * [[recoverEraseBaks]]. Each rename's boolean result is checked
+    * (Hadoop signals failure by return value, not exception). */
+  private def swapIn(
+      fs: org.apache.hadoop.fs.FileSystem, staged: Path, leaf: Path, kind: String): Unit = {
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"staged swap failed: rename $from -> $to")
+    val bak = new Path(leaf.getParent, s".${leaf.getName}_${kind}_bak")
+    fs.delete(bak, true)
+    val had = fs.exists(leaf)
+    if (had) rename(leaf, bak)
+    rename(staged, leaf)
+    if (had) {
+      copyGraftPins(fs, bak, leaf)
+      fs.delete(bak, true)
+    }
+  }
+
+  /** Data files under `p` at any depth: names starting with `_` or `.`
+    * (pins, markers, checksums, commit debris) are not data. */
+  private def dataFileCount(fs: org.apache.hadoop.fs.FileSystem, p: Path): Int =
+    fs.listStatus(p).iterator.map { s =>
+      val n = s.getPath.getName
+      if (s.isDirectory) { if (n.startsWith(".")) 0 else dataFileCount(fs, s.getPath) }
+      else if (n.startsWith("_") || n.startsWith(".")) 0
+      else 1
+    }.sum
+
+  /** Swap-artifact suffixes this sweep recovers: one per [[swapIn]]
+    * kind — erase ([[ledgerDelete]], [[foldEpochs]]), compaction
+    * ([[compactParquet]]) and corpus delete ([[targetedDelete]]) —
+    * all share the tmp → bak → swap protocol, so all share the
+    * recovery (round 17: a leaf hidden at
+    * its `_compact_bak` by a crashed compaction was previously
+    * restorable only by hand, and a fold could advance its marker past
+    * a compact-hidden epoch exactly like the erase case). */
+  private val SwapBakSuffixes = Seq("_erase_bak", "_compact_bak", "_delete_bak")
+  private val SwapTmpSuffixes = Seq("_erase_tmp", "_compact_tmp", "_delete_tmp")
+
   /** Restore/clear leftover `.<name>_erase_bak` / `.<name>_compact_bak`
     * swap backups under (and beside) a ledger root (the name predates
     * round 17's widening to the compaction family — every staged swap
-    * of the family shares this one recovery). A [[ledgerDelete]] (or
-    * [[compactParquet]], or fold-base — [[swapBasePartition]]) crash
+    * of the family shares this one recovery). A [[swapIn]] crash
     * between its two renames leaves the original leaf ONLY at the
     * hidden bak: rename it
     * back when the leaf is missing (the re-run then re-finds its hits —
     * convergent), delete it when the leaf exists (the staged leaf
     * landed; the bak is a stale copy — but any `_graft_*` pin files the
     * restored leaf is MISSING are copied out of the bak first: a crash
-    * between the flat branch's tmp→leaf rename and its pin restore
+    * between the swap's tmp→leaf rename and its pin copy
     * leaves the bak holding the only copy of the construction pins and
     * the fold marker, and deleting it would silently disarm the
     * width-drift refusal and the replay-horizon guard). Stale
@@ -914,36 +909,6 @@ object MaintenanceOps {
     * fold/compact entry the hidden epoch is restored BEFORE the fold
     * lists epochs, so it either folds with everything else or stays a
     * live epoch above the marker. */
-  /** Copy `_graft_*` pin/marker files present in `from` but missing in
-    * `to` — the whole-leaf-old-or-new rule's tail: a staged rewrite's
-    * tmp never carries the in-leaf pins (construction pins, the in-base
-    * fold marker), so every swap that drops its bak must first copy the
-    * pins out of it, and every recovery that drops a bak whose original
-    * exists must do the same. */
-  private def copyGraftPins(
-      fs: org.apache.hadoop.fs.FileSystem, from: Path, to: Path): Unit =
-    fs.listStatus(from).foreach { f =>
-      if (f.isFile && f.getPath.getName.startsWith("_graft_")) {
-        val dst = new Path(to, f.getPath.getName)
-        if (!fs.exists(dst)) {
-          val in = fs.open(f.getPath)
-          val out = fs.create(dst, true)
-          try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-          finally { in.close(); out.close() }
-        }
-      }
-    }
-
-  /** Swap-artifact suffixes this sweep recovers: the erase family's
-    * ([[ledgerDelete]], [[swapBasePartition]]) and the compaction
-    * family's ([[compactParquet]]) — both share the tmp → bak → swap
-    * protocol, so both share the recovery (round 17: a leaf hidden at
-    * its `_compact_bak` by a crashed compaction was previously
-    * restorable only by hand, and a fold could advance its marker past
-    * a compact-hidden epoch exactly like the erase case). */
-  private val SwapBakSuffixes = Seq("_erase_bak", "_compact_bak", "_delete_bak")
-  private val SwapTmpSuffixes = Seq("_erase_tmp", "_compact_tmp", "_delete_tmp")
-
   private[graft] def recoverEraseBaks(
       fs: org.apache.hadoop.fs.FileSystem, root: Path): Unit = {
     def restoreOrDrop(bak: Path, orig: Path): Unit =
@@ -1024,7 +989,7 @@ object MaintenanceOps {
       }
     // Since round 17 the fold commits its marker INSIDE the staged base
     // partition (data + horizon land in ONE rename — see
-    // [[swapBasePartition]]); root-level markers remain valid (written
+    // [[foldEpochs]]); root-level markers remain valid (written
     // by rebalances carrying a horizon into a fresh namespace, and by
     // pre-round-17 folds). Max over both locations wins, as ever.
     val ids = (idsIn(ledgerPath) ++
@@ -1042,70 +1007,6 @@ object MaintenanceOps {
     prior.foreach(p => fs.delete(p, false))
   }
 
-  /** Commit a fold's new `_graft_epoch=base` partition by STAGED SWAP
-    * (round 17; both folds previously used Spark's dynamic partition
-    * overwrite). The crash-point sweep (CrashSweepSpec) caught the
-    * overwrite's commit gap: dynamic overwrite DELETES the existing
-    * base partition and then renames its hidden staging in — a crash
-    * between the two destroys the only copy of the pre-fold base rows
-    * (the epochs still on disk hold none of them). The family's own
-    * tmp → bak → swap protocol closes it: the bak keeps the old base
-    * until the staged one is in, and [[recoverEraseBaks]] — already run
-    * at every maintenance entry — converges both crash sides.
-    *
-    * The NEW fold marker is created INSIDE the staged tmp before the
-    * swap, so the merged data and the advanced horizon commit in the
-    * SAME rename. That closes the protocol's last declared
-    * non-convergent window (base-write → marker-write): a re-entry
-    * after ANY post-swap crash reads the new horizon from inside base,
-    * classifies the folded epochs as leftovers, and deletes them
-    * WITHOUT re-merging — so a count ledger can no longer double its
-    * epoch contributions from that gap. Root-level markers superseded
-    * by the swapped-in one are best-effort deleted afterwards.
-    *
-    * `df` must NOT carry the `_graft_epoch` column (base's files never
-    * do — it is a partition directory name); deeper partitioning (the
-    * PQ store's `cell`) rides `partitionCols`. */
-  private[operators] def swapBasePartition(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: Path,
-      df: org.apache.spark.sql.DataFrame,
-      newMark: Long,
-      partitionCols: Seq[String] = Nil): Unit = {
-    require(!df.columns.contains("_graft_epoch"),
-      "swapBasePartition: drop _graft_epoch before staging — base's " +
-        "files never carry the partition column")
-    val leaf = new Path(root, "_graft_epoch=base")
-    val tmp = new Path(root, "._graft_epoch=base_erase_tmp")
-    fs.delete(tmp, true)
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    writeFoldedThrough(fs, tmp, newMark)
-    val bak = new Path(root, "._graft_epoch=base_erase_bak")
-    fs.delete(bak, true)
-    if (fs.exists(leaf) && !fs.rename(leaf, bak))
-      throw new java.io.IOException(s"fold swap failed: rename $leaf -> $bak")
-    if (!fs.rename(tmp, leaf))
-      throw new java.io.IOException(s"fold swap failed: rename $tmp -> $leaf")
-    fs.delete(bak, true)
-    // The inner marker is authoritative and >= any root-level one;
-    // superseded root markers are debris (crash here leaves extras —
-    // max still answers correctly).
-    fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith(FoldMarkerPrefix))
-      .foreach(p => fs.delete(p.getPath, false))
-  }
-
-  /** Name of the ledger's fold-rule declaration. Content `sum` = count
-    * ledger: [[foldEpochs]] must RE-AGGREGATE `_graft_n` per key on fold
-    * (duplicates double-count at read). Absent = membership ledger:
-    * fold is a plain union (sets tolerate duplicates). Written by the
-    * count-ledger operators at commit — fold semantics are declared by
-    * the writer, never inferred from a column name (a future ledger
-    * carrying a non-additive `_graft_n` must not be silently summed). */
-  private[operators] val FoldRuleFile = "_graft_fold_rule"
-
   /** True when a ledger directory holds committed DATA — epoch
     * partition dirs or bare part files; maintenance markers and pins
     * (`_graft_*`, `_SUCCESS`, dotfiles) don't count. Backs the ledger
@@ -1121,27 +1022,6 @@ object MaintenanceOps {
       val n = s.getPath.getName
       n.startsWith("_graft_epoch=") || !(n.startsWith("_") || n.startsWith("."))
     }
-
-  /** Declare the count-ledger fold rule (idempotent). */
-  private[operators] def declareCountFoldRule(
-      fs: org.apache.hadoop.fs.FileSystem, ledgerPath: Path): Unit = {
-    val p = new Path(ledgerPath, FoldRuleFile)
-    if (!fs.exists(p)) {
-      val out = fs.create(p, true)
-      try out.write("sum".getBytes("UTF-8")) finally out.close()
-    }
-  }
-
-  private def countFoldRule(
-      fs: org.apache.hadoop.fs.FileSystem, ledgerPath: Path): Boolean = {
-    val p = new Path(ledgerPath, FoldRuleFile)
-    fs.exists(p) && {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      s == "sum"
-    }
-  }
 
   /** Drop crashed-fold leftover epochs from a count-ledger read: epoch
     * partitions at-or-under the fold marker are already merged into

@@ -1084,7 +1084,7 @@ object PqOps {
   // Stored artifacts: the --pq-encode build layout + construction pin.
   // ---------------------------------------------------------------------
 
-  private val PqMetaFile = "_graft_pq_construction"
+  private[operators] val PqMetaFile = "_graft_pq_construction"
   /** The base build's epoch partition — incremental batches land beside
     * it under their own tokens (the E109 replay protocol). */
   val BaseEpoch = "base"
@@ -2023,112 +2023,35 @@ object PqOps {
         spark.read.parquet(s"$dir/$ns"))
   }
 
-  private def countLeafFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Int =
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).map { s =>
-      if (s.isDirectory) countLeafFiles(fs, s.getPath)
-      else if (!s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")) 1
-      else 0
-    }.sum
-
   /** E152 (round 15, closing the round-14 declared edge): fold committed
     * epoch partitions of the PQ store's code namespaces into `base` —
-    * the lifecycle step the six count/membership ledger spaces already
-    * have ([[MaintenanceOps.foldEpochs]]): a year of daily drains is 365
-    * `_graft_epoch=epochN` directories PER NAMESPACE (× cells), and
-    * every read pays the listing. Folds `epoch<N>` partitions with
+    * [[MaintenanceOps.foldEpochs]] over the [[Ledger.PqCodes]] space, per
+    * namespace (codes, then rcodes in lockstep): a year of daily drains
+    * is 365 `_graft_epoch=epochN` directories PER NAMESPACE (× cells),
+    * and every read pays the listing. Folds `epoch<N>` partitions with
     * `N ≤ upToBatchId` — the replay horizon; derive it from the
     * streaming checkpoint's commit log
     * ([[MaintenanceOps.lastCommittedBatch]], CLI `--pq-fold`): a
     * committed batch never re-executes. Manually-tokened epochs (a
     * `--pq-append` with its own token) stay unfolded by design — only
-    * the checkpoint gives a machine-checkable horizon.
-    *
-    * Crash contract — STRONGER than the count ledgers': the merged base
-    * write is a full-row DISTINCT, and code rows are deterministic per
-    * (id, sub), so re-running the fold after ANY crash converges to the
-    * identical base (a half-merged, unmarked epoch double-counts only
-    * until that re-run — re-run the fold before serving reads after a
-    * crash). Per namespace (codes, then rcodes in lockstep): leftovers
-    * (epoch dirs at-or-under the marker) delete without re-merge; base
-    * rewrites via dynamic partition overwrite; the name-encoded
-    * `_graft_folded_through_<id>` marker lands (a torn marker is
-    * impossible — the E138 rule); folded dirs delete. Read sides
-    * ([[readPqArtifacts]], [[incrementalPqEncode]]) exclude marked
-    * leftovers meanwhile; [[incrementalPqEncode]] and the streaming
-    * drain's checkpoint-reset guard refuse `epoch<N>` tokens at-or-under
-    * the marker even after their directories are gone (a folded epoch's
-    * rows live in base — replaying it would duplicate them). */
+    * the checkpoint gives a machine-checkable horizon. The store's pin
+    * must match first. Read sides ([[readPqArtifacts]],
+    * [[incrementalPqEncode]]) exclude crashed-fold leftovers;
+    * [[incrementalPqEncode]] and the streaming drain's checkpoint-reset
+    * guard refuse `epoch<N>` tokens at-or-under the marker even after
+    * their directories are gone (a folded epoch's rows live in base —
+    * replaying it would duplicate them). */
   def foldPqEpochs(
       spark: SparkSession,
       dir: String,
       upToBatchId: Long): Map[String, MaintenanceOps.CompactionReport] = {
-    require(upToBatchId >= 0L, s"upToBatchId must be >= 0: $upToBatchId")
     readMeta(spark, dir) // pin-or-refuse: fold only a pinned store
     val (fs, _) = fsOf(spark, dir)
     val namespaces = "codes" +: (
       if (fs.exists(new org.apache.hadoop.fs.Path(dir, "rcodes"))) Seq("rcodes")
       else Nil)
     namespaces.map { ns =>
-      val nsDir = s"$dir/$ns"
-      val nsPath = new org.apache.hadoop.fs.Path(nsDir)
-      // Erase-crash recovery BEFORE the epoch listing (round-17 lead
-      // fix, the MaintenanceOps.foldEpochs rule): an epoch hidden at its
-      // `_erase_bak` by a crashed pqStoreDelete swap must be restored
-      // before this fold advances the marker, or the eventual recovery
-      // resurrects an epoch the leftover sweep then deletes UNMERGED.
-      MaintenanceOps.recoverEraseBaks(fs, nsPath)
-      val priorMark = MaintenanceOps.foldedThrough(fs, nsPath)
-      // The shared digits-only parse (MaintenanceOps.foldableEpochId):
-      // every fold-protocol site must agree on what is fold-addressable.
-      def epochId(name: String): Option[Long] = MaintenanceOps.epochDirId(name)
-      val all = fs.listStatus(nsPath).filter { s =>
-        s.isDirectory && epochId(s.getPath.getName).isDefined
-      }
-      // Leftovers of a crashed fold: already merged into base.
-      all.filter(d => epochId(d.getPath.getName).exists(_ <= priorMark))
-        .foreach(d => fs.delete(d.getPath, true))
-      val folded = all.filter(d => epochId(d.getPath.getName)
-        .exists(id => id > priorMark && id <= upToBatchId))
-      if (folded.isEmpty) ns -> MaintenanceOps.CompactionReport(0, 0, 0L)
-      else {
-        val tokens = folded.map(_.getPath.getName.stripPrefix("_graft_epoch=")).toSet
-        val maxFolded = folded.flatMap(d => epochId(d.getPath.getName)).max
-        val filesBefore = folded.map(d => countLeafFiles(fs, d.getPath)).sum
-        // Full-row distinct: identical deterministic rows from a crashed
-        // half-fold collapse, making the re-merge convergent. The
-        // cell-keyed repartition after it is the whole point of folding:
-        // without it the distinct's shuffle layout fans every (base,
-        // cell) partition into shuffle-partition-many small files and
-        // the fold WORSENS the listing cost it exists to remove
-        // (measured at the gsf10 probe: 640 epoch files → 1280 base
-        // files before this line; ~cells after).
-        val merged = spark.read.parquet(nsDir)
-          .filter(col("_graft_epoch") === BaseEpoch ||
-            col("_graft_epoch").isInCollection(tokens))
-          .withColumn("_graft_epoch", lit(BaseEpoch))
-          .distinct()
-          .repartition(col("cell"))
-        // Materialized BEFORE the write (the foldEpochs rule): the write
-        // replaces the base partition of the directory just read.
-        val pinned = merged.localCheckpoint(true)
-        val rows = pinned.count()
-        // Staged base swap with the marker inside (round 17; was a
-        // dynamic partition overwrite, whose delete→rename commit gap
-        // could destroy a cell's pre-fold base rows — see
-        // [[MaintenanceOps.swapBasePartition]]). The cell partitioning
-        // rides inside the swapped directory.
-        MaintenanceOps.swapBasePartition(fs, nsPath,
-          pinned.drop("_graft_epoch"), math.max(priorMark, maxFolded),
-          partitionCols = Seq("cell"))
-        folded.foreach(d => fs.delete(d.getPath, true))
-        val filesAfter = countLeafFiles(
-          fs, new org.apache.hadoop.fs.Path(nsDir, s"_graft_epoch=$BaseEpoch"))
-        ns -> MaintenanceOps.CompactionReport(filesBefore, filesAfter, rows)
-      }
+      ns -> MaintenanceOps.foldEpochs(spark, s"$dir/$ns", Ledger.PqCodes, upToBatchId)
     }.toMap
   }
 
@@ -2265,9 +2188,9 @@ object PqOps {
     new PendingPqCodes(
       prior.unionByName(batchCodes.select(prior.columns.map(col).toIndexedSeq: _*)),
       () => {
-        Ledger.commit(batchCodes, s"$dir/codes", Ledger.PqCodes, "", Some(epochToken), Seq("cell"))
+        Ledger.commit(batchCodes, s"$dir/codes", Ledger.PqCodes, "", Some(epochToken))
         batchRcodes.foreach(Ledger.commit(
-          _, s"$dir/rcodes", Ledger.PqCodes, "", Some(epochToken), Seq("cell")))
+          _, s"$dir/rcodes", Ledger.PqCodes, "", Some(epochToken)))
       })
   }
 }

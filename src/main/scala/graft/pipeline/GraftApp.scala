@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.operators.{DedupOps, ExportOps, Ledger, LshOps, MaintenanceOps, PqOps, SamplingOps, SetJoinOps, SketchOps, SrpOps}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.{Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import scala.concurrent.duration.{Duration, DurationLong}
 
@@ -77,10 +77,9 @@ object GraftApp {
         sink: Option[Sink], mode: SaveMode, idCol: String, epoch: Long) extends Command
     final case class DeletePq(ids: Seq[Long], auditDir: String, store: String,
         idCol: String) extends Command
-    /** `keyCol` is the vec recipe's key column; the fp recipe has none. */
     final case class DeleteLedger(ids: Seq[Long], auditDir: String, ledger: String,
-        corpusDir: String, keyCol: Option[String], textCol: String, vecCol: String,
-        idCol: String, hashAudit: Boolean) extends Command
+        corpusDir: String, textCol: String, vecCol: String, idCol: String,
+        hashAudit: Boolean) extends Command
     final case class DeleteCorpus(ids: Seq[Long], auditDir: String, corpusDir: String,
         idCol: String) extends Command
     final case class Zorder(cols: Seq[String], corpusDir: String, outDir: String, bits: Int,
@@ -250,33 +249,9 @@ object GraftApp {
         DeletePq(f.ids, f.req("audit-dir"), f.req("pq-store"), f.str("id-col", "doc_id"))
       case "--delete-ids --ledger" =>
         val (ids, audit, ledger) = (f.ids, f.req("audit-dir"), f.req("ledger"))
-        val corpus = f.req("corpus-dir", "P (the key recipe derives the ledger keys " +
-          "from the corpus rows — run before the corpus delete)")
-        // The KEY RECIPE is per ledger space (the ledgerDelete scaladoc):
-        //  - vec (default): the stored vector column verbatim — the
-        //    SRP/semantic ledger recipe. Refuses _graft_fp as the key
-        //    column: a fingerprint ledger is NOT vector-keyed, and a
-        //    type-compatible-but-wrong key silently audits every key
-        //    found=false (a takedown no-op the operator believes ran).
-        //  - fp: recompute the ingest fingerprint PAIR from the corpus
-        //    rows (see the DeleteLedger case in `run`).
-        val keyCol = (f.oneOf("key-recipe", "vec", "vec", "fp"), f.opt("key-col")) match {
-          case ("fp", Some(kc)) => throw new IllegalArgumentException(
-            s"--key-col $kc is not applicable with --key-recipe fp: the " +
-              "fingerprint recipe always keys on the ingest pair " +
-              "(_graft_fp, _graft_fp2) recomputed from --text-col")
-          case ("fp", None) => None
-          case (_, None) => throw new IllegalArgumentException(
-            "--delete-ids --ledger requires --key-col C (the ledger's key " +
-              "column, e.g. _graft_vec for the SRP/semantic ledgers)")
-          case (_, Some("_graft_fp")) => throw new IllegalArgumentException(
-            "--key-col _graft_fp with the vec key recipe would probe a " +
-              "fingerprint ledger with raw vectors — every key would audit " +
-              "found=false. Use --key-recipe fp (recomputes the ingest " +
-              "fingerprint from --text-col).")
-          case (_, kc) => kc
-        }
-        DeleteLedger(ids, audit, ledger, corpus, keyCol, f.str("text-col", "text"),
+        val corpus = f.req("corpus-dir", "P (the ledger's erase keys derive from the " +
+          "corpus rows — run before the corpus delete)")
+        DeleteLedger(ids, audit, ledger, corpus, f.str("text-col", "text"),
           f.str("vec-col", "embedding"), f.str("id-col", "doc_id"), f.flag("hash-audit"))
       case "--delete-ids" => DeleteCorpus(f.ids, f.req("audit-dir"), f.req("corpus-dir"),
         f.str("id-col", "doc_id"))
@@ -396,7 +371,8 @@ object GraftApp {
     // own partition for replay overwrite.
     case c: FoldEpochs =>
       val horizon = replayHorizon(spark, c.checkpoint)
-      val r = MaintenanceOps.foldEpochs(spark, c.ledger, horizon)
+      val r = MaintenanceOps.foldEpochs(spark, c.ledger, Ledger.spaceAt(spark, c.ledger),
+        horizon)
       out(s"FOLD_EPOCHS_ upTo=$horizon files=${r.filesBefore}->${r.filesAfter} rows=${r.rows}")
       0
 
@@ -454,34 +430,30 @@ object GraftApp {
         }.mkString(" "))
       0
 
-    // E153 takedown reach into a band/semantic ledger, deriving the
-    // space's keys from the corpus rows (which must still hold the ids —
-    // run the ledger delete BEFORE the corpus delete).
+    // E153 takedown reach into a ledger. The ledger's space names the
+    // columns a takedown matches; their values derive from the corpus
+    // rows (which must still hold the ids — run the ledger delete BEFORE
+    // the corpus delete): the ingest's fingerprint pair recomputed from
+    // --text-col, or the stored vector from --vec-col.
     case c: DeleteLedger =>
+      val space = Ledger.spaceAt(spark, c.ledger)
+      if (space.eraseKeys.isEmpty)
+        throw new IllegalArgumentException(
+          s"${c.ledger} is a ${space.name}, which keeps no per-document rows to erase")
       val docs = spark.read.parquet(c.corpusDir)
         .filter(col(c.idCol).isInCollection(c.ids.distinct))
-      // The fp recipe recomputes the ingest fingerprint PAIR: DedupOps keys
-      // dedup identity on (_graft_fp, _graft_fp2) = (charHash, xxhash64)
-      // precisely because the ~30-bit charHash alone collides at birthday
-      // scale ~35 k docs; a takedown keyed on it alone would also erase
-      // UNRELATED docs' fingerprint rows, silently disabling their dedup
-      // on re-ingest (round-16 advice). The composite ledgerDelete erases
-      // on the pair.
-      val (keyCols, keys) = c.keyCol match {
-        case None => (Seq("_graft_fp", "_graft_fp2"), docs.select(
-          graft.functions.TextFunctions.charHash(col(c.textCol)).as("_graft_fp"),
-          xxhash64(col(c.textCol)).as("_graft_fp2")))
-        case Some(kc) => (Seq(kc), docs.select(col(c.vecCol).as(kc)))
-      }
+      val keys =
+        if (space == Ledger.Fingerprints) DedupOps.withFingerprints(docs, c.textCol)
+        else docs.withColumn("_graft_vec", col(c.vecCol))
       val r = MaintenanceOps.ledgerDelete(
-        spark, c.ledger, keyCols, keys, c.auditDir, hashKeys = c.hashAudit)
+        spark, c.ledger, space.eraseKeys, keys, c.auditDir, hashKeys = c.hashAudit)
       out(s"DELETE_LEDGER_ requested=${c.ids.size} deleted=${r.deleted} " +
         s"notFound=${r.notFound} rows=${r.rowsBefore}->${r.rowsAfter} " +
         s"leaves=${r.leavesRewritten}")
       if (r.deleted == 0L && r.notFound > 0L)
         out(s"DELETE_LEDGER_WARN_ every requested key audited found=false — " +
-          "the key recipe or --key-col likely does not match this ledger " +
-          "space (see the per-space recipes in the ledgerDelete scaladoc)")
+          "the ids are already erased, or --corpus-dir, --text-col or --vec-col " +
+          "does not hold the rows this ledger ingested")
       0
 
     // Governance: audited targeted delete, in place over a parquet corpus
@@ -652,26 +624,26 @@ object GraftApp {
 
     // Dedup-ledger recall audit (E155): exact Jaccard/cosine ground truth
     // on a deterministic sample vs the banded candidate path at the
-    // LEDGER's pinned construction. The space is read off the ledger's own
-    // pin file; the SRP pin contributes its own verify threshold, the
-    // MinHash space takes --min-jaccard.
+    // LEDGER's pinned construction. The space is the ledger's own
+    // (Ledger.spaceAt); the SRP pin contributes its own verify threshold,
+    // the MinHash space takes --min-jaccard.
     case c: DedupRecall =>
-      val fs = new org.apache.hadoop.fs.Path(c.ledger)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def pinned(space: Ledger.Space) =
-        fs.exists(new org.apache.hadoop.fs.Path(c.ledger, space.pin.get.file))
+      def notBand(cause: Throwable) = throw new IllegalArgumentException(
+        s"${c.ledger} carries neither ${Ledger.MinhashBands.pin.get.file} nor " +
+          s"${Ledger.SrpBands.pin.get.file} — not a band ledger, or " +
+          "its construction pin is lost (restore it; the audit refuses " +
+          "to band at guessed parameters)", cause)
+      val space =
+        try Ledger.spaceAt(spark, c.ledger)
+        catch { case e: IllegalArgumentException => notBand(e) }
       val r =
-        if (pinned(Ledger.SrpBands))
+        if (space == Ledger.SrpBands)
           SrpOps.dedupRecall(spark, c.ledger,
             spark.read.parquet(c.corpusDir), c.vecCol, c.idCol, c.nQueries)
-        else if (pinned(Ledger.MinhashBands))
+        else if (space == Ledger.MinhashBands)
           LshOps.dedupRecall(spark, c.ledger,
             spark.read.parquet(c.corpusDir), c.textCol, c.idCol, c.minJaccard, c.nQueries)
-        else throw new IllegalArgumentException(
-          s"${c.ledger} carries neither ${Ledger.MinhashBands.pin.get.file} nor " +
-            s"${Ledger.SrpBands.pin.get.file} — not a band ledger, or " +
-            "its construction pin is lost (restore it; the audit refuses " +
-            "to band at guessed parameters)")
+        else notBand(null)
       out(s"DEDUP_RECALL_ queries=${r.nQueries} withTruth=${r.queriesWithTruth} " +
         s"truePairs=${r.truePairs} matched=${r.matchedPairs} " +
         s"recall=${r.recall} pin=[${r.pin}]")

@@ -77,13 +77,20 @@ class NoForkLocalFsSpec extends AnyFunSuite {
     assert(drainForks.isEmpty, s"the drain epoch started ${drainForks.size}: $drainForks")
     val kept = spark.read.parquet(s"$base/out/docs")
     assert(kept.count() == 180L)
+    // A second part file in the drain's epoch leaf, so the compaction
+    // below rewrites and swaps it (a one-file leaf is left as it is).
+    val leaf = new java.io.File(s"$base/ledger").listFiles()
+      .filter(_.getName.startsWith("_graft_epoch=")).head.getPath
+    spark.read.parquet(leaf).write.mode(SaveMode.Append).parquet(leaf)
+    var compacted = MaintenanceOps.CompactionReport(0, 0, 0L)
     val maintenanceForks = forks {
-      MaintenanceOps.compactLedger(spark, s"$base/ledger")
+      compacted = MaintenanceOps.compactLedger(spark, s"$base/ledger")
       ExportOps.shardedExport(kept, s"$base/export", "doc_id", Seq("text"), 2, 7L)
       ExportOps.verifyShards(spark, s"$base/export", "doc_id", Seq("text"), 7L)
     }
     assert(maintenanceForks.isEmpty,
       s"compaction and export started ${maintenanceForks.size}: $maintenanceForks")
+    assert(compacted.filesAfter < compacted.filesBefore, compacted)
 
     val spec = TableSpec("t", toBeLoaded = true, Some("id"), Some(WatermarkType.Id))
     def append(ids: Range): Unit = ids.map(i => (i.toLong, s"r$i")).toDF("id", "v")

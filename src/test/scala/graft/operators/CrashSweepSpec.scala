@@ -120,7 +120,7 @@ class CrashSweepSpec extends AnyFunSuite {
       MaintenanceOps.ledgerDelete(spark, dir, "k",
         Seq("kill").toDF("k"), s"$dir-audit")
     } { dir =>
-      MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 9L)
+      MaintenanceOps.foldEpochs(spark, dir, Ledger.MinhashBands, upToBatchId = 9L)
       MaintenanceOps.ledgerDelete(spark, dir, "k",
         Seq("kill").toDF("k"), s"$dir-audit2")
     } { (dir, n, crashed) =>
@@ -170,20 +170,30 @@ class CrashSweepSpec extends AnyFunSuite {
     // running next could advance its marker past the compact-hidden
     // epoch — the same phantom-loss class as the erase chain. Fixture
     // is a part-folded ledger (base carries its in-leaf fold marker,
-    // one live epoch) with a root construction pin; every boundary of
-    // compact → fold → compact must keep the rows, the pin, AND the
-    // horizon.
+    // one live epoch of two part files, so the compaction rewrites it)
+    // with a root construction pin; every boundary of compact → fold →
+    // compact must keep the rows, the pin, AND the horizon.
     val tpl = Files.createTempDirectory("crash_sweep_compact_tpl")
       .resolve("ledger").toString
     Seq(("a", "base"), ("b", "epoch0"), ("c", "epoch1"))
       .toDF("k", "_graft_epoch")
       .write.partitionBy("_graft_epoch").mode(SaveMode.Overwrite).parquet(tpl)
-    MaintenanceOps.foldEpochs(spark, tpl, upToBatchId = 0L)
+    Seq(("d", "epoch1")).toDF("k", "_graft_epoch")
+      .write.partitionBy("_graft_epoch").mode(SaveMode.Append).parquet(tpl)
+    MaintenanceOps.foldEpochs(spark, tpl, Ledger.MinhashBands, upToBatchId = 0L)
     val tplFs = new Path(tpl).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = tplFs.create(new Path(tpl, "_graft_lsh_meta"), true)
     try out.write("k=16,shingleN=3,nBands=4,rowsPerBand=4".getBytes("UTF-8"))
     finally out.close()
     val conf = spark.sparkContext.hadoopConfiguration
+    // Without a crash the compaction swaps a leaf in: the sweep crosses a
+    // real rewrite, not only the entry recovery.
+    val plain = Files.createTempDirectory("crash_sweep_compact_plain")
+      .resolve("ledger").toString
+    assert(org.apache.hadoop.fs.FileUtil.copy(
+      tplFs, new Path(tpl), tplFs, new Path(plain), false, conf))
+    val rewrite = MaintenanceOps.compactLedger(spark, plain)
+    assert(rewrite.filesAfter < rewrite.filesBefore, rewrite)
     val boundaries = sweep("compact", cap = 120) { dir =>
       val dfs = fsFor(dir)
       assert(org.apache.hadoop.fs.FileUtil.copy(
@@ -191,10 +201,10 @@ class CrashSweepSpec extends AnyFunSuite {
     } { dir =>
       MaintenanceOps.compactLedger(spark, dir)
     } { dir =>
-      MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 9L)
+      MaintenanceOps.foldEpochs(spark, dir, Ledger.MinhashBands, upToBatchId = 9L)
       MaintenanceOps.compactLedger(spark, dir)
     } { (dir, n, crashed) =>
-      assert(keySet(dir) == Set("a", "b", "c"),
+      assert(keySet(dir) == Set("a", "b", "c", "d"),
         s"crash point $n (crashed=$crashed): rows lost through compact/fold")
       val fs = fsFor(dir)
       assert(MaintenanceOps.foldedThrough(fs, new Path(dir)) == 1L,
@@ -240,11 +250,13 @@ class CrashSweepSpec extends AnyFunSuite {
     assert(org.apache.hadoop.fs.FileUtil.copy(lfs, src, dfs, dst, false, conf))
   }
 
-  private def pqView(dir: String, ns: String): Set[(Long, Int, Int, Int)] = {
+  /** The store's read view as a multiset (row -> count): a duplicated
+    * code row doubles an ADC sum, so a set would hide it. */
+  private def pqView(dir: String, ns: String): Map[(Long, Int, Int, Int), Int] = {
     val arts = PqOps.readPqArtifacts(spark, dir)
     val df = if (ns == "codes") arts.codes else arts.rcodes.get
     df.select(col("id"), col("sub"), col("code"), col("cell"))
-      .as[(Long, Int, Int, Int)].collect().toSet
+      .as[(Long, Int, Int, Int)].collect().groupBy(identity).view.mapValues(_.length).toMap
   }
 
   test("foldPqEpochs converges from every crash boundary across BOTH namespaces") {
@@ -276,8 +288,8 @@ class CrashSweepSpec extends AnyFunSuite {
   }
 
   test("pqStoreDelete converges from every crash boundary across BOTH namespaces") {
-    val expCodes = pqView(pqTemplate, "codes").filterNot(r => r._1 == 1L || r._1 == 4L)
-    val expRcodes = pqView(pqTemplate, "rcodes").filterNot(r => r._1 == 1L || r._1 == 4L)
+    val expCodes = pqView(pqTemplate, "codes").filterNot(r => r._1._1 == 1L || r._1._1 == 4L)
+    val expRcodes = pqView(pqTemplate, "rcodes").filterNot(r => r._1._1 == 1L || r._1._1 == 4L)
     val boundaries = sweep("pq_delete", cap = 200) { dir =>
       copyPqTemplate(dir)
     } { dir =>
@@ -307,12 +319,10 @@ class CrashSweepSpec extends AnyFunSuite {
         ("x", 3L, "epoch0"), ("z", 7L, "epoch1"))
         .toDF("k", "_graft_n", "_graft_epoch")
         .write.partitionBy("_graft_epoch").mode(SaveMode.Overwrite).parquet(dir)
-      val fs = fsFor(dir)
-      MaintenanceOps.declareCountFoldRule(fs, new Path(dir))
     } { dir =>
-      MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 9L)
+      MaintenanceOps.foldEpochs(spark, dir, Ledger.Spans, upToBatchId = 9L)
     } { dir =>
-      MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 9L)
+      MaintenanceOps.foldEpochs(spark, dir, Ledger.Spans, upToBatchId = 9L)
     } { (dir, n, crashed) =>
       val sums = spark.read.parquet(dir)
         .groupBy(col("k")).agg(org.apache.spark.sql.functions.sum(col("_graft_n")).as("n"))
@@ -377,9 +387,9 @@ class CrashSweepSpec extends AnyFunSuite {
         .toDF("k", "_graft_epoch")
         .write.partitionBy("_graft_epoch").mode(SaveMode.Overwrite).parquet(dir)
     } { dir =>
-      MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 9L)
+      MaintenanceOps.foldEpochs(spark, dir, Ledger.MinhashBands, upToBatchId = 9L)
     } { dir =>
-      MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 9L)
+      MaintenanceOps.foldEpochs(spark, dir, Ledger.MinhashBands, upToBatchId = 9L)
     } { (dir, n, crashed) =>
       assert(keySet(dir) == Set("a", "b", "c"),
         s"crash point $n (crashed=$crashed): membership set broken")

@@ -36,6 +36,28 @@ class LedgerProtocolSpec extends AnyFunSuite {
     assert(pins.distinct.size == pins.size)
   }
 
+  for (space <- Ledger.spaces) {
+    test(s"${space.name}: spaceAt names the committed ledger") {
+      val ops = LedgerSpaces.ingests(space)
+      val root = tmp("space")
+      ops.setup(spark, root)
+      ops.prepare(spark, root, 0, Some("epoch0")).commit()
+      val dir = ops.ledgerDir(root)
+      if (space == Ledger.PqCodes) {
+        // The store has its own maintenance commands.
+        val e = intercept[IllegalArgumentException](Ledger.spaceAt(spark, dir))
+        assert(e.getMessage.contains("--pq-fold"), e.getMessage)
+      } else assert(Ledger.spaceAt(spark, dir) == space)
+    }
+  }
+
+  test("spaceAt refuses a directory that holds data without a pin") {
+    val dir = tmp("bare")
+    spark.range(3).toDF("k").write.parquet(dir)
+    val e = intercept[IllegalArgumentException](Ledger.spaceAt(spark, dir))
+    assert(e.getMessage.contains("no ledger pin"), e.getMessage)
+  }
+
   for (space <- Ledger.spaces; file <- space.pin.map(_.file)) {
     test(s"${space.name}: a batch prepared under other parameters refuses to commit " +
         "under the pin that won the race") {

@@ -98,9 +98,14 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     SrpOps.incrementalNeardup(spark,
       Seq((6L, unitVec(6L))).toDF("vec_id", "embedding"),
       "embedding", "vec_id", ledger, epochToken = Some("epoch1")).commitLedger()
+    // A second part file in epoch0's leaf (its rows repeated — harmless
+    // in a membership ledger), so the compaction rewrites that leaf; a
+    // leaf already at its target file count is left as it is.
+    val epoch0 = s"$ledger/_graft_epoch=epoch0"
+    spark.read.parquet(epoch0).write.mode(SaveMode.Append).parquet(epoch0)
 
     val report = MaintenanceOps.compactLedger(spark, ledger, targetMB = 128)
-    assert(report.filesAfter <= report.filesBefore && report.filesAfter >= 2, report)
+    assert(report.filesAfter < report.filesBefore && report.filesAfter >= 2, report)
     // The construction pin survived (epoch leaves were rewritten in place).
     val fs = new org.apache.hadoop.fs.Path(ledger)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -132,7 +137,8 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       Seq((4L, "one two three four five six seven")).toDF("doc_id", "text"),
       "text", "doc_id", ledger).commitLedger()
 
-    MaintenanceOps.compactLedger(spark, ledger, targetMB = 128)
+    val report = MaintenanceOps.compactLedger(spark, ledger, targetMB = 128)
+    assert(report.filesAfter < report.filesBefore, report)
     // The flat compaction swap replaces the whole directory — the meta pin
     // must have been carried across, or the drift refusal is disarmed.
     val fs = new org.apache.hadoop.fs.Path(ledger)
@@ -164,7 +170,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       Seq((6L, v6)).toDF("vec_id", "embedding"),
       "embedding", "vec_id", ledger, epochToken = Some("epoch2")).commitLedger()
 
-    val r = MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 1L)
+    val r = MaintenanceOps.foldEpochs(spark, ledger, Ledger.SrpBands, upToBatchId = 1L)
     assert(r.rows == 8L, r) // 2 vectors x 4 bands folded
     val fs = new org.apache.hadoop.fs.Path(ledger)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -189,7 +195,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     replay.commitLedger()
     assert(replay.survivors.select($"vec_id").as[Long].collect().toSet == Set(6L))
     // Folding again with a horizon covering epoch2 converges to base only.
-    MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 2L)
+    MaintenanceOps.foldEpochs(spark, ledger, Ledger.SrpBands, upToBatchId = 2L)
     assert(parts() == Set("_graft_epoch=base"), parts())
     val pending2 = SrpOps.incrementalNeardup(spark,
       Seq((13L, unitVec(113L, Some((v6, 0.02))))).toDF("vec_id", "embedding"),
@@ -233,18 +239,58 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     assert(parts == Set("_graft_epoch=base", "_graft_epoch=epoch1"), parts)
   }
 
+  test("a count ledger carrying an older writer's _graft_fold_rule folds to the same sums") {
+    // Writers before the fold took a Ledger.Space declared the count
+    // fold in a `_graft_fold_rule` file; such a ledger must still fold
+    // by summing, now because its pin names the span space.
+    import org.apache.spark.sql.functions.{col, sum}
+    val root = Files.createTempDirectory("fold_rule_file")
+    val ledger = root.resolve("spans").toString
+    def doc(id: Long, text: String) = Seq((id, text)).toDF("doc_id", "text")
+    DedupOps.incrementalSpans(spark, doc(1L, "a b c d x"),
+      "text", "doc_id", ledger, spanTokens = 4, epochToken = Some("epoch0")).commitLedger()
+    DedupOps.incrementalSpans(spark, doc(2L, "a b c d y"),
+      "text", "doc_id", ledger, spanTokens = 4, epochToken = Some("epoch1")).commitLedger()
+    val fs = new org.apache.hadoop.fs.Path(ledger)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(ledger, "_graft_fold_rule"), true)
+    try out.write("sum".getBytes("UTF-8")) finally out.close()
+    def sums() = spark.read.parquet(ledger)
+      .groupBy(col("_graft_h1"), col("_graft_h2")).agg(sum(col("_graft_n")))
+      .collect().map(_.toSeq).toSet
+    val before = sums()
+    val ckpt = root.resolve("ckpt")
+    Files.createDirectories(ckpt.resolve("commits"))
+    Files.write(ckpt.resolve("commits").resolve("1"), "v1".getBytes)
+    var lines = Vector.empty[String]
+    assert(graft.pipeline.GraftApp.run(
+      graft.pipeline.GraftApp.parseArgs(Seq("prod", "all",
+        "--fold-epochs", "--ledger", ledger, "--checkpoint", ckpt.toString)),
+      spark, getenv = _ => None, out = lines :+= _) == 0)
+    // 4 ledgered rows, 3 distinct spans: the fold summed.
+    assert(lines.exists(_.matches("FOLD_EPOCHS_ upTo=1 files=.* rows=3")), lines)
+    assert(sums() == before)
+    assert(spark.read.parquet(ledger).count() == 3L)
+  }
+
   test("the --compact-ledger CLI mode compacts and exits zero") {
     val ledger = Files.createTempDirectory("compact_cli_ledger").resolve("bands").toString
-    SrpOps.incrementalNeardup(spark,
-      Seq((2L, unitVec(2L))).toDF("vec_id", "embedding"),
-      "embedding", "vec_id", ledger).commitLedger()
+    // Two plain commits: at least two part files in the flat ledger.
+    Seq(2L, 4L).foreach { i =>
+      SrpOps.incrementalNeardup(spark,
+        Seq((i, unitVec(i))).toDF("vec_id", "embedding"),
+        "embedding", "vec_id", ledger).commitLedger()
+    }
     var lines = Vector.empty[String]
     val code = graft.pipeline.GraftApp.run(
       graft.pipeline.GraftApp.parseArgs(
         Seq("prod", "all", "--compact-ledger", "--ledger", ledger)),
       spark, getenv = _ => None, out = lines :+= _)
     assert(code == 0)
-    assert(lines.exists(_.startsWith("COMPACT_LEDGER_")), lines)
+    val line = lines.find(_.startsWith("COMPACT_LEDGER_")).getOrElse(fail(lines.toString))
+    val Seq(before, after) = "files=(\\d+)->(\\d+)".r.findFirstMatchIn(line).get
+      .subgroups.map(_.toInt)
+    assert(after < before, line)
     // The ledger still answers: an exact copy of the corpus vector drops.
     val pending = SrpOps.incrementalNeardup(spark,
       Seq((11L, unitVec(2L))).toDF("vec_id", "embedding"),
@@ -520,7 +566,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       "text", "doc_id", ledger, spanTokens = 4, epochToken = Some("epoch1"))
     p1.commitLedger()
 
-    val r = MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 1L)
+    val r = MaintenanceOps.foldEpochs(spark, ledger, Ledger.Spans, upToBatchId = 1L)
     // COUNT-merging fold: one summed row per distinct span — 3 spans
     // ("a b c d" 2x, "b c d x", "b c d y") from 4 ledgered rows; a
     // union fold would keep 4 and grow with every drain.
@@ -552,7 +598,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     assert(p3.flags.as[(Long, Int, Long)].collect().toSet == Set((4L, 0, 3L)),
       "a crashed fold's leftover epoch must not double-count")
     // Re-running the fold deletes the leftover WITHOUT re-merging.
-    val r2 = MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 1L)
+    val r2 = MaintenanceOps.foldEpochs(spark, ledger, Ledger.Spans, upToBatchId = 1L)
     assert(r2 == MaintenanceOps.CompactionReport(0, 0, 0L), r2)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       ledger, "_graft_epoch=epoch1")))
@@ -792,7 +838,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(dir, "._graft_epoch=epoch1_erase_bak")),
       "test setup: simulate the crashed swap")
     // (b) the unattended fold runs next, horizon past the hidden epoch.
-    val r = MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 9L)
+    val r = MaintenanceOps.foldEpochs(spark, dir, Ledger.MinhashBands, upToBatchId = 9L)
     assert(r.rows == 3L,
       s"the bak-hidden epoch must be restored and folded, not skipped: $r")
     assert(MaintenanceOps.foldedThrough(fs, path) == 1L)
@@ -829,7 +875,8 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     assert(fs.rename(
       new org.apache.hadoop.fs.Path(dir, "_graft_epoch=epoch1"),
       new org.apache.hadoop.fs.Path(dir, "._graft_epoch=epoch1_erase_bak")))
-    MaintenanceOps.compactLedger(spark, dir)
+    val r = MaintenanceOps.compactLedger(spark, dir)
+    assert(r.filesAfter < r.filesBefore, r) // epoch0's two part files rewrite
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_epoch=epoch1")),
       "the hidden leaf must be restored before the compaction walks")
     assert(spark.read.parquet(dir).select(col("id"))
@@ -1012,7 +1059,7 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_epoch=epoch-1")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_epoch=epoch+5")))
     // Folded? Manual tokens stay directories whatever the horizon.
-    MaintenanceOps.foldEpochs(spark, dir, upToBatchId = 99L)
+    MaintenanceOps.foldEpochs(spark, dir, Ledger.MinhashBands, upToBatchId = 99L)
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_epoch=epoch-1")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_graft_epoch=epoch+5")))
     val after = spark.read.parquet(dir).select(col("k"))

@@ -948,13 +948,16 @@ class PqOpsSpec extends AnyFunSuite {
       spark, vecs.filter(col("id") === 4L), "v", "id", dir, "epoch0").commitLedger()
     PqOps.incrementalPqEncode(
       spark, vecs.filter(col("id") === 5L), "v", "id", dir, "epoch1").commitLedger()
+    // Multisets (row -> count): a duplicated code row doubles an ADC
+    // sum, so a set comparison would not show it.
     def codeRows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("id"), col("sub"), col("code"), col("dist"), col("cell"))
-        .as[(Long, Int, Int, Double, Int)].collect().toSet
+        .as[(Long, Int, Int, Double, Int)].collect()
+        .groupBy(identity).view.mapValues(_.length).toMap
     val before = PqOps.readPqArtifacts(spark, dir)
     val s1 = codeRows(before.codes)
     val r1 = codeRows(before.rcodes.get)
-    assert(s1.map(_._1) == (0L to 5L).toSet)
+    assert(s1.keySet.map(_._1) == (0L to 5L).toSet && s1.values.forall(_ == 1))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def exists(rel: String) =
@@ -1023,9 +1026,10 @@ class PqOpsSpec extends AnyFunSuite {
     def codeRows() =
       PqOps.readPqArtifacts(spark, dir).codes
         .select(col("id"), col("sub"), col("code"), col("dist"), col("cell"))
-        .as[(Long, Int, Int, Double, Int)].collect().toSet
+        .as[(Long, Int, Int, Double, Int)].collect()
+        .groupBy(identity).view.mapValues(_.length).toMap
     val before = codeRows()
-    assert(before.map(_._1) == (0L to 5L).toSet)
+    assert(before.keySet.map(_._1) == (0L to 5L).toSet && before.values.forall(_ == 1))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val epochDir = new org.apache.hadoop.fs.Path(dir, "codes/_graft_epoch=epoch0")

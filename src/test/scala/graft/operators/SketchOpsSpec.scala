@@ -194,7 +194,7 @@ class SketchOpsSpec extends AnyFunSuite {
     val before = SketchOps.incrementalHeavyHitters(spark,
       Seq.empty[String].toDF("v"), "v", ledger, capacity = 4, k = 6)
       .top.as[(String, Long, Long)].collect().toSet
-    val r = MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 1L)
+    val r = MaintenanceOps.foldEpochs(spark, ledger, Ledger.HeavyHitters, upToBatchId = 1L)
     assert(r.rows > 0L)
     val after = SketchOps.incrementalHeavyHitters(spark,
       Seq.empty[String].toDF("v"), "v", ledger, capacity = 4, k = 6)

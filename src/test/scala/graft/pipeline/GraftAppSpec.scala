@@ -324,13 +324,9 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
       GraftApp.parseArgs(Seq("dev", "corpus", "--zorder", "a,b,c,d,e,f,g")))
   }
 
-  test("--delete-ids --ledger --key-recipe fp closes the fingerprint-ledger erasure loop") {
-    // Round 16 (verdict item 5 + ADVICE): the CLI previously always
-    // derived ledger keys from --vec-col, so the fingerprint-ledger
-    // recipe (recompute _graft_fp from the text) was unreachable — and
-    // a type-compatible-but-wrong key column made the takedown a silent
-    // found=false no-op. Now: --key-recipe fp recomputes the ingest
-    // fingerprint, the vec recipe refuses --key-col _graft_fp loudly,
+  test("--delete-ids --ledger closes the fingerprint-ledger erasure loop") {
+    // The ledger's space names the erase keys: a fingerprint ledger is
+    // erased on the ingest fingerprint pair recomputed from --text-col,
     // an all-missed delete prints a WARN line, and --hash-audit keeps
     // the tombstones content-free.
     val root = Files.createTempDirectory("fp_erase_cli")
@@ -346,7 +342,7 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
     // sharing doc 2's _graft_fp but belonging to a DIFFERENT document
     // (different xxhash64). The ~30-bit charHash collides at birthday
     // scale ~35 k docs; keyed on it alone the takedown would erase this
-    // unrelated doc's dedup row too. The fp recipe must key on the pair.
+    // unrelated doc's dedup row too. The takedown must key on the pair.
     import org.apache.spark.sql.functions.col
     val fpOf2 = docs.filter($"doc_id" === 2L)
       .select(graft.functions.TextFunctions.charHash(col("text")))
@@ -363,8 +359,7 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
 
     val audit = s"$root/audit"
     val (c1, l1) = cli("--delete-ids", "2,5", "--ledger", ledger,
-      "--corpus-dir", corpus, "--audit-dir", audit,
-      "--key-recipe", "fp", "--hash-audit")
+      "--corpus-dir", corpus, "--audit-dir", audit, "--hash-audit")
     assert(c1 == 0, l1.mkString("; "))
     assert(l1.exists(_.startsWith("DELETE_LEDGER_ requested=2 deleted=2")), l1)
     assert(!l1.exists(_.startsWith("DELETE_LEDGER_WARN_")), l1)
@@ -393,24 +388,54 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
     // (--hash-audit again: the audit trail's schema is append-locked —
     // mixing raw and hashed tombstones in one directory now refuses.)
     val (c2, l2) = cli("--delete-ids", "5", "--ledger", ledger,
-      "--corpus-dir", corpus, "--audit-dir", audit, "--key-recipe", "fp",
-      "--hash-audit")
+      "--corpus-dir", corpus, "--audit-dir", audit, "--hash-audit")
     assert(c2 == 0 && l2.exists(_.startsWith("DELETE_LEDGER_WARN_")), l2)
-    // The vec recipe refuses the fingerprint key column loudly.
-    val e = intercept[IllegalArgumentException](
-      cli("--delete-ids", "2", "--ledger", ledger, "--corpus-dir", corpus,
-        "--audit-dir", audit, "--key-col", "_graft_fp"))
-    assert(e.getMessage.contains("--key-recipe fp"), e.getMessage)
-    // --key-col makes no sense with the fp recipe (the pair is fixed).
-    val e2 = intercept[IllegalArgumentException](
-      cli("--delete-ids", "2", "--ledger", ledger, "--corpus-dir", corpus,
-        "--audit-dir", audit, "--key-recipe", "fp", "--key-col", "_graft_fp"))
-    assert(e2.getMessage.contains("not applicable"), e2.getMessage)
-    // An unknown recipe refuses at the parser.
-    val e3 = intercept[IllegalArgumentException](
-      GraftApp.parseArgs(Seq("dev", "corpus", "--delete-ids", "2", "--ledger", ledger,
-        "--corpus-dir", corpus, "--audit-dir", audit, "--key-recipe", "nope")))
-    assert(e3.getMessage.contains("--key-recipe: nope"), e3.getMessage)
+  }
+
+  test("--delete-ids --ledger erases an SRP ledger's vectors with no key flag") {
+    val root = Files.createTempDirectory("srp_erase_cli")
+    val corpus = s"$root/vecs"
+    def unit(seed: Long): Array[Float] = {
+      val rng = new scala.util.Random(seed)
+      val raw = Array.fill(16)(rng.nextGaussian())
+      val n = math.sqrt(raw.map(x => x * x).sum)
+      raw.map(x => (x / n).toFloat)
+    }
+    val vecs = (1L to 4L).map(i => (i, unit(i))).toDF("vec_id", "embedding")
+    vecs.write.mode(SaveMode.Overwrite).parquet(corpus)
+    val ledger = s"$root/srp"
+    graft.operators.SrpOps.incrementalNeardup(
+      spark, vecs, "embedding", "vec_id", ledger).commitLedger()
+    val rowsPerVec = spark.read.parquet(ledger).count() / 4L
+    val outs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val code = GraftApp.run(GraftApp.parseArgs(Seq("dev", "corpus", "--delete-ids", "2,3",
+        "--ledger", ledger, "--corpus-dir", corpus, "--audit-dir", s"$root/audit",
+        "--id-col", "vec_id")),
+      spark, getenv = _ => None, out = outs.append(_), log = _ => ())
+    assert(code == 0, outs.mkString("; "))
+    assert(outs.exists(_.startsWith(
+      s"DELETE_LEDGER_ requested=2 deleted=${2L * rowsPerVec} notFound=0")), outs)
+    val left = spark.read.parquet(ledger).select($"_graft_vec").as[Seq[Float]]
+      .collect().map(_.toSeq).toSet
+    assert(left == Set(unit(1L).toSeq, unit(4L).toSeq), "only vectors 2 and 3 go")
+  }
+
+  test("--delete-ids --ledger refuses a MinHash band ledger before any tombstone") {
+    val root = Files.createTempDirectory("band_erase_cli")
+    val corpus = s"$root/docs"
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
+    docs.write.mode(SaveMode.Overwrite).parquet(corpus)
+    val ledger = s"$root/lsh"
+    graft.operators.LshOps.incrementalNeardup(
+      spark, docs, "text", "doc_id", ledger).commitLedger()
+    val e = intercept[IllegalArgumentException](GraftApp.run(
+      GraftApp.parseArgs(Seq("dev", "corpus", "--delete-ids", "1", "--ledger", ledger,
+        "--corpus-dir", corpus, "--audit-dir", s"$root/audit")),
+      spark, getenv = _ => None, out = _ => (), log = _ => ()))
+    assert(e.getMessage.contains("band ledger") &&
+      e.getMessage.contains("no per-document rows"), e.getMessage)
+    assert(!Files.exists(root.resolve("audit")), "a refused erase wrote tombstones")
   }
 
   test("--ann-recall prints the pinned searcher's recall@k, bit-equal to the API") {
@@ -963,6 +988,12 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
       "--pq-store", "P", "--ledger", "L")
     assert(pqLedger.contains("--delete-ids --pq-store") && pqLedger.contains("--ledger"),
       pqLedger)
+    // The ledger's space names its erase keys; no flag chooses them.
+    for (flag <- Seq("--key-col", "--key-recipe")) {
+      val keyFlag = refuse("dev", "c", "--delete-ids", "1", "--ledger", "L",
+        "--corpus-dir", "C", "--audit-dir", "A", flag, "_graft_vec")
+      assert(keyFlag.contains("--delete-ids --ledger") && keyFlag.contains(flag), keyFlag)
+    }
     val shards = refuse("dev", "docs", "--verify-export", "--export-dir", "P", "--shards", "4")
     assert(shards.contains("--verify-export") && shards.contains("--shards"), shards)
   }
@@ -1005,12 +1036,8 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
       Seq("dev", "c", "--delete-ids", "3,4", "--pq-store", "/pq", "--audit-dir", "/a") ->
         DeletePq(Seq(3L, 4L), "/a", "/pq", "doc_id"),
       Seq("dev", "c", "--delete-ids", "3", "--ledger", "/l", "--corpus-dir", "/c",
-        "--audit-dir", "/a", "--key-col", "_graft_vec") ->
-        DeleteLedger(Seq(3L), "/a", "/l", "/c", Some("_graft_vec"), "text", "embedding",
-          "doc_id", hashAudit = false),
-      Seq("dev", "c", "--delete-ids", "3", "--ledger", "/l", "--corpus-dir", "/c",
-        "--audit-dir", "/a", "--key-recipe", "fp", "--hash-audit") ->
-        DeleteLedger(Seq(3L), "/a", "/l", "/c", None, "text", "embedding", "doc_id",
+        "--audit-dir", "/a", "--hash-audit") ->
+        DeleteLedger(Seq(3L), "/a", "/l", "/c", "text", "embedding", "doc_id",
           hashAudit = true),
       Seq("dev", "c", "--delete-ids", "5,6", "--corpus-dir", "/c", "--audit-dir", "/a") ->
         DeleteCorpus(Seq(5L, 6L), "/a", "/c", "doc_id"),
@@ -1043,7 +1070,7 @@ test("--export-shards writes manifested shards; --verify-export re-checks and re
         "--tau", "0.7") -> ExactNeardup("/c", "/o", "text", "doc_id", 0.7))
     for ((argv, want) <- cases)
       assert(GraftApp.parseArgs(argv) == want, argv.mkString(" "))
-    // All 23 commands are covered (the ledger delete twice: vec and fp).
+    // All 23 commands are covered.
     assert(cases.map(_._2.getClass).distinct.size == 23)
   }
 }

@@ -582,7 +582,8 @@ class StreamingSpec extends AnyFunSuite {
       spark, Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"),
       "text", "doc_id", ledger, epochToken = Some("epoch5"))
       .commitLedger()
-    graft.operators.MaintenanceOps.foldEpochs(spark, ledger, upToBatchId = 5L)
+    graft.operators.MaintenanceOps.foldEpochs(
+      spark, ledger, graft.operators.Ledger.MinhashBands, upToBatchId = 5L)
     val mem = MemoryStream[(Long, String)]
     val q = StreamingOps.foreachBatchLedgerNeardup(
       mem.toDF().toDF("doc_id", "text").writeStream,
