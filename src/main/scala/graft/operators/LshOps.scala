@@ -4,7 +4,9 @@ import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{LongType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** MinHash + LSH banding as a reusable operator (SURVEY §2.3 E38/E51): the
   * shared machinery behind the q48 candidate-pair and q52 purge-list
@@ -302,14 +304,19 @@ object LshOps {
     * `nBands` rows per colliding doc, the order of the two id sets; the
     * singleton buckets, most rows, never leave the executors.
     *
-    * Nothing shuffles the batch again. `ledgerHits` is the hit set,
-    * `survivors` the batch anti-joined with the broadcast hits and then
-    * with the broadcast drops, and the committed buckets a filter of the
-    * pinned rows: a singleton bucket whose id is null or in neither set,
-    * and each colliding bucket that holds such an id once, through one
-    * row the driver picked. The pin fixes the pre-commit ledger read, so
-    * every output evaluated after `commitLedger()` still sees the ledger
-    * as it was; nothing is cached, so nothing outlives the batch.
+    * The driver applies the verdict it holds with no further job and no
+    * join: each set is one hashed `InSet` predicate (`ColumnBridge.inSet`,
+    * ids compared as an equi-join compares them). `survivors` is the batch
+    * filtered by `id IS NULL OR id NOT IN (hits ∪ drops)`, so a null id
+    * stays as under an anti join and no batch row can be multiplied; an
+    * empty set keeps its filter, so the plan does not vary by batch.
+    * `ledgerHits` is the hit set as rows on the driver. The committed
+    * buckets are a filter of the pinned rows: a singleton bucket whose id
+    * is null or in neither set, and each colliding bucket that holds such
+    * an id once, through one row the driver picked. The pin fixes the
+    * pre-commit ledger read, so every output evaluated after
+    * `commitLedger()` still sees the ledger as it was; nothing is cached,
+    * so nothing outlives the batch.
     */
   def incrementalNeardup(
       spark: org.apache.spark.sql.SparkSession,
@@ -352,21 +359,15 @@ object LshOps {
       .select(id, col("b"), col("bh"), inLedger, row)
       .sortWithinPartitions(id)
       .collect())
-    // One scan of driver rows, not a local relation: the optimizer would
-    // fold an empty set's anti join away and the plan would vary by batch.
-    val settled = spark.createDataFrame(
-      spark.sparkContext.parallelize(v.hits.map(Row(_, true)) ++ v.drops.map(Row(_, false)), 1),
-      StructType(Seq(pin.schema(idCol).copy(nullable = true),
-        StructField("_graft_hit", BooleanType))))
-    def ids(hit: Boolean) = settled.filter(col("_graft_hit") === hit).select(id)
+    val idField = pin.schema(idCol)
+    val unsettled = id.isNull || !ColumnBridge.inSet(id, idField.dataType, v.hits ++ v.drops)
     // A singleton bucket is committed unless its id is settled; a colliding
     // one through the one row the driver kept for it.
-    val committed = when(colliding, row.isInCollection(v.kept))
-      .otherwise(id.isNull || !id.isInCollection((v.hits ++ v.drops).filter(_ != null)))
+    val committed = when(colliding, ColumnBridge.inSet(row, LongType, v.kept)).otherwise(unsettled)
     new Ledger.Pending(
-      batch.join(broadcast(ids(true)), Seq(idCol), "left_anti")
-        .join(broadcast(ids(false)), Seq(idCol), "left_anti"),
-      ids(true),
+      batch.filter(unsettled),
+      spark.createDataFrame(v.hits.map(Row(_)).asJava,
+        StructType(Seq(idField.copy(nullable = true)))),
       () => Ledger.commit(
         pin.filter(committed).select(col("b").as("_graft_b"), col("bh").as("_graft_bh")),
         ledgerDir, Ledger.MinhashBands, params, epochToken))

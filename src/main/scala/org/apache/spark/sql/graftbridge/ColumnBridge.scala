@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, InSet, KnownNullable, UnixDate}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types._
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters — the
   * supported extension-point shape for libraries that ship custom Catalyst
@@ -11,6 +14,31 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Whether `c`, of type `dataType`, is one of `values` (external values of
+    * that type, as a `Row` holds them), as ONE hashed Catalyst `InSet`:
+    * no literal per value, and generated code that reads the set by
+    * reference, so it does not change with the values. Nulls in `values`
+    * are left out: a null `c` is never in the set. Values compare as an
+    * equi-join compares them: a float's -0.0 equals 0.0, every NaN equals
+    * every other, binary values by content. */
+  def inSet(c: Column, dataType: DataType, values: Iterable[Any]): Column = {
+    def key(e: Expression): Expression = dataType match {
+      case FloatType | DoubleType => NormalizeNaNAndZero(e)
+      // For these types InSet compiles a switch over the values while the
+      // set holds at most spark.sql.optimizer.inSetSwitchThreshold of them,
+      // one class per set. Widened to a long they take the set path; the
+      // tag keeps the optimizer from unwrapping the widening cast.
+      case ByteType | ShortType | IntegerType => KnownNullable(Cast(e, LongType))
+      case DateType => KnownNullable(Cast(UnixDate(e), LongType))
+      case _ => e
+    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dataType)
+    val onDriver = key(BoundReference(0, dataType, nullable = false))
+    val set: Set[Any] = values.iterator.filter(_ != null)
+      .map(v => onDriver.eval(InternalRow(toCatalyst(v)))).toSet
+    column(InSet(key(expression(c)), set))
+  }
 
   /** Force-create the session's StateStoreCoordinator RPC endpoint.
     *

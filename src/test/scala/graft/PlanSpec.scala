@@ -8,6 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * These assert on the physical plan text, so a regression in plan shape
   * fails CI even while results stay correct. */
 class PlanSpec extends AnyFunSuite {
+  private object AdaptivePlans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private lazy val spark = TestSpark.spark
 
   private def plan(name: String): String =
@@ -128,19 +131,53 @@ class PlanSpec extends AnyFunSuite {
     assert(aggs >= 4, s"expected partial+final aggregates for both phases, got $aggs:\n$p")
   }
 
-  test("q104: batch filtering is anti joins on the batch side, never inner") {
-    // The incremental near-dup shape: the ledger-bucket probe runs eagerly
-    // inside the pinned hit set (a checkpointed leaf here — that pin IS
-    // the pre/post-commit determinism contract, LshIncrSpec), and the
-    // returned survivor plan filters the batch through two LeftAnti joins
-    // (ledger hits, in-batch purge). An inner join against bucket ids
-    // sneaking in would duplicate batch rows per matching bucket —
-    // row-count corruption, not just a slowdown.
-    val p = plan("q104_incr_neardup")
-    assert("LeftAnti".r.findAllIn(p).size >= 2,
-      s"expected >=2 anti joins (hits + purge):\n${p.take(1500)}")
-    assert(!"(?i)Join Inner".r.findFirstIn(p).isDefined,
-      s"survivor plan must not inner-join the batch:\n${p.take(1500)}")
+  /** The physical operators of `df`'s plan, inside the adaptive root. */
+  private def operators(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    AdaptivePlans.collect(df.queryExecution.executedPlan) { case n => n.nodeName }
+
+  /** The `InSet` predicates of the filters in `df`'s optimized plan. */
+  private def idSets(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.collect { case i: org.apache.spark.sql.catalyst.expressions.InSet => i }
+    }.flatten
+
+  private def q104Batch = Tables.parallel(Tables(spark, TestSpark.sfDir, "documents"))
+    .filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 1)
+
+  test("q104: the settled verdict filters the batch by one id set, never a join") {
+    // The incremental near-dup shape: the verdict settles eagerly on the
+    // driver (the pinned verdict frame is read once while the query is
+    // built), and the returned survivor plan filters the batch by ONE
+    // hashed id-set predicate holding the ledger hits and the in-batch
+    // drops. No join of any type may reach the batch: a join against
+    // bucket or id rows could multiply batch rows — row-count corruption,
+    // not just a slowdown.
+    val df = SparkEntry.queries("q104_incr_neardup")(spark, TestSpark.sfDir)
+    assert(!operators(df).exists(n => n.contains("Join") || n.contains("Cartesian")),
+      s"survivor plan joins the batch:\n${df.queryExecution.executedPlan.toString.take(1500)}")
+    val sets = idSets(df)
+    assert(sets.size == 1 && sets.head.references.map(_.name).toSet == Set("doc_id"),
+      s"expected doc_id filtered by one id set:\n${df.queryExecution.optimizedPlan.toString.take(1500)}")
+    // The set holds exactly the batch ids the verdict took out.
+    def ids(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.get(0)).toSet
+    val settled = ids(q104Batch.select("doc_id")) -- ids(df)
+    assert(settled.nonEmpty && sets.head.hset == settled)
+  }
+
+  test("q104: a batch with no hits and no drops plans the same operators") {
+    // No ledger means no hits, and a bucket cap of 1 takes every colliding
+    // bucket out of the verdict, so no drops: the empty set keeps its
+    // filter and the plan does not vary by batch.
+    val ledger = java.nio.file.Files.createTempDirectory("q104_empty").resolve("bands").toString
+    val empty = graft.operators.LshOps.incrementalNeardup(
+      spark, q104Batch, "text", "doc_id", ledger, maxBucket = 1).survivors.select("doc_id")
+    assert(empty.count() == q104Batch.count(), "the empty verdict dropped batch rows")
+    val sets = idSets(empty)
+    assert(sets.size == 1 && sets.head.hset.isEmpty,
+      s"the empty id set lost its filter:\n${empty.queryExecution.optimizedPlan}")
+    assert(operators(empty) ==
+      operators(SparkEntry.queries("q104_incr_neardup")(spark, TestSpark.sfDir)))
   }
 
   test("every query stays inside its shuffle budget") {
@@ -183,8 +220,9 @@ class PlanSpec extends AnyFunSuite {
                                   // doc_id (the cluster-member frame is unbounded
                                   // — broadcasting it would be a scale lie) + the
                                   // single component agg carrying top-1 AND size
-      "q104_incr_neardup" -> 3,   // ledger-hit anti-join + in-batch purge join + its distinct
-                                  // (banding lives in the cached frame, pinned like q48)
+      "q104_incr_neardup" -> 1,   // the documents spread (Tables.parallel) only: the
+                                  // settled verdict filters the batch by one id set
+                                  // (the verdict's exchange runs eagerly, outside this plan)
       "q153_heavy_hitters" -> 2,  // the single-file parallelism spread (Tables.parallel)
                                   // + the SinglePartition sketch merge — the merged state
                                   // is ONE capacity-entry map, the cheapest exchange here

@@ -55,7 +55,14 @@ class LshIncrParitySpec extends AnyFunSuite {
 
   private def docs(rows: (Long, String)*): DataFrame = rows.toDF("doc_id", "text")
 
-  private def rows(df: DataFrame): List[String] = df.collect().map(_.toString).toList.sorted
+  /** A binary id renders as hex, so equal contents compare equal. */
+  private def show(v: Any): Any = v match {
+    case b: Array[Byte] => b.map("%02x".format(_)).mkString("0x", "", "")
+    case other => other
+  }
+
+  private def rows(df: DataFrame): List[String] =
+    df.collect().map(_.toSeq.map(show).mkString("[", ",", "]")).toList.sorted
 
   private def ledgerRows(dir: String): List[String] =
     if (!new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration).exists(new Path(dir)))
@@ -78,7 +85,7 @@ class LshIncrParitySpec extends AnyFunSuite {
     ref.commitLedger()
     got.commitLedger()
     assert(ledgerRows(newDir) == ledgerRows(refDir), "committed ledger rows differ")
-    def ids(df: DataFrame) = df.select("doc_id").collect().map(_.get(0)).toSet
+    def ids(df: DataFrame) = df.select("doc_id").collect().map(r => show(r.get(0))).toSet
     (ids(got.survivors), ids(got.ledgerHits))
   }
 
@@ -179,5 +186,45 @@ class LshIncrParitySpec extends AnyFunSuite {
     }
     val (kept, hits) = parity(committed, epoch1, token = Some("epoch1"))
     assert(kept == Set(12L) && hits == Set(11L))
+  }
+
+  test("string ids") {
+    val (kept, hits) = parity(ledgerOf(Seq(("a1", alpha), ("a2", lorem)).toDF("doc_id", "text")),
+      Seq(("b11", alpha), ("b13", fresh), ("b15", fresh), ("b17", lorem), (null, fresh))
+        .toDF("doc_id", "text"))
+    assert(kept == Set("b13", null) && hits == Set("b11", "b17"))
+  }
+
+  test("double ids: -0.0 equals 0.0 and NaNs equal each other") {
+    val near = "seven words of prose that are near duplicates"
+    val (kept, hits) = parity(ledgerOf(Seq((1.0, alpha), (2.0, lorem)).toDF("doc_id", "text")),
+      Seq((0.0, alpha), (-0.0, fresh), (7.0, fresh), (5.0, lorem), (3.0, near),
+        (Double.NaN, near), (Double.NaN, "unrelated prose about cats")).toDF("doc_id", "text"))
+    // -0.0 is the hit 0.0, so 7.0 keeps the fresh text; both NaN rows are
+    // one id, dropped by 3.0.
+    assert(kept.map(_.toString) == Set("3.0", "7.0") && hits.map(_.toString) == Set("0.0", "5.0"))
+  }
+
+  test("binary ids compare by content") {
+    def b(s: String) = s.getBytes("UTF-8")
+    val (kept, hits) = parity(ledgerOf(Seq((b("L1"), alpha), (b("L2"), lorem)).toDF("doc_id", "text")),
+      Seq((b("B11"), alpha), (b("B13"), fresh), (b("B15"), fresh), (b("B15"), "unrelated prose"),
+        (b("B17"), lorem), (b("B19"), "more unrelated prose about dogs")).toDF("doc_id", "text"))
+    assert(kept == Set(show(b("B13")), show(b("B19"))) &&
+      hits == Set(show(b("B11")), show(b("B17"))))
+  }
+
+  test("int ids") {
+    val (kept, hits) = parity(ledgerOf(Seq((1, alpha), (2, lorem)).toDF("doc_id", "text")),
+      Seq[(Option[Int], String)]((Some(11), alpha), (Some(13), fresh), (Some(15), fresh),
+        (Some(17), lorem), (None, alpha)).toDF("doc_id", "text"))
+    assert(kept == Set(13, null) && hits == Set(11, 17, null))
+  }
+
+  test("date ids") {
+    def d(day: Int) = java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))
+    val (kept, hits) = parity(ledgerOf(Seq((d(1), alpha), (d(2), lorem)).toDF("doc_id", "text")),
+      Seq((d(11), alpha), (d(13), fresh), (d(15), fresh), (d(17), lorem)).toDF("doc_id", "text"))
+    assert(kept == Set(d(13)) && hits == Set(d(11), d(17)))
   }
 }
