@@ -11,13 +11,7 @@ import org.apache.spark.sql.functions._
 final class PendingDedup private[operators] (
     /** Batch rows new to the corpus (fingerprint columns removed). */
     val survivors: DataFrame,
-    commit: () => Unit) {
-
-  /** Write the survivors' fingerprints to the ledger. Call ONLY after the
-    * survivors have been durably written to their destination. Reads the
-    * eagerly-checkpointed frame, so it never recomputes the batch. */
-  def commitLedger(): Unit = commit()
-}
+    protected val stage: () => () => Unit) extends Ledger.Commit
 
 /** Incremental exact deduplication against a persistent fingerprint ledger —
   * the "dedup today's crawl against the whole corpus" operation an LLM data
@@ -58,7 +52,7 @@ object DedupOps {
     val fps = survivors.select(col("_graft_fp"), col("_graft_fp2"))
     new PendingDedup(
       survivors.drop("_graft_fp", "_graft_fp2"),
-      () => Ledger.commit(fps, ledgerDir, Ledger.Fingerprints, "", epochToken))
+      () => Ledger.stage(fps, ledgerDir, Ledger.Fingerprints, "", epochToken))
   }
 
   /** `df` with the ingest's fingerprint pair of `textCol`: `_graft_fp`
@@ -165,11 +159,7 @@ object DedupOps {
       /** (id, start_tok, n_docs) positions in THIS batch whose span
         * appears in ≥ minDocs distinct documents across ledger + batch. */
       val flags: DataFrame,
-      commit: () => Unit) {
-    /** Append the batch's span frequencies to the ledger. Call ONLY after
-      * the batch's processed output is durably written. */
-    def commitLedger(): Unit = commit()
-  }
+      protected val stage: () => () => Unit) extends Ledger.Commit
 
   /** E109: INCREMENTAL duplicate-span detection — [[duplicateSpans]]
     * against a persistent span-frequency ledger, so today's crawl is
@@ -241,7 +231,7 @@ object DedupOps {
       .localCheckpoint(true)
     new PendingSpanFlags(
       flags,
-      () => Ledger.commit(batchCounts, ledgerDir, Ledger.Spans, params, epochToken))
+      () => Ledger.stage(batchCounts, ledgerDir, Ledger.Spans, params, epochToken))
   }
 
   /** E106: span SURGERY — remove every [[duplicateSpans]]-flagged window

@@ -893,7 +893,7 @@ object KmeansOps {
     // smaller k or a larger first batch.
     if (model.isEmpty && batch.count() < k) {
       val noHits = batch.select(col(idCol)).filter(lit(false)).localCheckpoint(true)
-      return new Ledger.Pending(batch, noHits, () => ())
+      return new Ledger.Pending(batch, noHits, () => () => ())
     }
     val cents: Array[Array[Double]] = model match {
       case Some(pin) =>
@@ -966,6 +966,6 @@ object KmeansOps {
     new Ledger.Pending(
       survivors,
       hits,
-      () => Ledger.commit(survivorRows, ledgerDir, Ledger.Clusters, pinBody, epochToken))
+      () => Ledger.stage(survivorRows, ledgerDir, Ledger.Clusters, pinBody, epochToken))
   }
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The ingest side of the ledger protocol, written once for every ledger
   * space. A ledger is a directory of state rows an incremental operator
@@ -11,20 +11,26 @@ import org.apache.spark.sql.functions.{col, lit}
   * follows the same rules:
   *
   *  - Write-then-commit. An ingest reads the ledger ([[prior]]) and
-  *    returns its output plus a commit; the caller writes the output
-  *    durably FIRST, then commits ([[commit]]). Committing before the
-  *    write would let a failed write + re-run find its own rows already
-  *    ledgered and drop the whole batch — silent, permanent corpus loss.
-  *    With the split, a crash before the commit leaves the ledger as it
-  *    was and the re-run reproduces the identical output.
-  *  - Epoch replay. With an `epochToken` the batch's rows land in an
-  *    `_graft_epoch=<token>` partition by dynamic overwrite and the prior
-  *    read excludes that epoch, so a crash at ANY point (before the write,
-  *    between write and commit, after commit but before the caller's
-  *    checkpoint) replays to the identical output and ledger.
+  *    returns its output plus a commit in two halves ([[stage]]): the
+  *    stage writes the ledger rows where no reader sees them, the publish
+  *    makes them the ledger's. The caller may stage while it writes the
+  *    output, but publishes only after the output is durably written.
+  *    Publishing before the write would let a failed write + re-run find
+  *    its own rows already ledgered and drop the whole batch — silent,
+  *    permanent corpus loss. With the split, a crash before the publish
+  *    leaves the ledger as it was and the re-run reproduces the identical
+  *    output.
+  *  - Epoch replay. With an `epochToken` the stage writes the batch's
+  *    rows to the hidden `.graft-stage-<token>` directory, the publish
+  *    swaps it in as the `_graft_epoch=<token>` partition (replacing a
+  *    replayed epoch's own), and the prior read excludes that epoch, so a
+  *    crash at ANY point (before the write, during the stage, between
+  *    write and publish, inside the swap, after the publish but before
+  *    the caller's checkpoint) replays to the identical output and
+  *    ledger.
   *  - One layout. A ledger is flat (plain commits) or epoch-partitioned
-  *    (epoch commits), never both: the commit refuses, before it writes,
-  *    rows in the layout the directory does not have.
+  *    (epoch commits), never both: the publish refuses, before any row
+  *    becomes visible, rows in the layout the directory does not have.
   *  - Pin before data. The commit writes the space's pin before the
   *    first rows. A crash between the two leaves a pinned-but-empty
   *    ledger, which reads as empty; never committed rows whose parameters
@@ -36,9 +42,10 @@ import org.apache.spark.sql.functions.{col, lit}
   *    loudly instead of silently replacing each other's pin.
   *  - Pin-or-refuse. A read refuses a pin that disagrees with the
   *    ingest's parameters, and a ledger holding data without its pin.
-  *  - Data means data. A directory holding only pins, markers or Spark's
-  *    commit debris (`_temporary`, `.spark-staging-*`, left by a crash in
-  *    the first commit) is an empty ledger.
+  *  - Data means data. A directory holding only pins, markers, unpublished
+  *    stages (`.graft-stage-*`) or Spark's commit debris (`_temporary`,
+  *    `.spark-staging-*`, left by a crash in the first commit) is an empty
+  *    ledger.
   *  - Summed counts. Count spaces sum their rows at read, so the read
   *    drops crashed-fold leftovers and `MaintenanceOps.foldEpochs` sums
   *    them by key; it takes the space, so nothing on disk declares this.
@@ -114,6 +121,18 @@ object Ledger {
   val spaces: Seq[Space] =
     Seq(Fingerprints, Spans, MinhashBands, SrpBands, Clusters, HeavyHitters, PqCodes)
 
+  /** The ledger commit of a prepared batch, in [[stage]]'s two halves. */
+  trait Commit {
+    protected def stage: () => () => Unit
+    /** Stage the batch's ledger rows and return the publish. The stage may
+      * run while the batch's output is written; publish ONLY after that
+      * write has returned. */
+    def stageLedger(): () => Unit = stage()
+    /** Stage and publish the batch's ledger rows. Call ONLY after the
+      * batch's output is durably written. */
+    def commitLedger(): Unit = stageLedger()()
+  }
+
   /** A prepared batch of a ledger that drops rows: the survivors, the
     * ids the ledger dropped, and the commit. */
   final class Pending private[operators] (
@@ -123,11 +142,7 @@ object Ledger {
       /** (idCol) of batch rows dropped by a ledger match — callers
         * wanting verification-before-purge join these back to the corpus. */
       val ledgerHits: DataFrame,
-      commit: () => Unit) {
-    /** Commit the survivors' rows. Call ONLY after the survivors are
-      * durably written. */
-    def commitLedger(): Unit = commit()
-  }
+      protected val stage: () => () => Unit) extends Commit
 
   /** The committed rows an ingest reads, or None for an empty ledger
     * (missing directory, only pins or debris). Refuses a pin whose
@@ -185,24 +200,59 @@ object Ledger {
     }
   }
 
-  /** Commit a prepared batch's ledger rows: pin (or check the pin), then
-    * append the rows — or, with an `epochToken`, dynamically overwrite
-    * their `_graft_epoch` partition (the space's partition columns nest
-    * below it). */
-  def commit(
+  /** The first half of a ledger commit, which no reader sees; returns
+    * the second, the publish. With an `epochToken` the stage writes the
+    * rows (the space's partition columns nested) into the hidden
+    * `.graft-stage-<token>` directory of the ledger, and the publish swaps
+    * it in as the `_graft_epoch=<token>` partition, replacing a replayed
+    * epoch's own partition ([[MaintenanceOps.swapIn]]). Without one the
+    * stage does nothing and the publish appends the rows. The publish
+    * first refuses the other layout and a foreign pin (dropping the staged
+    * rows), then writes the pin when there is none, so the pin comes
+    * before the data. Staging may run beside the write of the batch's
+    * output; publishing must wait for that write ([[Ledger]]'s
+    * write-then-commit). */
+  def stage(
       rows: DataFrame,
       dir: String,
       space: Space,
       pinBody: String,
-      epochToken: Option[String]): Unit = {
+      epochToken: Option[String]): () => Unit = {
     val path = new Path(dir)
     val fs = path.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
-    refuseOtherLayout(fs, path, space, epochToken.isDefined)
+    def partitioned(w: DataFrameWriter[Row]) =
+      if (space.partitionCols.isEmpty) w else w.partitionBy(space.partitionCols: _*)
+    epochToken match {
+      case None => () => {
+        refuseOrPin(fs, path, space, pinBody, epochs = false)
+        partitioned(rows.write.mode(SaveMode.Append)).parquet(dir)
+      }
+      case Some(t) =>
+        val staged = new Path(path, s"$StagePrefix$t")
+        partitioned(rows.write.mode(SaveMode.Overwrite)).parquet(staged.toString)
+        () => {
+          try refuseOrPin(fs, path, space, pinBody, epochs = true)
+          catch { case e: IllegalStateException => fs.delete(staged, true); throw e }
+          MaintenanceOps.swapIn(fs, staged, new Path(path, s"_graft_epoch=$t"), "publish")
+        }
+    }
+  }
+
+  /** Name prefix of an epoch commit's staged rows: a dot directory, which
+    * parquet listings, [[MaintenanceOps.ledgerHasData]] and every
+    * maintenance walk skip, so a stage left by a crash is not data. */
+  private[operators] val StagePrefix = ".graft-stage-"
+
+  /** A commit's checks and its pin: refuses the other layout and a pin
+    * that differs from `pinBody`, and writes the pin when there is none. */
+  private def refuseOrPin(
+      fs: FileSystem, path: Path, space: Space, pinBody: String, epochs: Boolean): Unit = {
+    refuseOtherLayout(fs, path, space, epochs)
     space.pin.foreach { pin =>
       readPin(fs, path, pin.file) match {
         case Some(stored) if stored != pinBody.trim =>
           throw new IllegalStateException(
-            s"${space.name} at $dir was pinned to [${paramLine(stored)}] after this " +
+            s"${space.name} at $path was pinned to [${paramLine(stored)}] after this " +
               s"batch was prepared against [${paramLine(pinBody)}]" +
               (if (paramLine(stored) == paramLine(pinBody)) s" (a different ${pin.noun})"
                else "") +
@@ -214,15 +264,6 @@ object Ledger {
           try out.write(pinBody.getBytes("UTF-8")) finally out.close()
       }
     }
-    val parts = epochToken.map(_ => "_graft_epoch").toSeq ++ space.partitionCols
-    val writer = epochToken match {
-      case None => rows.write.mode(SaveMode.Append)
-      case Some(t) =>
-        rows.withColumn("_graft_epoch", lit(t))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-    }
-    (if (parts.isEmpty) writer else writer.partitionBy(parts: _*)).parquet(dir)
   }
 
   /** The space of the ledger at `dir`: the one whose pin file it holds,

@@ -5,7 +5,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StructField, StructType}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** MinHash + LSH banding as a reusable operator (SURVEY §2.3 E38/E51): the
@@ -290,10 +293,13 @@ object LshOps {
     * rowsPerBand)` ([[Ledger.MinhashBands]]).
     *
     * The verdict takes ONE exchange. The batch's band rows and the prior
-    * ledger's buckets (as flagged rows) meet in one `(b, bh)` window,
-    * pinned by a single `localCheckpoint`: each under-cap batch row with
-    * its bucket's ledger flag and its occupancy (rows of buckets over
-    * `maxBucket` drop out). The driver then reads the COLLIDING rows
+    * ledger's buckets (as flagged rows) meet in one `(b, bh)` exchange,
+    * sorted by `(b, bh)` within each partition, and one pass over each
+    * partition ([[bucketPass]], at most one bucket's rows buffered) emits
+    * each under-cap batch row with its bucket's ledger flag, its
+    * occupancy and a row id unique in the frame (rows of buckets over
+    * `maxBucket` and ledger rows drop out); a single `localCheckpoint`
+    * pins that frame. The driver then reads the COLLIDING rows
     * once, those whose bucket is in the ledger or holds two or more batch
     * rows, each bucket's rows in Spark's id order, and settles two id sets
     * from them: the hits (ids with a bucket in the ledger) and the drops
@@ -339,21 +345,24 @@ object LshOps {
     val keyed = prior.fold(rows)(l => rows.unionByName(l.select(
       lit(null).cast(rows.schema(idCol).dataType).as(idCol),
       col("_graft_b").as("b"), col("_graft_bh").as("bh"), lit(true).as("_graft_l"))))
+      .repartition(col("b"), col("bh"))
+      .sortWithinPartitions(col("b"), col("bh"))
     val id = col(idCol)
-    val bucket = Window.partitionBy(col("b"), col("bh"))
     val inLedger = col("_graft_in")
     val colliding = inLedger || col("_graft_bn") >= 2
     val row = col("_graft_row")
-    // Materialized by the colliding-row read below, its first action: the
-    // exchange's map stage and that read are the verdict's two jobs.
-    val pin = keyed
-      .withColumn("_graft_in", max(col("_graft_l")).over(bucket))
-      .withColumn("_graft_bn", count(when(!col("_graft_l"), 1)).over(bucket))
-      .filter(!col("_graft_l") && col("_graft_bn") <= maxBucket)
-      .select(id, col("b"), col("bh"), inLedger, col("_graft_bn"),
-        monotonically_increasing_id().as("_graft_row"))
-      .localCheckpoint(eager = false)
-    // The window left every bucket inside one partition, so sorting each
+    // `toRdd` runs the exchange's map stage; the pin is materialized by
+    // the colliding-row read below, the verdict's second job.
+    val pinSchema = StructType(keyed.schema.fields.take(3) ++ Seq(
+      StructField("_graft_in", BooleanType, nullable = false),
+      StructField("_graft_bn", LongType, nullable = false),
+      StructField("_graft_row", LongType, nullable = false)))
+    val idType = keyed.schema(idCol).dataType
+    val pin = ColumnBridge.dataFrame(spark,
+      keyed.queryExecution.toRdd.mapPartitionsWithIndex(
+        (part, it) => bucketPass(it, idType, part, maxBucket)),
+      pinSchema).localCheckpoint(eager = false)
+    // The exchange left every bucket inside one partition, so sorting each
     // partition by id puts every bucket's rows in Spark's id order.
     val v = settle(pin.filter(colliding)
       .select(id, col("b"), col("bh"), inLedger, row)
@@ -368,7 +377,7 @@ object LshOps {
       batch.filter(unsettled),
       spark.createDataFrame(v.hits.map(Row(_)).asJava,
         StructType(Seq(idField.copy(nullable = true)))),
-      () => Ledger.commit(
+      () => Ledger.stage(
         pin.filter(committed).select(col("b").as("_graft_b"), col("bh").as("_graft_bh")),
         ledgerDir, Ledger.MinhashBands, params, epochToken))
   }
@@ -400,6 +409,44 @@ object LshOps {
     val kept = buckets.flatMap(_.find(r => r.isNullAt(0) ||
       !hits.contains(key(r)) && !drops.contains(key(r))).map(_.getLong(4)))
     Verdict(hits.values.toSeq, drops.values.toSeq, kept)
+  }
+
+  /** [[incrementalNeardup]]'s pass over one partition of `(id, b, bh,
+    * _graft_l)` rows sorted by `(b, bh)`: each batch row of a bucket with
+    * at most `maxBucket` batch rows, as `(id, b, bh, _graft_in, _graft_bn,
+    * _graft_row)` — its bucket's ledger flag, its bucket's batch-row count
+    * and an id unique across partitions (`monotonically_increasing_id`'s
+    * layout). Ledger rows drop out. It holds at most one bucket's
+    * `maxBucket` batch rows. */
+  private def bucketPass(rows: Iterator[InternalRow], idType: DataType, part: Int,
+      maxBucket: Int): Iterator[InternalRow] = {
+    val in = rows.buffered
+    var rowId = part.toLong << 33
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val (bNull, bhNull) = (in.head.isNullAt(1), in.head.isNullAt(2))
+      val (b, bh) = (if (bNull) 0 else in.head.getInt(1), if (bhNull) 0L else in.head.getLong(2))
+      def inBucket(r: InternalRow): Boolean =
+        r.isNullAt(1) == bNull && (bNull || r.getInt(1) == b) &&
+          r.isNullAt(2) == bhNull && (bhNull || r.getLong(2) == bh)
+      val bucket = ArrayBuffer.empty[InternalRow]
+      var ledgered = false
+      var n = 0L
+      while (in.hasNext && inBucket(in.head)) {
+        val r = in.next()
+        if (r.getBoolean(3)) ledgered = true
+        else {
+          n += 1
+          if (n <= maxBucket) bucket += r.copy() else bucket.clear()
+        }
+      }
+      if (n > maxBucket) Iterator.empty
+      else bucket.iterator.map { r =>
+        rowId += 1
+        new GenericInternalRow(Array[Any](
+          if (r.isNullAt(0)) null else r.get(0, idType), if (bNull) null else b,
+          if (bhNull) null else bh, ledgered, n, rowId - 1))
+      }
+    }
   }
 
   /** A dedup-ledger recall audit's result (E155). `recall` is the mean,

@@ -629,7 +629,7 @@ object MaintenanceOps {
     *    collide and then RE-pin at the drifted parameters.
     *  - the epoch partition layout (replay safety): leaves are compacted
     *    in place, never folded together, so a crash-replayed epoch still
-    *    dynamically overwrites exactly its own partition. Fold/expire of
+    *    replaces exactly its own partition. Fold/expire of
     *    epochs known to be beyond checkpoint replay is a separate,
     *    deliberately manual decision.
     *
@@ -656,14 +656,14 @@ object MaintenanceOps {
     * shrinks files within partitions, but a year of daily drains is still
     * 365 directories, and the per-batch ledger read pays the listing.
     * Folding is safe exactly for epochs that can never be REPLAYED (the
-    * epoch replay protocol dynamically overwrites the replayed epoch's own
+    * epoch replay protocol replaces the replayed epoch's own
     * partition — folding a replayable epoch would duplicate it on replay):
     * the caller states the highest provably-committed batch id, and the
     * CLI derives it from the streaming checkpoint's commit log rather
     * than trusting a human.
     *
     * The fold token `base` is outside the `epoch<N>` namespace, so (a) it
-    * can never collide with a live epoch's dynamic overwrite, (b) the
+    * can never collide with a live epoch's publish, (b) the
     * foreign-epoch checkpoint-reset guard ignores it, and (c) collision
     * reads (`_graft_epoch =!= "epoch<batchId>"`) always include it.
     *
@@ -844,7 +844,7 @@ object MaintenanceOps {
     * either the old leaf or the whole new one, recoverable by
     * [[recoverEraseBaks]]. Each rename's boolean result is checked
     * (Hadoop signals failure by return value, not exception). */
-  private def swapIn(
+  private[operators] def swapIn(
       fs: org.apache.hadoop.fs.FileSystem, staged: Path, leaf: Path, kind: String): Unit = {
     def rename(from: Path, to: Path): Unit =
       if (!fs.rename(from, to))
@@ -872,13 +872,14 @@ object MaintenanceOps {
 
   /** Swap-artifact suffixes this sweep recovers: one per [[swapIn]]
     * kind — erase ([[ledgerDelete]], [[foldEpochs]]), compaction
-    * ([[compactParquet]]) and corpus delete ([[targetedDelete]]) —
+    * ([[compactParquet]]), corpus delete ([[targetedDelete]]) and the
+    * epoch publish of [[Ledger.stage]] (which has no tmp of its own) —
     * all share the tmp → bak → swap protocol, so all share the
     * recovery (round 17: a leaf hidden at
     * its `_compact_bak` by a crashed compaction was previously
     * restorable only by hand, and a fold could advance its marker past
     * a compact-hidden epoch exactly like the erase case). */
-  private val SwapBakSuffixes = Seq("_erase_bak", "_compact_bak", "_delete_bak")
+  private val SwapBakSuffixes = Seq("_erase_bak", "_compact_bak", "_delete_bak", "_publish_bak")
   private val SwapTmpSuffixes = Seq("_erase_tmp", "_compact_tmp", "_delete_tmp")
 
   /** Restore/clear leftover `.<name>_erase_bak` / `.<name>_compact_bak`

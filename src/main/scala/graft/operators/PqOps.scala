@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.pipeline.Connectors
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1282,10 +1283,10 @@ object PqOps {
           .partitionBy("_graft_epoch", "cell")
           .parquet(s"$dir/rcodes")
         (Some(rmodel),
-          Some(spark.read.parquet(s"$dir/rcodes").drop("_graft_epoch")))
+          Some(Connectors.readParquet(spark, s"$dir/rcodes").drop("_graft_epoch")))
       } else (None, None)
     PqArtifacts(model, coarseFit.centroids,
-      spark.read.parquet(s"$dir/codes").drop("_graft_epoch"), residual,
+      Connectors.readParquet(spark, s"$dir/codes").drop("_graft_epoch"), residual,
       pinnedPerm, rmodelOpt, rcodesOpt)
   }
 
@@ -1342,7 +1343,7 @@ object PqOps {
     if (perm.length != m * subDim || perm.sorted.toSeq != (0 until perm.length))
       throw malformed(
         s"perm is not a permutation of 0..${m * subDim - 1} (length ${perm.length})")
-    val books = spark.read.parquet(s"$dir/codebooks")
+    val books = Connectors.readParquet(spark, s"$dir/codebooks")
       .withColumnRenamed("sub", "_graft_sub")
       .withColumnRenamed("code", "_graft_code")
       .withColumnRenamed("centroid", "_graft_c")
@@ -1372,7 +1373,7 @@ object PqOps {
           s"but codebooks/ holds m=${stored.getLong(0)}, max code=${stored.getInt(1)}, " +
           s"centroid widths ${stored.getInt(2)}..${stored.getInt(3)} — " +
           "the store drifted from its pin; rebuild it.")
-    val coarse = spark.read.parquet(s"$dir/coarse")
+    val coarse = Connectors.readParquet(spark, s"$dir/coarse")
       .orderBy(col("cl"))
       .collect()
       .map(r => r.getSeq[Double](1).toArray)
@@ -1440,7 +1441,7 @@ object PqOps {
           s"PQ artifact store at $dir pinned refinement [$params] but $d/ is " +
             "missing — a crashed build; rebuild it.")
     }
-    val books = spark.read.parquet(s"$dir/rcodebooks")
+    val books = Connectors.readParquet(spark, s"$dir/rcodebooks")
       .withColumnRenamed("sub", "_graft_sub")
       .withColumnRenamed("code", "_graft_code")
       .withColumnRenamed("centroid", "_graft_c")
@@ -1839,7 +1840,7 @@ object PqOps {
     * streaming drain's checkpoint-reset guard REFUSE a pre-rebalance
     * `epoch<N>` token instead of trusting prose (its rows are already
     * in base, and the replay's coarse assignment against the NEW table
-    * can differ at cell boundaries — the dynamic overwrite would then
+    * can differ at cell boundaries — the epoch's publish would then
     * add, not replace: duplicate membership). MANUAL (non-`epoch<N>`)
     * tokens have no numeric horizon to refuse against — for those the
     * quiesce contract stays: in-flight batches re-run as FRESH tokens
@@ -2020,7 +2021,7 @@ object PqOps {
     val (fs, _) = fsOf(spark, dir)
     MaintenanceOps.excludeFoldLeftovers(fs,
         new org.apache.hadoop.fs.Path(dir, ns),
-        spark.read.parquet(s"$dir/$ns"))
+        Connectors.readParquet(spark, s"$dir/$ns"))
   }
 
   /** E152 (round 15, closing the round-14 declared edge): fold committed
@@ -2101,9 +2102,7 @@ object PqOps {
   final class PendingPqCodes private[operators] (
       /** Lifetime (id, sub, code, dist, cell) as of store + THIS batch. */
       val codes: DataFrame,
-      commit: () => Unit) {
-    def commitLedger(): Unit = commit()
-  }
+      protected val stage: () => () => Unit) extends Ledger.Commit
 
   /** E143: INCREMENTAL PQ encode — today's crawl encoded against the
     * PINNED codebooks (the E101 fitted-once discipline: re-fitting per
@@ -2111,7 +2110,7 @@ object PqOps {
     * rule's SEVENTH space (fingerprints, band buckets, SRP buckets,
     * cluster ids, span counts, sketch counters — now PQ codes). The
     * batch's codes land in their own `_graft_epoch=<token>` (× cell)
-    * partitions via dynamic overwrite: at-least-once replay of a crashed
+    * partitions by a staged publish: at-least-once replay of a crashed
     * batch overwrites its own partitions with identical deterministic
     * codes instead of duplicating them (the E109 protocol). The lifetime
     * read EXCLUDES the batch's own epoch before unioning the fresh
@@ -2188,9 +2187,10 @@ object PqOps {
     new PendingPqCodes(
       prior.unionByName(batchCodes.select(prior.columns.map(col).toIndexedSeq: _*)),
       () => {
-        Ledger.commit(batchCodes, s"$dir/codes", Ledger.PqCodes, "", Some(epochToken))
-        batchRcodes.foreach(Ledger.commit(
+        val codes = Ledger.stage(batchCodes, s"$dir/codes", Ledger.PqCodes, "", Some(epochToken))
+        val rcodes = batchRcodes.map(Ledger.stage(
           _, s"$dir/rcodes", Ledger.PqCodes, "", Some(epochToken)))
+        () => { codes(); rcodes.foreach(_()) }
       })
   }
 }

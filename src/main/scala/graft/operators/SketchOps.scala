@@ -210,9 +210,7 @@ object SketchOps {
         * tie-break; `est ≤ true ≤ est + err_max` for listed values, and
         * any value whose lifetime count exceeds err_max is present. */
       val top: DataFrame,
-      commit: () => Unit) {
-    def commitLedger(): Unit = commit()
-  }
+      protected val stage: () => () => Unit) extends Ledger.Commit
 
   /** E138: INCREMENTAL heavy hitters — corpus-lifetime frequent items
     * without ever re-reading the corpus, the q77/q104/q108/q119/q128
@@ -273,6 +271,6 @@ object SketchOps {
       .localCheckpoint(true)
     new PendingHeavyHitters(
       top,
-      () => Ledger.commit(batchRows, ledgerDir, Ledger.HeavyHitters, params, epochToken))
+      () => Ledger.stage(batchRows, ledgerDir, Ledger.HeavyHitters, params, epochToken))
   }
 }

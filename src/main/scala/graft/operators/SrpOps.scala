@@ -312,7 +312,7 @@ object SrpOps {
     new Ledger.Pending(
       survivors,
       hits,
-      () => Ledger.commit(survivorRows, ledgerDir, Ledger.SrpBands, params, epochToken))
+      () => Ledger.stage(survivorRows, ledgerDir, Ledger.SrpBands, params, epochToken))
   }
 
   /** E155 (round 17): RECALL AUDIT for the SRP band-ledger dedup path —

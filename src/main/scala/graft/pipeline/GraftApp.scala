@@ -334,7 +334,7 @@ object GraftApp {
 
     case c: StreamPq =>
       // Round 14: each epoch encodes against the store's pinned model and
-      // dynamic-overwrites its own codes partitions — the store is the
+      // replaces its own codes partitions — the store is the
       // product, so no sink or fingerprint ledger is involved.
       drain(spark, c.table, c.sourceDir, c.checkpoint, out, log)(
         StreamingOps.foreachBatchLedgerPqEncode(_, c.vecCol, c.idCol, c.store))

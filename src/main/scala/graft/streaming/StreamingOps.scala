@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.pipeline.{IdempotentSink, Sink, StateStore}
+import java.util.concurrent.{CompletionException, Executors}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.Row
 
@@ -102,7 +104,7 @@ object StreamingOps {
     ledgerDrain(writer, ledgerDir, Some((sink, table))) { (batch, token) =>
       val p = graft.operators.DedupOps.incrementalDedup(
         batch.sparkSession, batch, textCol, idCol, ledgerDir, Some(token))
-      (p.survivors, p.commitLedger _)
+      (p.survivors, p.stageLedger _)
     }
 
   /** Streaming duplicate-SPAN flagging with cross-run frequencies — the
@@ -128,7 +130,7 @@ object StreamingOps {
     ledgerDrain(writer, ledgerDir, Some((sink, table))) { (batch, token) =>
       val p = graft.operators.DedupOps.incrementalSpans(
         batch.sparkSession, batch, textCol, idCol, ledgerDir, spanTokens, minDocs, Some(token))
-      (p.flags, p.commitLedger _)
+      (p.flags, p.stageLedger _)
     }
 
   /** Streaming corpus ingest with cross-run NEAR-dup (round 6) — the
@@ -154,7 +156,7 @@ object StreamingOps {
       val p = graft.operators.LshOps.incrementalNeardup(
         batch.sparkSession, batch, textCol, idCol, ledgerDir, shingleN = shingleN,
         epochToken = Some(token))
-      (p.survivors, p.commitLedger _)
+      (p.survivors, p.stageLedger _)
     }
 
   /** Streaming EMBEDDING ingest with cross-run near-dup (round 7) — the
@@ -182,7 +184,7 @@ object StreamingOps {
       val p = graft.operators.SrpOps.incrementalNeardup(
         batch.sparkSession, batch, vecCol, idCol, ledgerDir,
         nBands = nBands, bitsPerBand = bitsPerBand, minCos = minCos, epochToken = Some(token))
-      (p.survivors, p.commitLedger _)
+      (p.survivors, p.stageLedger _)
     }
 
   /** Streaming SEMANTIC ingest with cross-run SemDeDup (round 9) — the
@@ -214,7 +216,7 @@ object StreamingOps {
       val p = graft.operators.KmeansOps.incrementalSemantic(
         batch.sparkSession, batch, vecCol, idCol, ledgerDir, k, iters, minCos,
         maxClusterForPairs, Some(token))
-      (p.survivors, p.commitLedger _)
+      (p.survivors, p.stageLedger _)
     }
 
   /** Streaming PQ INGEST (round 14) — the code store's drain, putting
@@ -224,12 +226,12 @@ object StreamingOps {
     * residualized first when the store's construction pin says
     * `residual=true` (the formulation routing is
     * [[graft.operators.PqOps.incrementalPqEncode]]'s) — and committed
-    * into its own `_graft_epoch=epoch<batchId>` × cell partitions via
-    * dynamic overwrite. Unlike the dedup drains there is no survivor
+    * into its own `_graft_epoch=epoch<batchId>` × cell partitions by a
+    * staged publish. Unlike the dedup drains there is no survivor
     * sink: the artifact store IS the product, and the deterministic
-    * dynamic overwrite IS the exactly-once step (an at-least-once
-    * replay of a crashed epoch rewrites bit-identical codes over its
-    * own partitions, never duplicates). Same foreign-epoch
+    * publish IS the exactly-once step (an at-least-once replay of a
+    * crashed epoch replaces its own partition with bit-identical codes,
+    * never duplicates). Same foreign-epoch
     * checkpoint-reset guard as the other drains, pointed at the codes
     * directory. */
   def foreachBatchLedgerPqEncode(
@@ -240,7 +242,7 @@ object StreamingOps {
     ledgerDrain(writer, s"$storeDir/codes", None) { (batch, token) =>
       val p = graft.operators.PqOps.incrementalPqEncode(
         batch.sparkSession, batch, vecCol, idCol, storeDir, token)
-      (p.codes, p.commitLedger _)
+      (p.codes, p.stageLedger _)
     }
 
   /** E95's streaming side — continuous training-data delivery: every
@@ -270,21 +272,56 @@ object StreamingOps {
 
   /** The one body of the `foreachBatchLedger*` drains: checkpoint-reset
     * guard, epoch token from the batch id, `prepare` (the space's epoch
-    * ingest, returning its output and its commit), the output through the
-    * epoch-keyed idempotent sink when there is one, then the commit —
-    * strictly after the write ([[graft.operators.Ledger]]). */
+    * ingest, returning its output and the stage of its commit), then
+    * [[writeThenPublish]]. */
   private def ledgerDrain(
       writer: DataStreamWriter[Row],
       ledgerDir: String,
       out: Option[(IdempotentSink, String)])(
-      prepare: (DataFrame, String) => (DataFrame, () => Unit)): DataStreamWriter[Row] =
+      prepare: (DataFrame, String) => (DataFrame, () => () => Unit)): DataStreamWriter[Row] =
     writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
       assertNoForeignEpochs(batch, ledgerDir, batchId)
       val token = s"epoch$batchId"
-      val (rows, commit) = prepare(batch, token)
-      out.foreach { case (sink, table) => sink.writeBatch(rows, table, token) }
-      commit()
+      val (rows, stage) = prepare(batch, token)
+      writeThenPublish(rows, out, token, stage)
     }
+
+  /** Writes `rows` through the sink of `out` as batch `token` while a
+    * second driver thread runs `stage`, then runs the publish `stage`
+    * returned: the epoch's two write jobs overlap, and its ledger
+    * partition still appears only after the sink committed the epoch
+    * ([[graft.operators.Ledger]]'s write-then-commit). The stage thread
+    * carries this thread's session and local properties, so stopping the
+    * query cancels its job too. When the write fails the stage is awaited,
+    * nothing is published and the write's failure is thrown; when the
+    * stage fails, its failure is thrown after the write. No job outlives
+    * the call. Without a sink (the ledger is the product) it stages, then
+    * publishes. */
+  private[graft] def writeThenPublish(
+      rows: DataFrame,
+      out: Option[(IdempotentSink, String)],
+      token: String,
+      stage: () => () => Unit): Unit = out match {
+    case None => stage()()
+    case Some((sink, table)) =>
+      val exec = Executors.newSingleThreadExecutor { r =>
+        val t = new Thread(r, "graft-ledger-stage")
+        t.setDaemon(true)
+        t
+      }
+      try {
+        val staged = ColumnBridge.onThread(rows.sparkSession, exec)(stage())
+        // `join` waits even when this thread is interrupted.
+        def awaitStage(): () => Unit =
+          try staged.join() catch { case e: CompletionException => throw e.getCause }
+        try sink.writeBatch(rows, table, token)
+        catch { case e: Throwable =>
+          try awaitStage() catch { case s: Throwable => e.addSuppressed(s) }
+          throw e
+        }
+        awaitStage()()
+      } finally exec.shutdown()
+  }
 
   /** Checkpoint-reset guard for the epoch-keyed ledger ingests: epoch
     * tokens derive from the streaming batchId, and epoch N+1 only starts
@@ -292,7 +329,7 @@ object StreamingOps {
     * the current batch is impossible in a healthy run and is exactly the
     * signature of "checkpoint deleted/relocated while the ledger was
     * kept". Left undetected, the restarted query's batch 0 would
-    * dynamic-partition-OVERWRITE the old epoch0 corpus buckets and
+    * REPLACE the old epoch0 corpus buckets and
     * near-dups of the earliest corpus would silently re-enter. Refuse
     * loudly instead; an ordinary crash-replay (ledger holds epochs ≤ the
     * replayed batch) passes untouched. */

@@ -67,6 +67,15 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
 
+  /** Runs `body` on a thread of `exec` under the calling thread's active
+    * session and local properties (its job group and SQL execution ids):
+    * `SQLExecution.withThreadLocalCaptured`, which is `private[sql]`. */
+  def onThread[T](spark: org.apache.spark.sql.SparkSession,
+      exec: java.util.concurrent.ExecutorService)(
+      body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], exec)(body)
+
   /** Register a function builder into an EXISTING session's registry
     * (`sessionState` is `private[sql]`; the config-driven
     * `spark.sql.extensions` path cannot retrofit a live session). */

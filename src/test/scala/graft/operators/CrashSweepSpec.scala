@@ -34,32 +34,62 @@ class CrashSweepSpec extends AnyFunSuite {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   }
 
-  /** For N = 1, 2, … : fresh fixture, inject a crash at mutation N of
-    * `op`, run `recover`, assert `invariant`; stop once an armed run
-    * completes with budget to spare (the sequence has < N mutations).
-    * Returns how many boundaries were swept. */
-  private def sweep(tag: String, cap: Int)(fixture: String => Unit)(
+  /** A lane of every mutation: for an op whose driver mutations are
+    * sequential, the Nth mutation is the same boundary in every run. */
+  private val everything: (String, String) => Boolean = (_, _) => true
+
+  /** The lane of the mutations under `dir + suffix`. */
+  private def under(suffix: String)(dir: String, path: String): Boolean = {
+    val root = new Path(dir + suffix).toUri.getPath
+    path == root || path.startsWith(root + "/")
+  }
+
+  /** First a run that records `op`'s driver mutations on a fresh fixture
+    * without a crash; then, for each lane (a predicate on the ledger
+    * dir and the mutated path; every recorded mutation must be in exactly
+    * one) and each of its N recorded mutations: fresh fixture, inject a
+    * crash at that lane's mutation N, which must fire, run `recover`,
+    * assert `invariant`. Every run, the recording one too, is recovered
+    * and checked. Returns how many boundaries were swept — the recorded
+    * mutations, each crashed once. */
+  private def sweep(tag: String, cap: Int, lanes: Seq[(String, String) => Boolean] = Seq(everything))(
+      fixture: String => Unit)(
       op: String => Unit)(recover: String => Unit)(
       invariant: (String, Int, Boolean) => Unit): Int = {
-    var n = 1
-    var completed = false
-    while (!completed && n <= cap) {
+    def fresh(): String = {
       val root = Files.createTempDirectory(s"crash_sweep_$tag")
       val dir = s"crash://$root/ledger"
       fsFor(dir) // registers the scheme before any crash:// I/O
       fixture(dir)
-      CrashFs.arm(n)
-      val crashed =
-        try { op(dir); false }
-        catch { case _: Throwable => true }
-      val left = CrashFs.disarm()
-      if (!crashed && left > 0) completed = true
-      recover(dir)
-      invariant(dir, n, crashed)
-      n += 1
+      dir
     }
-    assert(completed, s"[$tag] swept $cap boundaries without the op completing")
-    n - 1
+    val clean = fresh()
+    CrashFs.record()
+    try op(clean) finally CrashFs.disarm()
+    val recorded = CrashFs.mutations
+    recover(clean)
+    invariant(clean, 0, false)
+    val perLane = lanes.map(lane => recorded.count(m => lane(clean, m.path)))
+    recorded.foreach { m =>
+      assert(lanes.count(_(clean, m.path)) == 1,
+        s"[$tag] not in exactly one lane: $m\n${recorded.mkString("\n")}")
+    }
+    for ((lane, count) <- lanes.zip(perLane)) {
+      assert(count <= cap, s"[$tag] a lane holds $count boundaries, over the cap of $cap")
+      for (n <- 1 to count) {
+        val dir = fresh()
+        CrashFs.arm(n, lane(dir, _))
+        val threw =
+          try { op(dir); false }
+          catch { case _: Throwable => true }
+        val fired = CrashFs.disarm() <= 0
+        assert(fired, s"[$tag] crash point $n of a lane with $count recorded boundaries " +
+          s"never came: the op's mutations vary from run to run\n${recorded.mkString("\n")}")
+        recover(dir)
+        invariant(dir, n, threw || fired)
+      }
+    }
+    perLane.sum
   }
 
   private def keySet(dir: String): Set[String] =
@@ -337,23 +367,33 @@ class CrashSweepSpec extends AnyFunSuite {
   }
 
   // The ingest side, one sweep per ledger space: the fixture commits
-  // epoch0; the op prepares epoch1, writes its output through the
-  // epoch-keyed idempotent sink, then commits; recovery replays epoch1
-  // with the same token. Every boundary must land the no-crash ledger
-  // (rows as a set, or per-key sums for a count space) and the no-crash
-  // output in the sink.
+  // epoch0; the op prepares epoch1 and runs the drain body
+  // (`StreamingOps.writeThenPublish`): its output through the epoch-keyed
+  // idempotent sink while a second thread stages the ledger rows, then the
+  // publish; the PQ store, whose drain has no sink, reads its lifetime
+  // codes, then stages and publishes. The sink's directory and the
+  // ledger's are two lanes, each written by one thread at a time, so every
+  // boundary of each is crashed once whatever the interleaving. Recovery
+  // replays epoch1 with the same token. Every boundary must land the
+  // no-crash ledger (rows as a set, or per-key sums for a count space) and
+  // the no-crash output.
   for (space <- Ledger.spaces) {
     test(s"${space.name} epoch ingest converges from every crash boundary") {
       assert(LedgerSpaces.ingests.keySet == Ledger.spaces.toSet)
       val ops = LedgerSpaces.ingests(space)
+      val drainsToSink = space != Ledger.PqCodes
+      // The output each dir's last epoch1 read, for the drain with no sink.
+      val read = scala.collection.mutable.Map.empty[String, Set[List[Any]]]
       def epoch1(dir: String): Unit = {
         val p = ops.prepare(spark, dir, 1, Some("epoch1"))
-        graft.pipeline.Connectors.IdempotentParquetSink(s"$dir-sink")
-          .writeBatch(p.output, "out", "epoch1")
-        p.commit()
+        val sink = graft.pipeline.Connectors.IdempotentParquetSink(s"$dir-sink")
+        if (!drainsToSink) read(dir) = LedgerSpaces.rowSet(p.output)
+        graft.streaming.StreamingOps.writeThenPublish(p.output,
+          if (drainsToSink) Some((sink, "out")) else None, "epoch1", p.stage)
       }
-      def sinkRows(dir: String) = LedgerSpaces.rowSet(
-        spark.read.parquet(s"$dir-sink/out").drop("_graft_batch"))
+      def outRows(dir: String) =
+        if (!drainsToSink) read(dir)
+        else LedgerSpaces.rowSet(spark.read.parquet(s"$dir-sink/out").drop("_graft_batch"))
       // Epoch0 committed once on plain file://, copied per crash point.
       val tpl = Files.createTempDirectory("crash_sweep_ingest_tpl")
         .resolve("ledger").toString
@@ -365,16 +405,17 @@ class CrashSweepSpec extends AnyFunSuite {
       ops.prepare(spark, want, 0, Some("epoch0")).commit()
       epoch1(want)
       val wantLedger = LedgerSpaces.ledgerView(spark, space, ops.ledgerDir(want))
-      val wantOut = sinkRows(want)
+      val wantOut = outRows(want)
+      assert(wantOut.nonEmpty)
       val conf = spark.sparkContext.hadoopConfiguration
       val tplPath = new Path(tpl)
-      val boundaries = sweep("ingest", cap = 80) { dir =>
+      val boundaries = sweep("ingest", cap = 80, Seq(under(""), under("-sink"))) { dir =>
         assert(org.apache.hadoop.fs.FileUtil.copy(tplPath.getFileSystem(conf), tplPath,
           fsFor(dir), new Path(dir), false, conf))
       }(epoch1)(epoch1) { (dir, n, crashed) =>
         assert(LedgerSpaces.ledgerView(spark, space, ops.ledgerDir(dir)) == wantLedger,
           s"crash point $n (crashed=$crashed): ledger differs from the no-crash run")
-        assert(sinkRows(dir) == wantOut,
+        assert(outRows(dir) == wantOut,
           s"crash point $n (crashed=$crashed): output differs from the no-crash run")
       }
       info(s"${space.name} ingest: $boundaries crash boundaries, all convergent")

@@ -90,12 +90,14 @@ class LedgerProtocolSpec extends AnyFunSuite {
       val want = ops.prepare(spark, clean, 0, Some("epoch0"))
       val wantOut = LedgerSpaces.rowSet(want.output)
       want.commit()
-      // What a crash inside the first commit leaves behind: the dynamic
-      // overwrite's staging dir and the file committer's `_temporary`.
+      // What a crash inside the first commit leaves behind: the epoch's
+      // staged rows, Spark's dynamic-overwrite staging dir and the file
+      // committer's `_temporary`.
       val root = tmp("debris")
       ops.setup(spark, root)
       val fs = fsOf(root)
-      Seq(".spark-staging-0f3c/_graft_epoch=epoch0/part-00000-x.snappy.parquet",
+      Seq(s"${Ledger.StagePrefix}epoch0/part-00000-z.snappy.parquet",
+          ".spark-staging-0f3c/_graft_epoch=epoch0/part-00000-x.snappy.parquet",
           "_temporary/0/_temporary/attempt_0/part-00000-y.snappy.parquet").foreach { f =>
         val out = fs.create(new Path(ops.ledgerDir(root), f), true)
         try out.write("torn".getBytes("UTF-8")) finally out.close()

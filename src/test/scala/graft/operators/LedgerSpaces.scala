@@ -10,8 +10,11 @@ import org.apache.spark.sql.functions.{col, sum}
   * key set equals that list — a new space cannot skip them. */
 object LedgerSpaces {
 
-  /** A prepared batch: the output the caller writes, then the commit. */
-  final case class Prepared(output: DataFrame, commit: () => Unit)
+  /** A prepared batch: the output the caller writes, and the stage of its
+    * ledger commit, which returns the publish. */
+  final case class Prepared(output: DataFrame, stage: () => () => Unit) {
+    def commit(): Unit = stage()()
+  }
 
   trait Ingest {
     /** Lay down what the space needs before its first ingest (the PQ
@@ -55,7 +58,7 @@ object LedgerSpaces {
       .toDF("vec_id", "embedding")
   }
 
-  private def pending(p: Ledger.Pending) = Prepared(p.survivors, () => p.commitLedger())
+  private def pending(p: Ledger.Pending) = Prepared(p.survivors, p.stageLedger _)
 
   // The PQ store's codebooks are fitted once; each setup copies them.
   private var pqTemplate: Option[String] = None
@@ -82,7 +85,7 @@ object LedgerSpaces {
           token: Option[String], variant: Int): Prepared = {
         val p = DedupOps.incrementalDedup(spark, texts(spark, n), "text", "doc_id",
           root, epochToken = token)
-        Prepared(p.survivors, () => p.commitLedger())
+        Prepared(p.survivors, p.stageLedger _)
       }
     },
     Ledger.Spans -> new Ingest {
@@ -90,7 +93,7 @@ object LedgerSpaces {
           token: Option[String], variant: Int): Prepared = {
         val p = DedupOps.incrementalSpans(spark, texts(spark, n), "text", "doc_id",
           root, spanTokens = 3 + variant, epochToken = token)
-        Prepared(p.flags, () => p.commitLedger())
+        Prepared(p.flags, p.stageLedger _)
       }
     },
     Ledger.MinhashBands -> new Ingest {
@@ -119,7 +122,7 @@ object LedgerSpaces {
           else Seq.fill(2)("a") ++ Seq.fill(4)("c")
         val p = SketchOps.incrementalHeavyHitters(spark, values.toDF("v"), "v", root,
           capacity = 16 >> variant, k = 3, epochToken = token)
-        Prepared(p.top, () => p.commitLedger())
+        Prepared(p.top, p.stageLedger _)
       }
     },
     Ledger.PqCodes -> new Ingest {
@@ -136,7 +139,7 @@ object LedgerSpaces {
         val p = PqOps.incrementalPqEncode(spark,
           pqVectors(spark, if (n == 0) Seq(4L, 5L) else Seq(6L, 7L)), "v", "id", root,
           token.getOrElse(s"epoch$n"))
-        Prepared(p.codes, () => p.commitLedger())
+        Prepared(p.codes, p.stageLedger _)
       }
     })
 

@@ -48,7 +48,7 @@ class LshIncrParitySpec extends AnyFunSuite {
       .localCheckpoint(true)
     banded.unpersist()
     new Ledger.Pending(survivors, hits,
-      () => Ledger.commit(survivorBuckets, dir, Ledger.MinhashBands, params, token))
+      () => Ledger.stage(survivorBuckets, dir, Ledger.MinhashBands, params, token))
   }
 
   private def tmp() = Files.createTempDirectory("lsh_parity").resolve("bands").toString
@@ -144,6 +144,64 @@ class LshIncrParitySpec extends AnyFunSuite {
       p)
     // alpha's buckets hold 3 batch rows: over the cap, so no hit and no drop.
     assert(hits.isEmpty && kept == Set(10L, 11L, 12L, 20L, 30L))
+  }
+
+  test("a bucket at the cap settles, one over the cap with a ledger row does not") {
+    val p = Params(maxBucket = 2)
+    val (kept, hits) = parity(ledgerOf(docs((1L, alpha), (2L, lorem))),
+      docs((10L, alpha), (11L, alpha), (12L, alpha), (20L, lorem), (21L, lorem),
+        (30L, fresh), (31L, fresh)),
+      p)
+    // alpha's buckets hold 3 batch rows beside their ledger row: over the
+    // cap, so no hit. lorem's and fresh's hold exactly 2: both lorem rows
+    // are hits, and 30 drops 31.
+    assert(hits == Set(20L, 21L) && kept == Set(10L, 11L, 12L, 30L))
+  }
+
+  test("a bucket holding ledger rows of two epochs and several batch rows, null ids among them") {
+    val ledgered = bandSets(Seq(alpha)).head.toSeq
+    val twice: (String, Params) => Unit = (dir, p) => {
+      val params = s"k=${p.k},shingleN=${p.shingleN},nBands=${p.nBands},rowsPerBand=${p.rowsPerBand}"
+      for (t <- Seq("epoch0", "epoch1"))
+        Ledger.stage(ledgered.toDF("_graft_b", "_graft_bh"), dir, Ledger.MinhashBands, params,
+          Some(t))()
+    }
+    val batch = Seq[(Option[Long], String)]((None, alpha), (Some(5L), alpha), (Some(3L), alpha),
+      (None, alpha), (Some(8L), lorem), (None, lorem), (Some(9L), lorem), (Some(4L), fresh))
+      .toDF("doc_id", "text")
+    val (kept, hits) = parity(twice, batch, token = Some("epoch2"))
+    // Every alpha row is a hit; the null ones stay in the batch. In
+    // lorem's buckets the null id neither drops nor is dropped: 8 drops 9.
+    assert(hits == Set(3L, 5L, null) && kept == Set(null, 8L, 4L))
+  }
+
+  test("a verdict spread over several partitions") {
+    // Without coalescing, the verdict's exchange keeps one partition per
+    // shuffle partition, so rows of different partitions share no row id.
+    val rnd = new scala.util.Random(11)
+    val words = IndexedSeq.fill(2000)(s"w${rnd.nextInt(3000)}")
+    val texts = (0 until 160).map(j => words.slice(12 * j, 12 * j + 12).mkString(" "))
+    val corpus = (0 until 40).map(j => (j.toLong, texts(j))).toDF("doc_id", "text")
+    // Every 4th batch doc repeats a ledgered text, every 5th the doc before it.
+    val batch = (0 until 120).map { j =>
+      (1000L + j, if (j % 4 == 0) texts(j % 40) else if (j % 5 == 4) texts(40 + j - 1)
+        else texts(40 + j))
+    }.toDF("doc_id", "text")
+    val conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try {
+      var newDir = ""
+      val (kept, hits) = parity((dir, p) => { newDir = dir; ledgerOf(corpus, Some("epoch0"))(dir, p) },
+        batch, token = Some("epoch1"))
+      assert(hits == (0 until 120 by 4).map(1000L + _).toSet[Any])
+      assert(kept.size == 120 - 30 - (0 until 120).count(j => j % 5 == 4 && j % 4 != 0 &&
+        (j - 1) % 4 != 0))
+      val fs = new Path(newDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val leaf = fs.listStatus(new Path(newDir, "_graft_epoch=epoch1"))
+        .count(_.getPath.getName.startsWith("part-"))
+      assert(leaf >= 2, s"the epoch's ledger rows came from $leaf partition(s)")
+    } finally spark.conf.set(conf, was)
   }
 
   test("sub-shingleN docs have no bands and survive") {

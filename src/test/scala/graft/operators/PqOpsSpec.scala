@@ -640,6 +640,30 @@ class PqOpsSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("reading the store back infers no schema: its jobs are the pin checks' reads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_read_jobs")
+      .resolve("pq").toString
+    PqOps.writePqArtifacts(spark, vecs, "v", "id", dir,
+      m = 2, kCodes = 2, iters = 1, coarseK = 2, coarseIters = 1,
+      refineM = 4, refineK = 2)
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(s => names.add(s.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (arts, jobs) =
+      try graft.pipeline.JobCount(spark)(PqOps.readPqArtifacts(spark, dir))
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(arts.rcodes.isDefined)
+    val inference = names.toArray.map(_.toString).filter(_.startsWith("parquet at"))
+    assert(inference.isEmpty, s"schema-inference jobs: ${inference.mkString(", ")}")
+    // At most, per level, the codebook drift check's aggregate (three
+    // adaptive stages) and the codebooks' driver copy; the coarse
+    // centroids' sorted read once (three).
+    assert(jobs.getOrElse(graft.pipeline.JobCount.Caller, 0) <= 11, jobs)
+  }
+
   test("refinement store: pin round-trip, two-level decode re-rank, refusals") {
     // E148: the store carries a second code level (codebooks fitted on
     // the stage-1 errors). refineFromCodes re-scores a shortlist against
